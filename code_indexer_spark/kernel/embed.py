@@ -95,7 +95,7 @@ def embed_text(text: str) -> np.ndarray:
         idx[j] = b
         signs[j] = s
     vec = (mat[idx] * signs[:, None]).sum(axis=0, dtype=np.float32)
-    norm = np.float32(np.sqrt(np.float32(np.dot(vec, vec))))
+    norm = np.float32(np.sqrt(np.add.reduce(vec * vec, dtype=np.float32)))
     if norm > 0:
         vec = vec / norm
     return vec.astype(np.float32)
@@ -114,6 +114,11 @@ def embed_text(text: str) -> np.ndarray:
 # week-later index mismatch.
 _GOLDEN_PROBE = "the quick brown fox jumps over the lazy dog 42"
 _GOLDEN_MD5 = "dabdeaa3ba5945571b7b06ef8e7550cc"
+# cosine(probe, _COSINE_PROBE): a pair whose BLAS sdot result differs
+# in the last bit from the fixed-order reduction on AVX-512 kernels, so
+# a cosine that slips back onto BLAS fails here too
+_COSINE_PROBE = "the lazy dog sleeps"
+_GOLDEN_COSINE = 0.39033597707748413
 _golden_checked = False
 _golden_error: Exception | None = None
 
@@ -131,13 +136,16 @@ def assert_embed_golden() -> None:
             raise _golden_error
         return
     _golden_checked = True
-    got = hashlib.md5(embed_text(_GOLDEN_PROBE).tobytes()).hexdigest()
-    if got != _GOLDEN_MD5:
+    probe = embed_text(_GOLDEN_PROBE)
+    got = hashlib.md5(probe.tobytes()).hexdigest()
+    cos = cosine(probe, embed_text(_COSINE_PROBE))
+    if got != _GOLDEN_MD5 or cos != _GOLDEN_COSINE:
         import numpy
 
         _golden_error = RuntimeError(
             f"embed_text determinism drift: golden md5 {_GOLDEN_MD5} "
-            f"!= {got} (numpy {numpy.__version__}) — this process's "
+            f"!= {got} or golden cosine {_GOLDEN_COSINE!r} != {cos!r} "
+            f"(numpy {numpy.__version__}) — this process's "
             "numpy reduction order differs from the pinned contract; "
             "embeddings produced here would not match existing indexes")
         raise _golden_error
@@ -146,6 +154,12 @@ def assert_embed_golden() -> None:
 def cosine(a: np.ndarray, b: np.ndarray) -> float:
     """Cosine for unit vectors = dot product; float32 accumulate.
 
+    The dot product is numpy's pairwise ``add.reduce``, not ``np.dot``:
+    BLAS ``sdot`` picks its kernel (and so its summation order) per CPU,
+    which made link scores differ in the last bit between hosts. No
+    kernel in this package may call BLAS (tests/test_kernel_units.py
+    enforces it).
+
     The astype is a no-op (skipped) when inputs are already float32 —
     the hot-path callers always pass embed_text outputs, and the copy
     was ~40% of link()'s rerank cost."""
@@ -153,7 +167,7 @@ def cosine(a: np.ndarray, b: np.ndarray) -> float:
         a = a.astype(np.float32)
     if b.dtype != np.float32:
         b = b.astype(np.float32)
-    return float(np.float32(np.dot(a, b)))
+    return float(np.add.reduce(a * b, dtype=np.float32))
 
 
 # --- vector-space bucketing (the reference's partition scheme) ------------
