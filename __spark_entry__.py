@@ -1184,13 +1184,11 @@ def kg_hybrid_search(spark, sf_dir):
     The chunks stage is persisted first: both branches scan it, and
     without staging the fused extract+chunk+embed UDF would run twice
     (in production hybrid search reads the materialized chunks table at
-    rest, exactly this shape). cached_chunks persists ONE entry per
-    (session, kg_dir) — a per-call persist() would leak a fresh cache
-    entry on every invocation of this query."""
-    from code_indexer_spark.plans.pipeline import cached_chunks
+    rest, exactly this shape)."""
+    from code_indexer_spark.plans.pipeline import build_chunks
     from code_indexer_spark.plans.search import hybrid_search
 
-    return hybrid_search(cached_chunks(spark, _kg_dir(sf_dir)),
+    return hybrid_search(build_chunks(spark, _kg_dir(sf_dir)).persist(),
                          "partners", k=10)
 
 

@@ -191,13 +191,34 @@ def main() -> None:
                 "scaling_efficiency_median"]
         if "scaling_efficiency" in scaling:
             compact["scaling_best_eff"] = scaling["scaling_efficiency"]
+    print(compact_line(compact))
+
+
+COMPACT_CAP = 500
+# dropped in this order once every query is gone from the line
+_COMPACT_OPTIONAL = ("queries_calibrated", "scaling_best_eff",
+                     "scaling_median_eff")
+
+
+def compact_line(compact: dict, cap: int = COMPACT_CAP) -> str:
+    """json.dumps(compact), shrunk to at most ``cap`` chars: drop the
+    fastest query (and its calibrated twin) first, then the optional
+    keys in _COMPACT_OPTIONAL order. The driver-contract keys
+    ({"metric","value","unit","queries","sf"}) and the totals are always
+    kept, so only an sf path of several hundred chars can still
+    overflow."""
     line = json.dumps(compact)
-    while len(line) > 500 and compact["queries"]:
+    while len(line) > cap and compact["queries"]:
         drop = min(compact["queries"], key=lambda n: compact["queries"][n])
         compact["queries"].pop(drop)
         compact["queries_calibrated"].pop(drop, None)
         line = json.dumps(compact)
-    print(line)
+    for key in _COMPACT_OPTIONAL:
+        if len(line) <= cap:
+            break
+        compact.pop(key, None)
+        line = json.dumps(compact)
+    return line
 
 
 if __name__ == "__main__":

@@ -156,9 +156,9 @@ def cosine(a: np.ndarray, b: np.ndarray) -> float:
 
     The dot product is numpy's pairwise ``add.reduce``, not ``np.dot``:
     BLAS ``sdot`` picks its kernel (and so its summation order) per CPU,
-    which made link scores differ in the last bit between hosts. No
-    kernel in this package may call BLAS (tests/test_kernel_units.py
-    enforces it).
+    so its result, and every link score built on it, can differ in the
+    last bit between hosts. No kernel in this package may call BLAS
+    (tests/test_kernel_determinism.py enforces it).
 
     The astype is a no-op (skipped) when inputs are already float32 —
     the hot-path callers always pass embed_text outputs, and the copy

@@ -28,6 +28,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .triples import triple_id_col
+
+
 def _char_shingles_expr(norm_col, k: int):
     """array of distinct k-char shingles of an already-normalized name
     (set semantics via array_distinct); shorter-than-k names shingle to
@@ -303,8 +306,5 @@ def apply_canonical(triples: DataFrame, mapping: DataFrame) -> DataFrame:
             F.coalesce("obj_canon", "obj").alias("obj"),
             "src_url", "rule_id", "confidence",
         )
-        .withColumn(
-            "triple_id",
-            F.sha2(F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256),
-        )
+        .withColumn("triple_id", triple_id_col())
     )

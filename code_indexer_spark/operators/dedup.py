@@ -21,28 +21,11 @@ which is why both variants exist.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 NUM_HASHES = 16
 BANDS = 8  # rows_per_band = 2
-
-# persisted-shingle registry, same centralization as
-# plans.pipeline.cached_chunks: jaccard_pairs(max_df=...) reads its
-# shingle table from three distinct subtrees, so it must be persisted —
-# but a per-call persist() would leak one storage-memory entry per
-# invocation for the session lifetime. Keyed by (appId, semanticHash of
-# the shingle plan), repeated invocations over the same input reuse ONE
-# cache entry.
-_SHINGLE_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
-# the generic confirm-on-hit plan cache lives in util.cached_plan;
-# kept importable here for its historical private name
-from ..util import cached_plan as _cached_plan  # noqa: E402
-
-
-def _cached_shingles(sh: DataFrame) -> DataFrame:
-    return _cached_plan(sh, _SHINGLE_CACHE)
 
 
 def exact_dupes(docs: DataFrame, id_col: str = "doc_id",
@@ -124,9 +107,10 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         # subtrees (hot-set agg, per-doc sizes, self-join) — persist it
         # so tokenize+explode+distinct runs once, not once per subtree
         # (the join sides themselves dedupe via ReuseExchange, the
-        # aggregates do not); cached centrally so repeat invocations
-        # don't leak storage-memory entries
-        sh = _cached_shingles(sh)
+        # aggregates do not). A repeat call over the same input finds
+        # the same cache entry: Spark's CacheManager matches plans by
+        # sameResult. MEMORY_AND_DISK spills rather than recomputes.
+        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
         hot = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
                .filter(F.col("_df") > max_df).select("shingle"))
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
@@ -267,13 +251,6 @@ def simhash_bits_long(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-# persisted simhash-bits registry (same discipline as _SHINGLE_CACHE):
-# simhash_pairs reads its bits table from three subtrees (band keys +
-# both rescore sides), so an uncached plan would tokenize the corpus
-# three times.
-_BITS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 64,
                   bands: int = 4, max_hamming: int = 3) -> DataFrame:
@@ -294,12 +271,13 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     (id, bit_pos); band keys are a second groupBy; candidates come
     from a bucket self-join on (band, key) — never an all-pairs join —
     and the rescore joins the slim (id, bit_pos, bit) table twice,
-    ``bits`` rows per candidate side. The bits table is
-    registry-persisted (three consumers). The long (id, bit_pos, bit)
-    form instead of a packed 64-bit word is the oracle-portability
-    trade (parity-of-md5-hex-char is computable on both engines);
-    a production variant would pack bits into a long and block on
-    shifted words, same plan shape.
+    ``bits`` rows per candidate side. The bits table is persisted: it
+    has three consumers (band keys and both rescore sides), and
+    uncached they would tokenize the corpus three times. The long
+    (id, bit_pos, bit) form instead of a packed 64-bit word is the
+    oracle-portability trade (parity-of-md5-hex-char is computable on
+    both engines); a production variant would pack bits into a long
+    and block on shifted words, same plan shape.
 
     Band width is the load-bearing scale knob: uniform random
     signatures put ~n/2^r docs in each of a band's 2^r buckets, so
@@ -319,8 +297,8 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
             f"differing in {max_hamming} bits can miss every one of "
             f"{bands} bands otherwise)")
     r = bits // bands
-    b = _cached_plan(
-        simhash_bits_long(docs, id_col, text_col, bits), _BITS_CACHE)
+    b = simhash_bits_long(docs, id_col, text_col, bits).persist(
+        StorageLevel.MEMORY_AND_DISK)
     # per-(id, band) integer key: order-free weighted bit sum (2^i is
     # exact in doubles for i < r <= 32)
     keyed = (

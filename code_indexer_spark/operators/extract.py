@@ -72,6 +72,47 @@ def extract_stage(pages: DataFrame, text_col: str = "text_extracted") -> DataFra
     return pages.mapInPandas(run, schema=out_schema)
 
 
+def _with_ids(chunks: DataFrame) -> DataFrame:
+    """+ content_hash = sha256(text) and point_id =
+    md5(url_contenthash_chunkindex) (file_chunking_manager.py:376-387)."""
+    return chunks.withColumn(
+        "content_hash", F.sha2(F.col("text"), 256)
+    ).withColumn(
+        "point_id",
+        F.md5(F.concat_ws("_", F.col("url"), F.col("content_hash"),
+                          F.col("chunk_index"))),
+    )
+
+
+def _chunk_with(chunker, extracted: DataFrame, text_col: str,
+                chunk_size: int) -> DataFrame:
+    """The body of chunk_stage/smart_chunk_stage; ``chunker`` is the
+    kernel.chunker function that cuts one text into windows."""
+
+    @F.pandas_udf(ArrayType(CHUNK_STRUCT))
+    def chunk_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                [
+                    (
+                        c["text"], c["chunk_index"], c["total_chunks"],
+                        c["size"], c["line_start"], c["line_end"],
+                    )
+                    for c in chunker(t or "", chunk_size)
+                ]
+                for t in texts
+            ]
+        )
+
+    return _with_ids(
+        extracted.select(
+            "url", "warc_ts", "lang",
+            F.explode(chunk_udf(F.col(text_col))).alias("c"),
+        )
+        .select("url", "warc_ts", "lang", "c.*")
+    )
+
+
 def chunk_stage(
     extracted: DataFrame,
     text_col: str = "text_extracted",
@@ -82,75 +123,21 @@ def chunk_stage(
     chunks(url, warc_ts, lang, chunk_index, total_chunks, size,
            line_start, line_end, text, content_hash, point_id)
     """
+    from ..kernel.chunker import chunk_text
 
-    @F.pandas_udf(ArrayType(CHUNK_STRUCT))
-    def chunk_udf(texts: pd.Series) -> pd.Series:
-        from ..kernel.chunker import chunk_text
-
-        return pd.Series(
-            [
-                [
-                    (
-                        c["text"], c["chunk_index"], c["total_chunks"],
-                        c["size"], c["line_start"], c["line_end"],
-                    )
-                    for c in chunk_text(t or "", chunk_size)
-                ]
-                for t in texts
-            ]
-        )
-
-    chunks = (
-        extracted.select(
-            "url", "warc_ts", "lang",
-            F.explode(chunk_udf(F.col(text_col))).alias("c"),
-        )
-        .select("url", "warc_ts", "lang", "c.*")
-    )
-    return chunks.withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    ).withColumn(
-        # point id derivation, file_chunking_manager.py:376-380
-        "point_id",
-        F.md5(F.concat_ws("_", F.col("url"), F.col("content_hash"),
-                          F.col("chunk_index"))),
-    )
-
-
-def embed_stage(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """+ embedding array<float> (unit-norm) and the quantized vector
-    bucket used as a partition column (K3 in SURVEY.md §2.5)."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("vbucket", StringType()),
-        ]
-    )
-    names = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.embed import bucket_of, embed_text
-
-        for pdf in batches:
-            vecs = [embed_text(t or "") for t in pdf[text_col]]
-            out = pdf[names].copy()
-            out["embedding"] = [v.tolist() for v in vecs]
-            out["vbucket"] = [bucket_of(v) for v in vecs]
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _chunk_with(chunk_text, extracted, text_col, chunk_size)
 
 
 def build_chunks_fused(pages: DataFrame) -> DataFrame:
     """Fused extract + chunk + embed: html -> embedded chunk rows in ONE
     mapInPandas pass (one Arrow round trip instead of three; html and
-    the full extracted text never re-cross the JVM/Python boundary).
+    the full extracted text never re-cross the JVM/Python boundary —
+    a staged extract -> chunk -> embed chain spent ~10x the kernel cost
+    on Arrow serialization of full page payloads).
 
-    Same semantics as embed_stage(chunk_stage(extract_stage(pages))) —
-    identical kernels; the staged form stays for inspectability, this is
-    the hot production path (the 3-stage chain spent ~10x the kernel
-    cost on Arrow serialization of full page payloads)."""
+    Adds ``embedding`` (unit-norm array<float>) and ``vbucket``, the
+    2-bit-quantized vector bucket used as a partition column (K3 in
+    SURVEY.md §2.5)."""
     out_schema = StructType(
         [
             StructField("url", StringType()),
@@ -190,22 +177,8 @@ def build_chunks_fused(pages: DataFrame) -> DataFrame:
                          "embedding", "vbucket"],
             )
 
-    chunks = pages.select("url", "warc_ts", "lang", "html").mapInPandas(
-        run, schema=StructType(
-            [out_schema["url"], out_schema["warc_ts"], out_schema["lang"],
-             out_schema["text"], out_schema["chunk_index"],
-             out_schema["total_chunks"], out_schema["size"],
-             out_schema["line_start"], out_schema["line_end"],
-             out_schema["embedding"], out_schema["vbucket"]]
-        )
-    )
-    return chunks.withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    ).withColumn(
-        "point_id",
-        F.md5(F.concat_ws("_", F.col("url"), F.col("content_hash"),
-                          F.col("chunk_index"))),
-    )
+    return _with_ids(pages.select("url", "warc_ts", "lang", "html")
+                     .mapInPandas(run, schema=out_schema))
 
 
 def incremental_anti_join(
@@ -231,35 +204,6 @@ def smart_chunk_stage(
     (kernel.chunker.smart_chunk_text; ref indexing/chunker.py:21-126,
     773-814). Kept for parity with the reference's deprecated-but-
     callable path; the fixed-size chunker is the production default."""
+    from ..kernel.chunker import smart_chunk_text
 
-    @F.pandas_udf(ArrayType(CHUNK_STRUCT))
-    def chunk_udf(texts: pd.Series) -> pd.Series:
-        from ..kernel.chunker import smart_chunk_text
-
-        return pd.Series(
-            [
-                [
-                    (
-                        c["text"], c["chunk_index"], c["total_chunks"],
-                        c["size"], c["line_start"], c["line_end"],
-                    )
-                    for c in smart_chunk_text(t or "", chunk_size)
-                ]
-                for t in texts
-            ]
-        )
-
-    chunks = (
-        extracted.select(
-            "url", "warc_ts", "lang",
-            F.explode(chunk_udf(F.col(text_col))).alias("c"),
-        )
-        .select("url", "warc_ts", "lang", "c.*")
-    )
-    return chunks.withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    ).withColumn(
-        "point_id",
-        F.md5(F.concat_ws("_", F.col("url"), F.col("content_hash"),
-                          F.col("chunk_index"))),
-    )
+    return _chunk_with(smart_chunk_text, extracted, text_col, chunk_size)

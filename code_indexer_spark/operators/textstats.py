@@ -9,6 +9,7 @@ semantics chosen to be expressible 1:1 in the DuckDB oracle.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 
 from .dedup import tokens_expr
@@ -380,12 +381,6 @@ def bigram_buckets(docs: DataFrame, id_col: str = "doc_id",
         .select("id", F.substring(F.md5("g"), 1, bucket_hex).alias("b"))
 
 
-# persisted raw-bigram registry (the _SHINGLE_CACHE discipline): the
-# raw side of dsir_logweights is read by three consumers (per-bucket
-# counts, the corpus total, and the final per-doc score join).
-_BIGRAM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def dsir_logweights(raw: DataFrame, target: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
                     bucket_hex: int = 3) -> DataFrame:
@@ -425,10 +420,10 @@ def dsir_logweights(raw: DataFrame, target: DataFrame,
     No window, no all-pairs, nothing driver-side.
     """
     B = 16 ** bucket_hex
-    from .dedup import _cached_plan
-
-    raw_bg = _cached_plan(
-        bigram_buckets(raw, id_col, text_col, bucket_hex), _BIGRAM_CACHE)
+    # the raw side is read by three consumers (per-bucket counts, the
+    # corpus total, and the final per-doc score join)
+    raw_bg = bigram_buckets(raw, id_col, text_col, bucket_hex).persist(
+        StorageLevel.MEMORY_AND_DISK)
     tgt_bg = bigram_buckets(target, id_col, text_col, bucket_hex)
 
     tgt_counts = tgt_bg.groupBy("b").agg(

@@ -74,35 +74,10 @@ def _index_of(bc):
     return _index_of._cache[1]
 
 
-def triples_stage(extracted: DataFrame, alias_bc,
-                  text_col: str = "text_extracted") -> DataFrame:
-    """pages-with-text -> raw triples (pre-canonicalization).
-
-    One Arrow batch in, zero-or-more triple rows out (mapInPandas is the
-    right shape for a row-expanding UDF stage).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.nlp import extract_triples_from_text
-
-        idx = None
-        for pdf in batches:
-            if idx is None:
-                idx = _index_of(alias_bc)
-            rows = []
-            for url, text in zip(pdf["url"], pdf[text_col]):
-                for s, p, o, rid, conf in extract_triples_from_text(text or "", idx):
-                    rows.append((url, s, p, o, rid, conf))
-            yield pd.DataFrame(
-                rows, columns=["src_url", "subj", "pred", "obj", "rule_id",
-                               "confidence"],
-            )
-
-    raw = extracted.select("url", text_col).mapInPandas(run, schema=TRIPLE_SCHEMA)
-    return raw.withColumn(
-        "triple_id",
-        F.sha2(F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256),
-    )
+def triple_id_col():
+    """The content-addressed triple id, sha2(subj|pred|obj|src_url): a
+    re-extracted triple gets the same id, so rewrites are idempotent."""
+    return F.sha2(F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256)
 
 
 def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
@@ -110,9 +85,9 @@ def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
     mapInPandas pass (one Arrow round trip instead of two; the full
     extracted text never crosses the JVM/Python boundary).
 
-    Same semantics as triples_stage(extract_stage(pages)) — both call
-    the identical kernels; the fused form is the hot production path,
-    the staged form keeps intermediate tables inspectable."""
+    One Arrow batch in, zero-or-more raw (pre-canonicalization) triple
+    rows out — mapInPandas is the right shape for a row-expanding UDF
+    stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel.extract import extract_text
@@ -133,18 +108,19 @@ def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
             )
 
     raw = pages.select("url", "html").mapInPandas(run, schema=TRIPLE_SCHEMA)
-    return raw.withColumn(
-        "triple_id",
-        F.sha2(F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256),
-    )
+    return raw.withColumn("triple_id", triple_id_col())
 
 
 def mentions_fused(pages: DataFrame, alias_bc) -> DataFrame:
-    """Fused extract + chunk + mention-detect + link: html -> mention
-    rows in ONE mapInPandas pass (same kernels as
-    mentions_stage(chunk_stage(extract_stage(pages))); one Arrow round
-    trip instead of three — the html/extracted text never re-crosses
-    the JVM/Python boundary)."""
+    """Fused extract + chunk + mention-detect + link: html ->
+    mentions(url, chunk_index, token_pos, alias_norm, entity_id,
+    link_score, entity_id_candidates) in ONE mapInPandas pass (one
+    Arrow round trip instead of three — the html/extracted text never
+    re-crosses the JVM/Python boundary).
+
+    Linking context = the chunk's own embedding (sentence-free
+    variant): score each candidate by prior × (0.5 + 0.5·cos(chunk_vec,
+    name_vec)) — same funnel as triples linking."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel.chunker import chunk_text
@@ -177,43 +153,3 @@ def mentions_fused(pages: DataFrame, alias_bc) -> DataFrame:
             )
 
     return pages.select("url", "html").mapInPandas(run, schema=MENTION_SCHEMA)
-
-
-def mentions_stage(chunks: DataFrame, alias_bc) -> DataFrame:
-    """chunks -> mentions(url, chunk_index, token_pos, alias_norm,
-    entity_id, link_score, entity_id_candidates).
-
-    Linking context = the chunk's own embedding context (sentence-free
-    variant): score each candidate by prior × (0.5 + 0.5·cos(chunk_vec,
-    name_vec)) — same funnel as triples linking.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.embed import embed_text
-
-        idx = None
-        for pdf in batches:
-            if idx is None:
-                idx = _index_of(alias_bc)
-            rows = []
-            for url, ci, text in zip(pdf["url"], pdf["chunk_index"], pdf["text"]):
-                ments = idx.detect_mentions(text or "")
-                if not ments:
-                    continue
-                ctx = embed_text(text or "")
-                for pos, norm, _ in ments:
-                    linked = idx.link(norm, None, ctx)
-                    if linked is None:
-                        continue
-                    eid, score, cands = linked
-                    rows.append((url, int(ci), pos, norm, eid,
-                                 round(score, 6), cands))
-            yield pd.DataFrame(
-                rows, columns=["url", "chunk_index", "token_pos",
-                               "alias_norm", "entity_id", "link_score",
-                               "entity_id_candidates"],
-            )
-
-    return chunks.select("url", "chunk_index", "text").mapInPandas(
-        run, schema=MENTION_SCHEMA
-    )

@@ -32,8 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.canonicalize import apply_canonical, canonical_mapping
-from ..operators.extract import extract_stage
-from ..operators.triples import broadcast_alias_rows, triples_stage
+from ..operators.triples import broadcast_alias_rows, extract_triples_fused
 from .pipeline import read_alias, read_entities, read_pages
 
 WORK_PARTITIONS = 16
@@ -139,7 +138,7 @@ def run_triples_checkpointed(
         obs_in, obs_out = Observation(), Observation()
         slice_pages = pages.filter(F.col("work_pid") == pid).observe(
             obs_in, F.count(F.lit(1)).alias("n"))
-        raw = triples_stage(extract_stage(slice_pages), alias_bc)
+        raw = extract_triples_fused(slice_pages, alias_bc)
         # hash-repartition + sortWithinPartitions, NOT a global sort: a
         # range sort samples its child for partition boundaries, which
         # re-executes the whole extract UDF stage — every slice was

@@ -1,9 +1,10 @@
 """The KG-construction pipeline: pages -> extract -> (chunks, triples)
 -> canonicalize -> nodes/edges.
 
-One declarative DataFrame job per stage; Catalyst fuses the extract +
-triple UDF stages into a single pass over pages (both are narrow
-mapInPandas transforms). The reference's thread-pool lifecycle
+One declarative DataFrame job per stage; each output's Python kernels
+(extract + rules + link, or extract + chunk + embed) run in one fused
+mapInPandas pass over pages, so page html crosses the Arrow boundary
+once per output. The reference's thread-pool lifecycle
 (smart_indexer.py:277-640 -> high_throughput_processor.py:262-802) is
 replaced by Spark stage parallelism — SURVEY.md §3.1 mapping.
 
@@ -23,8 +24,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.canonicalize import apply_canonical, canonical_mapping
-from ..operators.extract import chunk_stage, embed_stage, extract_stage
-from ..operators.triples import broadcast_alias_rows, mentions_stage, triples_stage
+from ..operators.extract import build_chunks_fused
+from ..operators.triples import (
+    broadcast_alias_rows, extract_triples_fused, mentions_fused,
+)
 
 EDGE_SALT_BUCKETS = 16
 
@@ -55,26 +58,15 @@ def read_entities(spark: SparkSession, kg_dir: str) -> DataFrame:
 
 
 def build_chunks(spark: SparkSession, kg_dir: str) -> DataFrame:
-    """pages -> embedded chunks table (the reference's vector points).
-    Uses the fused one-pass UDF stage; build_chunks_staged keeps the
-    3-stage form for intermediate inspection."""
-    from ..operators.extract import build_chunks_fused
-
-    pages = read_pages(spark, kg_dir, for_udf=True)
-    return build_chunks_fused(pages)
-
-
-def build_chunks_staged(spark: SparkSession, kg_dir: str) -> DataFrame:
-    pages = read_pages(spark, kg_dir, for_udf=True)
-    return embed_stage(chunk_stage(extract_stage(pages)))
+    """pages -> embedded chunks table (the reference's vector points),
+    via the fused one-pass UDF stage."""
+    return build_chunks_fused(read_pages(spark, kg_dir, for_udf=True))
 
 
 def build_raw_triples(spark: SparkSession, kg_dir: str,
                       pages: DataFrame | None = None) -> DataFrame:
     """html -> raw triples via the fused one-pass UDF stage (see
     operators.triples.extract_triples_fused)."""
-    from ..operators.triples import extract_triples_fused
-
     pages = pages if pages is not None else read_pages(spark, kg_dir,
                                                        for_udf=True)
     alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
@@ -82,53 +74,30 @@ def build_raw_triples(spark: SparkSession, kg_dir: str,
 
 
 def build_mentions(spark: SparkSession, kg_dir: str) -> DataFrame:
-    """Fused one-pass path; build_mentions_staged keeps the 3-stage
-    chain for intermediate inspection."""
-    from ..operators.triples import mentions_fused
-
+    """html -> linked mentions via the fused one-pass UDF stage."""
     alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
     pages = read_pages(spark, kg_dir, for_udf=True)
     return mentions_fused(pages, alias_bc)
 
 
-def build_mentions_staged(spark: SparkSession, kg_dir: str) -> DataFrame:
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
-    pages = read_pages(spark, kg_dir, for_udf=True)
-    return mentions_stage(chunk_stage(extract_stage(pages)), alias_bc)
-
-
 # (applicationId, kg_dir) -> persisted mapping DataFrame. The mapping
 # is O(#entities) (tiny next to triples) and identical for every query
-# in a session, so compute it once and persist — the reference's
-# collection-metadata cache analog (filesystem_vector_store.py:307-426).
-# applicationId (not id(spark)) so a recycled object address can never
-# serve a DataFrame from a stopped session.
+# in a session, so compute it once — the reference's collection-
+# metadata cache analog (filesystem_vector_store.py:307-426). Spark's
+# CacheManager cannot serve a repeat call here: canonical_mapping runs
+# its count and collect jobs on the driver before it returns a plan, so
+# only this lookup skips them. applicationId (not id(spark)) so a
+# recycled object address can never serve a stopped session's entry.
 _MAPPING_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def cached_canonical_mapping(spark: SparkSession, kg_dir: str) -> DataFrame:
-    from ..util import cached_persist
-
-    return cached_persist(
-        _MAPPING_CACHE, (spark.sparkContext.applicationId, kg_dir),
-        lambda: canonical_mapping(read_entities(spark, kg_dir)))
-
-
-# chunks table, persisted once per (session, kg_dir): multi-branch
-# read plans (hybrid search scans it twice) must not re-run the fused
-# extract+chunk+embed UDF per branch, and repeated query invocations in
-# one session must REUSE one cache entry — persisting a fresh
-# build_chunks() per call would leak a new storage-memory entry (chunk
-# text + embeddings) on every invocation.
-_CHUNKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def cached_chunks(spark: SparkSession, kg_dir: str) -> DataFrame:
-    from ..util import cached_persist
-
-    return cached_persist(
-        _CHUNKS_CACHE, (spark.sparkContext.applicationId, kg_dir),
-        lambda: build_chunks(spark, kg_dir))
+    key = (spark.sparkContext.applicationId, kg_dir)
+    if key not in _MAPPING_CACHE:
+        mapping = canonical_mapping(read_entities(spark, kg_dir)).persist()
+        mapping.count()
+        _MAPPING_CACHE[key] = mapping
+    return _MAPPING_CACHE[key]
 
 
 def build_canonical_triples(spark: SparkSession, kg_dir: str,

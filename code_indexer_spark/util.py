@@ -2,34 +2,7 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
-
-
-def cached_persist(
-    registry: dict,
-    key: tuple,
-    build: Callable[[], DataFrame],
-    eager: bool = True,
-    storage_level=None,
-) -> DataFrame:
-    """Session-scoped get-or-persist: the one shape behind the
-    mapping/chunks/shingle registries (plans.pipeline._MAPPING_CACHE,
-    _CHUNKS_CACHE, operators.dedup._SHINGLE_CACHE). `key` must start
-    with the applicationId so a recycled object address can never serve
-    a DataFrame from a stopped session; `eager` materializes with
-    count() (the mapping/chunks behavior), lazy leaves materialization
-    to the first action (the shingle behavior)."""
-    hit = registry.get(key)
-    if hit is None:
-        df = build()
-        hit = (df.persist(storage_level) if storage_level is not None
-               else df.persist())
-        if eager:
-            hit.count()
-        registry[key] = hit
-    return hit
 
 
 def free_local_checkpoint(df: DataFrame) -> None:
@@ -53,30 +26,3 @@ def free_local_checkpoint(df: DataFrame) -> None:
     except Exception:
         pass
 
-
-def cached_plan(df: DataFrame,
-                 registry: dict[tuple, DataFrame]) -> DataFrame:
-    from pyspark import StorageLevel
-
-    # semanticHash is only a 32-bit prefilter — Spark itself always
-    # pairs it with sameResult() — so a hit must CONFIRM the stored
-    # plan really is this plan before serving it (ADVICE r4: a
-    # colliding hash must never serve the wrong persisted table).
-    # Distinct same-hash plans get salted key slots; after 16
-    # colliding plans (astronomically unlikely) we skip caching rather
-    # than evict someone else's live entry.
-    analyzed = df._jdf.queryExecution().analyzed()
-    base = (df.sparkSession.sparkContext.applicationId,
-            analyzed.semanticHash())
-    for slot in range(16):
-        key = base + (slot,)
-        hit = registry.get(key)
-        if hit is not None and not (
-                hit._jdf.queryExecution().analyzed().sameResult(analyzed)):
-            continue
-        # lazy + MEMORY_AND_DISK: at the 100 TB shape this spills
-        # instead of evicting-and-recomputing
-        return cached_persist(
-            registry, key, lambda: df, eager=False,
-            storage_level=StorageLevel.MEMORY_AND_DISK)
-    return df

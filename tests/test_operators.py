@@ -272,48 +272,6 @@ def test_incremental_anti_join(spark):
     assert got == [("u1", 1), ("u2", 0)]  # changed + brand new only
 
 
-def test_fused_chunks_equals_staged(spark, kg_small):
-    """build_chunks (fused one-pass UDF) must be value-identical to the
-    staged extract->chunk->embed chain, embeddings included."""
-    import pyspark.sql.functions as F
-
-    from code_indexer_spark.plans.pipeline import (
-        build_chunks, build_chunks_staged)
-
-    cols = ["url", "chunk_index", "total_chunks", "size", "line_start",
-            "line_end", "text", "content_hash", "point_id", "vbucket"]
-
-    def value_hash(df):
-        row_h = F.md5(F.concat_ws(
-            "|", *[F.col(c).cast("string") for c in cols],
-            F.round(F.aggregate("embedding", F.lit(0.0),
-                                lambda a, x: a + x), 5).cast("string")))
-        return df.select(row_h.alias("h")).agg(
-            F.coalesce(F.expr("bit_xor(xxhash64(h))"), F.lit(0)).alias("x")
-        ).collect()[0]["x"]
-
-    fused = build_chunks(spark, kg_small)
-    staged = build_chunks_staged(spark, kg_small)
-    assert fused.count() == staged.count() > 0
-    assert value_hash(fused) == value_hash(staged)
-
-
-def test_fused_mentions_equals_staged(spark, kg_small):
-    """mentions_fused must equal the staged chain exactly."""
-    from code_indexer_spark.plans.pipeline import (
-        build_mentions, build_mentions_staged)
-
-    def key_set(df):
-        return {(r.url, r.chunk_index, r.token_pos, r.alias_norm,
-                 r.entity_id, r.link_score, tuple(r.entity_id_candidates))
-                for r in df.collect()}
-
-    fused = key_set(build_mentions(spark, kg_small))
-    staged = key_set(build_mentions_staged(spark, kg_small))
-    assert fused == staged
-    assert len(fused) > 0
-
-
 def test_filter_conflict_detection():
     """F10: contradictory specs detected before any job runs."""
     from code_indexer_spark.operators.filters import detect_filter_conflicts
@@ -663,34 +621,49 @@ def test_call_chains_max_paths_exact_prefix(spark):
         assert got == full[:cap], cap
 
 
-def test_shingle_cache_collision_serves_right_plan(spark):
-    """ADVICE r4: semanticHash is a 32-bit prefilter — a colliding
-    entry must be DETECTED via sameResult and the right table built in
-    a salted slot, never the wrong persisted shingles served."""
-    from code_indexer_spark.operators import dedup
+def test_repeat_calls_share_one_cache_entry(spark):
+    """simhash_pairs, dsir_logweights and guarded jaccard_pairs persist
+    their shared subtree; Spark's CacheManager matches a rebuilt plan by
+    sameResult, so calling them again over the same input adds no
+    cache entry, and the second run reads the first run's table."""
+    from code_indexer_spark.operators.dedup import (
+        jaccard_pairs, simhash_bits_long, simhash_pairs, word_shingles_df)
+    from code_indexer_spark.operators.textstats import (
+        bigram_buckets, dsir_logweights)
 
-    a = spark.createDataFrame([(1, "alpha beta gamma delta")],
-                              ["doc_id", "text"])
-    b = spark.createDataFrame([(9, "totally different words entirely")],
-                              ["doc_id", "text"])
-    sh_a = dedup.word_shingles_df(a)
-    sh_b = dedup.word_shingles_df(b)
-    base = (spark.sparkContext.applicationId,
-            sh_a._jdf.queryExecution().analyzed().semanticHash())
-    # simulate a hash collision: plant B's plan in A's slot 0
-    planted = sh_b.persist()
-    dedup._SHINGLE_CACHE[base + (0,)] = planted
-    try:
-        got = {r.shingle for r in dedup._cached_shingles(sh_a).collect()}
-        assert got == {"alpha beta gamma", "beta gamma delta"}
-        # the planted entry was not evicted, the right one landed slot 1
-        assert dedup._SHINGLE_CACHE[base + (0,)] is planted
-        assert base + (1,) in dedup._SHINGLE_CACHE
-    finally:
-        for k in (base + (0,), base + (1,)):
-            df = dedup._SHINGLE_CACHE.pop(k, None)
-            if df is not None:
-                df.unpersist()
+    words = "amber basil cedar delta ember fjord grove harbor iris jade"
+    docs = spark.createDataFrame(
+        [(i, " ".join(words.split()[i % 5:] + ["doc", str(i % 7)]))
+         for i in range(40)], ["doc_id", "text"])
+    target = spark.createDataFrame(
+        [(0, "amber basil cedar delta"), (1, "grove harbor iris jade")],
+        ["doc_id", "text"])
+
+    def build():
+        return [simhash_pairs(docs), dsir_logweights(docs, target),
+                jaccard_pairs(docs, threshold=0.3, max_df=30)]
+
+    def persisted():
+        # ids, not a count: the context cleaner may drop other tests'
+        # RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    first = [sorted(map(tuple, df.collect())) for df in build()]
+    ours = persisted() - before
+    assert len(ours) == 3, (before, ours)  # one entry per operator
+    again = build()
+    second = [sorted(map(tuple, df.collect())) for df in again]
+    assert persisted() - before == ours
+    assert second == first and all(first)
+    for df in again:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    # the three entries are exactly the shared subtrees; release them
+    for sub in (simhash_bits_long(docs, bits=64), bigram_buckets(docs),
+                word_shingles_df(docs)):
+        sub.unpersist(blocking=True)
+    assert not persisted() & ours
 
 
 def test_call_chains_releases_superseded_checkpoints(spark):

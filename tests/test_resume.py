@@ -41,6 +41,20 @@ def test_kill_resume_identical(spark, kg_small, tmp_path):
     got = _table_hash(spark, os.path.join(crash_dir, "triples"))
     assert got == expect  # value-identical output after kill+resume
 
+    # and it is the same table the unsliced build makes, row for row
+    # (the kernel emits a triple stated twice on a page twice)
+    from collections import Counter
+
+    from code_indexer_spark.plans.pipeline import build_canonical_triples
+
+    cols = ["subj", "pred", "obj", "src_url", "rule_id"]
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows(spark.read.parquet(os.path.join(crash_dir, "triples"))) \
+        == rows(build_canonical_triples(spark, kg_small))
+
 
 def test_checkpoint_rows_have_lineage(spark, kg_small, tmp_path):
     from code_indexer_spark.plans.checkpoint import run_triples_checkpointed
