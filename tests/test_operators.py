@@ -666,6 +666,40 @@ def test_repeat_calls_share_one_cache_entry(spark):
     assert not persisted() & ours
 
 
+def test_repeat_chunks_persist_shares_one_cache_entry(spark, kg_small,
+                                                     tmp_path):
+    """kg_hybrid_search persists a freshly built chunks plan per call;
+    the plan holds a Python UDF (mapInPandas), and CacheManager must
+    still match the rebuilt plan, or every call would pin another copy
+    of the chunk text and embeddings."""
+    import shutil
+
+    from code_indexer_spark.plans.pipeline import build_chunks
+
+    # a private copy of the pages: other tests may have cached the
+    # kg_small chunks plan already, which would hide the first entry
+    kg_dir = str(tmp_path)
+    shutil.copy(f"{kg_small}/pages.parquet", kg_dir)
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    first = build_chunks(spark, kg_dir).persist()
+    rows = sorted(map(tuple, first.select("point_id", "text")
+                      .collect()))
+    ours = persisted() - before
+    assert len(ours) == 1, (before, ours)
+    again = build_chunks(spark, kg_dir).persist()
+    assert sorted(map(tuple, again.select("point_id", "text")
+                      .collect())) == rows and rows
+    assert persisted() - before == ours
+    plan = again._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+    first.unpersist(blocking=True)
+    assert not persisted() & ours
+
+
 def test_call_chains_releases_superseded_checkpoints(spark):
     """VERDICT r4 item 7: a deep traversal must leave at most ONE
     pinned round table (the final done checkpoint) — superseded ext /
