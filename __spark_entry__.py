@@ -1216,6 +1216,7 @@ def kg_reconcile_incremental(spark, sf_dir):
     The result must equal a full rebuild — pinned by
     tests/test_resume.py::test_reconcile_incremental, which also proves
     only the work-list pages enter the UDF stage."""
+    from code_indexer_spark.functions.columns import triple_id
     from code_indexer_spark.plans.pipeline import (
         build_canonical_triples, read_pages, run_incremental)
 
@@ -1238,21 +1239,20 @@ def kg_reconcile_incremental(spark, sf_dir):
         F.lit("stale_pred").alias("pred"), F.lit("stale_obj").alias("obj"),
         F.col("url").alias("src_url"), F.lit("stale_rule").alias("rule_id"),
         F.lit(0.0).alias("confidence"),
-    ).withColumn("triple_id", F.sha2(
-        F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256))
+    ).withColumn("triple_id", triple_id("subj", "pred", "obj", "src_url"))
     return run_incremental(spark, kg, prior.unionByName(planted),
                            indexed_index)
 
 
 def kg_nodes(spark, sf_dir):
-    from code_indexer_spark.operators.canonicalize import canonical_mapping
     from code_indexer_spark.plans.pipeline import (
-        build_canonical_triples, build_nodes, read_entities)
+        build_canonical_triples, build_nodes, cached_canonical_mapping,
+        read_entities)
 
     kg = _kg_dir(sf_dir)
-    ents = read_entities(spark, kg)
-    mapping = canonical_mapping(ents)
-    return build_nodes(build_canonical_triples(spark, kg), ents, mapping)
+    return build_nodes(build_canonical_triples(spark, kg),
+                       read_entities(spark, kg),
+                       cached_canonical_mapping(spark, kg))
 
 
 def kg_edges(spark, sf_dir):

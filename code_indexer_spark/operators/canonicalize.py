@@ -1,5 +1,5 @@
 """Entity canonicalization: MinHash-LSH blocking + Jaccard verification +
-large-star/small-star connected components — all DataFrame ops.
+connected components — all DataFrame ops.
 
 Semantics are pinned by kernel/canon.py (the plain-Python oracle): same
 shingles, same seeded-md5 minhash bands, same threshold, same
@@ -7,17 +7,18 @@ min-id-as-canonical rule — so the Spark result equals the oracle's
 union-find exactly (tests/test_canonicalize.py).
 
 Scale notes (the whole point of this module):
+- each name is normalized and shingled once (_name_shingles); blocking
+  and verification both read that one projection;
 - blocking key is (entity_type, first_token, band_id, band_key) — bucket
   sizes stay O(near-duplicates), never O(entities); the self-join is a
-  shuffle on that compound key and AQE splits any residual skew;
-- the pairwise Jaccard verify runs only on blocked candidates (the
-  reference's over-fetch-then-filter shape, SURVEY.md T3);
-- connected components use the large-star/small-star algorithm
-  (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-  which converges in O(log n) rounds and never materializes a
-  component's full membership on one node; each round persists its
-  edge set and unpersists the previous one; lineage is cut with
-  localCheckpoint to keep plans bounded.
+  shuffle on that compound key, AQE splits any residual skew, and it
+  emits id pairs only;
+- the exact Jaccard verify runs once per distinct candidate pair, on
+  the carried shingle arrays;
+- connected components: driver union-find below SMALL_GRAPH_EDGES, else
+  large-star/small-star (Kiveris et al., "Connected Components in
+  MapReduce and Beyond"): O(log n) rounds, lineage cut each round with
+  localCheckpoint, no component materialized on one node.
 
 Reference analog: content-id dedup / reconcile
 (docs/algorithms.md:100-143) — G8 in SURVEY.md §2.9.
@@ -28,13 +29,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .triples import triple_id_col
+from ..functions.columns import norm_surface, triple_id
 
 
 def _char_shingles_expr(norm_col, k: int):
     """array of distinct k-char shingles of an already-normalized name
     (set semantics via array_distinct); shorter-than-k names shingle to
-    the whole name — the Column twin of kernel.hashes.char_shingles."""
+    the whole name, '' to [] — the Column twin of char_shingles."""
     n = F.length(norm_col)
     return F.when(
         n >= k,
@@ -42,116 +43,97 @@ def _char_shingles_expr(norm_col, k: int):
             F.sequence(F.lit(1), n - (k - 1)),
             lambda i: F.substr(norm_col, i, F.lit(k)),
         )),
-    ).otherwise(F.array(norm_col))
+    ).otherwise(F.array_remove(F.array(norm_col), ""))
 
 
-def band_stage(entities: DataFrame) -> DataFrame:
-    """entities(entity_id, canonical_name, entity_type) -> exploded
-    (entity_id, canonical_name, entity_type, tok0, band_id, band_key).
+def _name_shingles(entities: DataFrame) -> DataFrame:
+    """entities(entity_id, canonical_name, entity_type) ->
+    (entity_id, entity_type, tok0, sh): the first token and the
+    kernel.canon.name_shingles set (as an array) of the normalized name."""
+    from ..kernel.canon import SHINGLE_K
+
+    return entities.select(
+        "entity_id", "entity_type",
+        norm_surface(F.col("canonical_name")).alias("_norm"),
+    ).select(
+        "entity_id", "entity_type",
+        F.split("_norm", " ").getItem(0).alias("tok0"),
+        _char_shingles_expr(F.col("_norm"), SHINGLE_K).alias("sh"),
+    )
+
+
+def band_stage(named: DataFrame) -> DataFrame:
+    """_name_shingles output -> exploded
+    (entity_id, entity_type, tok0, band_id, band_key).
 
     Entirely JVM-side column expressions (zero Python UDFs on this hot
-    path): the char-3-shingle / seeded-md5 minhash / banded-key scheme
-    of kernel.canon, built with the same construction already proven
-    value-identical in operators.dedup.minhash_long —
+    path): the seeded-md5 minhash / banded-key scheme of kernel.canon,
+    built with the same construction already proven value-identical in
+    operators.dedup.minhash_long —
     band_key = md5(sig[2b] || '|' || sig[2b+1]) with
     sig[i] = min over shingles of md5('<i>|<shingle>'). Equality with
     the plain-Python kernel oracle is pinned by tests/test_canonicalize.
 
-    An empty normalized name has NO shingles; kernel.minhash_signature
-    then yields all-'' components, so every band key is md5('|') — those
-    rows take a literal fast path (the explode would drop them)."""
-    from ..kernel.canon import BANDS, NUM_HASHES, SHINGLE_K
-    from ..functions.columns import norm_surface
+    An empty name has no shingles: explode_outer keeps it as one NULL
+    shingle that votes '' for every component, which is the all-''
+    signature (every band key md5('|')) kernel.minhash_signature gives."""
+    from ..kernel.canon import BANDS, NUM_HASHES
 
     rows_per_band = NUM_HASHES // BANDS
-    base = entities.select(
-        "entity_id", "canonical_name", "entity_type",
-        norm_surface(F.col("canonical_name")).alias("_norm"),
-    ).withColumn("tok0", F.split("_norm", " ").getItem(0))
-    n = F.length("_norm")
-    shingles = _char_shingles_expr(F.col("_norm"), SHINGLE_K)
-
-    nonempty = base.filter(n > 0)
+    keys = ["entity_id", "entity_type", "tok0"]
+    shingle = F.col("shingle")
     sig = (
-        nonempty.select("entity_id", F.explode(shingles).alias("shingle"))
-        .select("entity_id", "shingle",
+        named.select(*keys, F.explode_outer("sh").alias("shingle"))
+        .select(*keys, "shingle",
                 F.explode(F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)))
                 .alias("seed"))
-        .groupBy("entity_id", "seed")
-        .agg(F.min(F.md5(F.concat_ws(
-            "|", F.col("seed").cast("string"), F.col("shingle"))))
-            .alias("mh"))
+        .groupBy(*keys, "seed")
+        .agg(F.coalesce(F.min(F.when(shingle.isNotNull(), F.md5(
+            F.concat_ws("|", F.col("seed").cast("string"), shingle)))),
+            F.lit("")).alias("mh"))
     )
-    banded = (
+    return (
         sig.withColumn("band_id", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy("entity_id", "band_id")
+        .groupBy(*keys, "band_id")
         # order inside the band is fixed by seed -> deterministic key
         .agg(F.md5(F.array_join(
             F.array_sort(F.collect_list(F.struct("seed", "mh")))
             .getField("mh"), "|")).alias("band_key"))
     )
-    attrs = base.select("entity_id", "canonical_name", "entity_type", "tok0")
-    out = banded.join(attrs, "entity_id").select(
-        "entity_id", "canonical_name", "entity_type", "tok0",
-        "band_id", "band_key")
-
-    empty_key = F.md5(F.lit("|".join([""] * rows_per_band)))
-    empties = base.filter(n == 0).select(
-        "entity_id", "canonical_name", "entity_type", "tok0",
-        F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band_id"),
-    ).withColumn("band_key", empty_key).withColumn(
-        "band_id", F.col("band_id").cast("int"))
-    return out.unionByName(empties)
 
 
-def candidate_pairs(entities: DataFrame) -> DataFrame:
-    """Self-join on the blocking key -> distinct (id_a, name_a, id_b,
-    name_b) with id_a < id_b."""
-    banded = band_stage(entities)
-    a = banded.alias("a")
-    b = banded.alias("b")
+def candidate_pairs(named: DataFrame) -> DataFrame:
+    """Self-join on the blocking key -> distinct (src, dst) entity ids
+    with src < dst."""
+    banded = band_stage(named)
+    a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.entity_type") == F.col("b.entity_type"),
-                F.col("a.tok0") == F.col("b.tok0"),
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col("a.entity_id") < F.col("b.entity_id"),
-            ],
-        )
-        .select(
-            F.col("a.entity_id").alias("id_a"),
-            F.col("a.canonical_name").alias("name_a"),
-            F.col("b.entity_id").alias("id_b"),
-            F.col("b.canonical_name").alias("name_b"),
-        )
+        a.join(b, ["entity_type", "tok0", "band_id", "band_key"])
+        .where(F.col("a.entity_id") < F.col("b.entity_id"))
+        .select(F.col("a.entity_id").alias("src"),
+                F.col("b.entity_id").alias("dst"))
         .distinct()
     )
 
 
 def verified_edges(entities: DataFrame) -> DataFrame:
-    """Candidate pairs filtered by exact shingle Jaccard >= threshold —
-    pure column expressions (array_intersect/array_union over the
-    distinct-shingle arrays = exact set Jaccard; an empty∩empty pair is
-    1.0 like kernel.hashes.jaccard). Runs only on blocked candidates,
-    and now with zero Python UDFs anywhere in canonicalization."""
-    from ..kernel.canon import JACCARD_THRESHOLD, SHINGLE_K
-    from ..functions.columns import norm_surface
+    """Candidate pairs filtered by exact shingle Jaccard >= threshold,
+    verified once per distinct pair on the shingle arrays joined back by
+    id (array_intersect/array_union over distinct-shingle arrays = exact
+    set Jaccard; empty∩empty is 1.0 like kernel.hashes.jaccard)."""
+    from ..kernel.canon import JACCARD_THRESHOLD
 
-    sa = _char_shingles_expr(
-        norm_surface(F.coalesce(F.col("name_a"), F.lit(""))), SHINGLE_K)
-    sb = _char_shingles_expr(
-        norm_surface(F.coalesce(F.col("name_b"), F.lit(""))), SHINGLE_K)
-    inter = F.size(F.array_intersect(sa, sb))
-    uni = F.size(F.array_union(sa, sb))
-    jac = F.when(uni == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / uni)
+    named = _name_shingles(entities)
+    sh = named.select("entity_id", "sh")
+    inter = F.size(F.array_intersect("sa", "sb"))
+    uni = F.size(F.array_union("sa", "sb"))
+    jac = F.when(uni == 0, F.lit(1.0)).otherwise(inter.cast("double") / uni)
     return (
-        candidate_pairs(entities)
+        candidate_pairs(named)
+        .join(sh.toDF("src", "sa"), "src")
+        .join(sh.toDF("dst", "sb"), "dst")
         .filter(jac >= JACCARD_THRESHOLD)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .select("src", "dst")
     )
 
 
@@ -306,5 +288,6 @@ def apply_canonical(triples: DataFrame, mapping: DataFrame) -> DataFrame:
             F.coalesce("obj_canon", "obj").alias("obj"),
             "src_url", "rule_id", "confidence",
         )
-        .withColumn("triple_id", triple_id_col())
+        .withColumn("triple_id",
+                    triple_id("subj", "pred", "obj", "src_url"))
     )

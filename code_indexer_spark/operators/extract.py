@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, StringType, StructField, StructType,
 )
 
+from ..functions.columns import content_hash, point_id
+
 CHUNK_STRUCT = StructType(
     [
         StructField("text", StringType()),
@@ -75,13 +77,8 @@ def extract_stage(pages: DataFrame, text_col: str = "text_extracted") -> DataFra
 def _with_ids(chunks: DataFrame) -> DataFrame:
     """+ content_hash = sha256(text) and point_id =
     md5(url_contenthash_chunkindex) (file_chunking_manager.py:376-387)."""
-    return chunks.withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    ).withColumn(
-        "point_id",
-        F.md5(F.concat_ws("_", F.col("url"), F.col("content_hash"),
-                          F.col("chunk_index"))),
-    )
+    return chunks.withColumn("content_hash", content_hash("text")).withColumn(
+        "point_id", point_id("url", "content_hash", "chunk_index"))
 
 
 def _chunk_with(chunker, extracted: DataFrame, text_col: str,

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
+from ..functions.columns import triple_id
+
 TRIPLE_SCHEMA = StructType(
     [
         StructField("src_url", StringType()),
@@ -74,12 +76,6 @@ def _index_of(bc):
     return _index_of._cache[1]
 
 
-def triple_id_col():
-    """The content-addressed triple id, sha2(subj|pred|obj|src_url): a
-    re-extracted triple gets the same id, so rewrites are idempotent."""
-    return F.sha2(F.concat_ws("|", "subj", "pred", "obj", "src_url"), 256)
-
-
 def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
     """Fused extract + rule-match + link stage: html -> triples in ONE
     mapInPandas pass (one Arrow round trip instead of two; the full
@@ -108,7 +104,8 @@ def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
             )
 
     raw = pages.select("url", "html").mapInPandas(run, schema=TRIPLE_SCHEMA)
-    return raw.withColumn("triple_id", triple_id_col())
+    return raw.withColumn(
+        "triple_id", triple_id("subj", "pred", "obj", "src_url"))
 
 
 def mentions_fused(pages: DataFrame, alias_bc) -> DataFrame:

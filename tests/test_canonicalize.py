@@ -76,7 +76,9 @@ def test_star_loop_equals_union_find(spark, kg_small):
         connected_components, large_star_small_star, verified_edges)
     from code_indexer_spark.plans.pipeline import read_entities
 
-    edges = verified_edges(read_entities(spark, kg_small))
+    # materialized once: the three paths below all read the same edges
+    edges = verified_edges(read_entities(spark, kg_small)).localCheckpoint(
+        eager=True)
     # normalize: the star graph has no identity row for component roots
     # (canonical_mapping coalesces those); union-find emits (root, root)
     def nonid(rows):
@@ -115,20 +117,25 @@ def test_band_stage_matches_kernel(spark):
     band_key) set kernel.canon computes in plain Python — including the
     short-name (<3 chars) and empty-name edge cases."""
     from code_indexer_spark.kernel.canon import first_token, name_bands
-    from code_indexer_spark.operators.canonicalize import band_stage
+    from code_indexer_spark.operators.canonicalize import (
+        _name_shingles, band_stage, canonical_mapping)
 
     ents = [("e1", "Acme Corporation", "org"),
             ("e2", "ACME Corp.", "org"),
             ("e3", "Jo", "person"),          # shorter than shingle k
             ("e4", "", "org"),               # empty name
-            ("e5", "  ?!  ", "org")]         # normalizes to empty
+            ("e5", "  ?!  ", "org"),         # normalizes to empty
+            ("e6", "", "org")]               # a second empty org name
     df = spark.createDataFrame(
         ents, ["entity_id", "canonical_name", "entity_type"])
     got = {(r.entity_id, r.tok0, r.band_id, r.band_key)
-           for r in band_stage(df).collect()}
+           for r in band_stage(_name_shingles(df)).collect()}
     want = {
         (eid, first_token(name), band_id, band_key)
         for eid, name, _ in ents
         for band_id, band_key in name_bands(name)
     }
     assert got == want
+    # empty names merge: jaccard(∅, ∅) = 1.0 on both sides
+    assert {r.entity_id: r.canonical_id
+            for r in canonical_mapping(df).collect()} == canonical_map(ents)

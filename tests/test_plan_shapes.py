@@ -136,3 +136,19 @@ def test_point_get_pushes_in_filter(spark):
     import re
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any(re.search(r"In\(", ln) for ln in pushed), pushed
+
+
+def test_canonicalize_join_conditions_carry_no_shingling(spark, kg_small):
+    """verified_edges shingles each name once, before blocking, and
+    verifies on the carried arrays. If the Jaccard filter rebuilt the
+    shingles from names again, Catalyst would push it into the blocking
+    self-join's condition, where it runs for every band-match row."""
+    from code_indexer_spark.operators.canonicalize import verified_edges
+    from code_indexer_spark.plans.pipeline import read_entities
+
+    plan = _formatted_plan(verified_edges(read_entities(spark, kg_small)))
+    conds = [ln for ln in plan.splitlines() if "Join condition:" in ln]
+    assert conds, plan
+    bad = [ln for ln in conds
+           if "lambdafunction" in ln or "regexp_replace" in ln]
+    assert not bad, f"name shingling inside a join condition:\n{bad}"
