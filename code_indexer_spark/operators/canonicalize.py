@@ -2,17 +2,18 @@
 connected components — all DataFrame ops.
 
 Semantics are pinned by kernel/canon.py (the plain-Python oracle): same
-shingles, same seeded-md5 minhash bands, same threshold, same
-min-id-as-canonical rule — so the Spark result equals the oracle's
-union-find exactly (tests/test_canonicalize.py).
+shingles, same seeded-md5 minhash bands (operators.dedup.minhash_bands,
+the signature and band helper the dedup operators share), same
+threshold, same min-id-as-canonical rule — so the Spark result equals
+the oracle's union-find exactly (tests/test_canonicalize.py).
 
 Scale notes (the whole point of this module):
 - each name is normalized and shingled once (_name_shingles); blocking
   and verification both read that one projection;
 - blocking key is (entity_type, first_token, band_id, band_key) — bucket
   sizes stay O(near-duplicates), never O(entities); the self-join is a
-  shuffle on that compound key, AQE splits any residual skew, and it
-  emits id pairs only;
+  shuffle on that compound key (operators.dedup.bucket_pairs), AQE
+  splits any residual skew, and it emits id pairs only;
 - the exact Jaccard verify runs once per distinct candidate pair, on
   the carried shingle arrays;
 - connected components: driver union-find below SMALL_GRAPH_EDGES, else
@@ -30,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.columns import norm_surface, triple_id
+from .dedup import bucket_pairs, minhash_bands
 
 
 def _char_shingles_expr(norm_col, k: int):
@@ -67,51 +69,30 @@ def band_stage(named: DataFrame) -> DataFrame:
     (entity_id, entity_type, tok0, band_id, band_key).
 
     Entirely JVM-side column expressions (zero Python UDFs on this hot
-    path): the seeded-md5 minhash / banded-key scheme of kernel.canon,
-    built with the same construction already proven value-identical in
-    operators.dedup.minhash_long —
-    band_key = md5(sig[2b] || '|' || sig[2b+1]) with
-    sig[i] = min over shingles of md5('<i>|<shingle>'). Equality with
-    the plain-Python kernel oracle is pinned by tests/test_canonicalize.
+    path): operators.dedup.minhash_bands with kernel.canon's
+    NUM_HASHES/BANDS, the same signature and band keys the dedup
+    operators use. Equality with the plain-Python kernel oracle is
+    pinned by tests/test_canonicalize.
 
     An empty name has no shingles: explode_outer keeps it as one NULL
     shingle that votes '' for every component, which is the all-''
     signature (every band key md5('|')) kernel.minhash_signature gives."""
     from ..kernel.canon import BANDS, NUM_HASHES
 
-    rows_per_band = NUM_HASHES // BANDS
     keys = ["entity_id", "entity_type", "tok0"]
-    shingle = F.col("shingle")
-    sig = (
-        named.select(*keys, F.explode_outer("sh").alias("shingle"))
-        .select(*keys, "shingle",
-                F.explode(F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)))
-                .alias("seed"))
-        .groupBy(*keys, "seed")
-        .agg(F.coalesce(F.min(F.when(shingle.isNotNull(), F.md5(
-            F.concat_ws("|", F.col("seed").cast("string"), shingle)))),
-            F.lit("")).alias("mh"))
-    )
-    return (
-        sig.withColumn("band_id", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy(*keys, "band_id")
-        # order inside the band is fixed by seed -> deterministic key
-        .agg(F.md5(F.array_join(
-            F.array_sort(F.collect_list(F.struct("seed", "mh")))
-            .getField("mh"), "|")).alias("band_key"))
-    )
+    return minhash_bands(
+        named.select(*keys, F.explode_outer("sh").alias("shingle")),
+        keys, NUM_HASHES, BANDS,
+    ).withColumnRenamed("band", "band_id")
 
 
 def candidate_pairs(named: DataFrame) -> DataFrame:
     """Self-join on the blocking key -> distinct (src, dst) entity ids
     with src < dst."""
-    banded = band_stage(named)
-    a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(b, ["entity_type", "tok0", "band_id", "band_key"])
-        .where(F.col("a.entity_id") < F.col("b.entity_id"))
-        .select(F.col("a.entity_id").alias("src"),
-                F.col("b.entity_id").alias("dst"))
+        bucket_pairs(band_stage(named), "entity_id",
+                     ["entity_type", "tok0", "band_id", "band_key"])
+        .toDF("src", "dst")
         .distinct()
     )
 

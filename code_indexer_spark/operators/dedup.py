@@ -6,7 +6,10 @@ DuckDB oracle computes the exact same values):
 - exact:      group by md5(text) (the reference's content-id dedup,
               docs/algorithms.md:100-113)
 - n-gram Jaccard: word-shingle explode -> shingle-join -> |∩|/|∪|
-- MinHash+LSH: seeded-md5 minhash signatures -> banded bucket join
+- MinHash+LSH: minhash_signature (one aggregate) -> minhash_bands ->
+              bucket_pairs; signature, bands and bucket join live once,
+              shared with operators.canonicalize's entity blocking and
+              (bucket_pairs) the Jaccard, SimHash and embedding pairs
               (K5 in SURVEY.md §2.5; all JVM-side: F.md5, no Python)
 - SimHash:    md5-hex-parity bit votes -> per-bit majority
 - embedding:  cosine-threshold near-dup pairs over array<float>
@@ -116,18 +119,13 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
-        sh.alias("a")
-        .join(sh.alias("b"),
-              (F.col("a.shingle") == F.col("b.shingle"))
-              & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(sh, "id", ["shingle"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return (
-        inter.join(sizes.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("n_sh", "sh_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("n_sh", "sh_b"), "id_b")
+        inter.join(sizes.toDF("id_a", "sh_a"), "id_a")
+        .join(sizes.toDF("id_b", "sh_b"), "id_b")
         .withColumn(
             "jac",
             F.round(F.col("n_inter")
@@ -172,20 +170,52 @@ def decontaminate(train: DataFrame, test: DataFrame,
     )
 
 
+def minhash_signature(shingles: DataFrame, keys: list[str],
+                       num_hashes: int = NUM_HASHES) -> DataFrame:
+    """(keys…, shingle) -> (keys…, mh), one groupBy: mh[i] = min over
+    the key's shingles of md5('<i>|<shingle>'), as in
+    kernel.hashes.minhash_signature. A NULL shingle hashes to NULL,
+    which min skips, so an explode_outer'd empty set gets all ''."""
+    sh = F.col("shingle")
+    return shingles.groupBy(*keys).agg(F.array(*[
+        F.coalesce(F.min(F.md5(F.concat(F.lit(f"{i}|"), sh))), F.lit(""))
+        for i in range(num_hashes)]).alias("mh"))
+
+
+def minhash_bands(shingles: DataFrame, keys: list[str],
+                  num_hashes: int = NUM_HASHES,
+                  bands: int = BANDS) -> DataFrame:
+    """(keys…, shingle) -> (keys…, band, band_key), one row per band:
+    band_key = md5(mh[b·r] || '|' || … || mh[b·r+r-1]) with
+    r = num_hashes // bands — kernel.hashes.lsh_bands."""
+    rows = num_hashes // bands
+    mh = F.col("mh")
+    return minhash_signature(shingles, keys, num_hashes).select(
+        *keys,
+        F.posexplode(F.array(*[
+            F.md5(F.concat_ws("|", *[mh[b * rows + j] for j in range(rows)]))
+            for b in range(bands)])).alias("band", "band_key"))
+
+
+def bucket_pairs(keyed: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b, one row per bucket (equal
+    ``keys``) the two ids share — never an all-pairs join."""
+    return (
+        keyed.alias("a").join(keyed.alias("b"), keys)
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"))
+    )
+
+
 def minhash_long(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", k: int = 3,
                  num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Long-form minhash signature: (id, seed, minhash) where
-    minhash = min over shingles of md5('<seed>|<shingle>') — identical
-    to kernel.hashes.minhash_signature and to the SQL oracle."""
+    """Long-form minhash signature: (id, seed, minhash), the
+    minhash_signature array unrolled one row per seed."""
     sh = word_shingles_df(docs, id_col, text_col, k)
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("seed")
-    return (
-        sh.select("id", "shingle", seeds)
-        .groupBy("id", "seed")
-        .agg(F.min(F.md5(F.concat_ws("|", F.col("seed").cast("string"),
-                                     F.col("shingle")))).alias("minhash"))
-    )
+    return minhash_signature(sh, ["id"], num_hashes).select(
+        "id", F.posexplode("mh").alias("seed", "minhash"))
 
 
 def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -193,24 +223,11 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
                         num_hashes: int = NUM_HASHES,
                         bands: int = BANDS) -> DataFrame:
     """MinHash-LSH banded candidate pairs (id_a, id_b, n_bands_shared)."""
-    rows = num_hashes // bands
-    mh = minhash_long(docs, id_col, text_col, k, num_hashes)
-    band_keys = (
-        mh.withColumn("band", (F.col("seed") / rows).cast("int"))
-        .groupBy("id", "band")
-        # order inside the band is fixed by seed -> deterministic key
-        .agg(F.md5(F.concat_ws(
-            "|", F.array_join(F.array_sort(
-                F.collect_list(F.struct("seed", "minhash"))
-            ).getField("minhash"), "|"))).alias("band_key"))
-    )
+    sh = word_shingles_df(docs, id_col, text_col, k)
     return (
-        band_keys.alias("a")
-        .join(band_keys.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.band_key") == F.col("b.band_key"))
-              & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(minhash_bands(sh, ["id"], num_hashes, bands),
+                     "id", ["band", "band_key"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands_shared"))
     )
 
@@ -308,22 +325,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                    * F.pow(F.lit(2.0), (F.col("bit_pos") - 1) % r))
              .cast("long").alias("bkey"))
     )
-    cand = (
-        keyed.alias("a")
-        .join(keyed.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.bkey") == F.col("b.bkey"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    bits_a = b.select(F.col("id").alias("id_a"), "bit_pos",
-                      F.col("bit").alias("bit_a"))
-    bits_b = b.select(F.col("id").alias("id_b"), "bit_pos",
-                      F.col("bit").alias("bit_b"))
+    cand = bucket_pairs(keyed, "id", ["band", "bkey"]).distinct()
     return (
-        cand.join(bits_a, "id_a")
-        .join(bits_b, ["id_b", "bit_pos"])
+        cand.join(b.toDF("id_a", "bit_pos", "bit_a"), "id_a")
+        .join(b.toDF("id_b", "bit_pos", "bit_b"), ["id_b", "bit_pos"])
         .groupBy("id_a", "id_b")
         .agg(F.sum(F.abs(F.col("bit_a") - F.col("bit_b")))
              .cast("int").alias("hamming"))
@@ -339,12 +344,11 @@ def embedding_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
 
     Norms are computed ONCE per row before the join (not per pair) —
     cuts ~2/3 of the per-pair array work."""
-    from .similarity import _norm as norm
+    from .similarity import _dot, _norm as norm
     a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                    norm(F.col(vec_col)).alias("na"))
     b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
                    norm(F.col(vec_col)).alias("nb"))
-    from .similarity import _dot
     dot = _dot(F.col("va"), F.col("vb"))
     return (
         a.crossJoin(b)
@@ -375,7 +379,7 @@ def embedding_dup_pairs_lsh(emb: DataFrame, id_col: str = "vec_id",
     distinct candidate set is O(near-dups); vectors re-join by id for
     rescoring. No stage is O(n²).
     """
-    from .similarity import lsh_bucket_expr
+    from .similarity import _dot, _norm as norm, lsh_bucket_expr
 
     bands = emb.select(
         F.col(id_col).alias("id"),
@@ -389,21 +393,11 @@ def embedding_dup_pairs_lsh(emb: DataFrame, id_col: str = "vec_id",
             for b in range(n_bands)
         ])).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.bucket") == F.col("b.bucket"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    from .similarity import _norm as norm
+    cand = bucket_pairs(bands, "id", ["band", "bucket"]).distinct()
     va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                     norm(F.col(vec_col)).alias("na"))
     vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
                     norm(F.col(vec_col)).alias("nb"))
-    from .similarity import _dot
     dot = _dot(F.col("va"), F.col("vb"))
     return (
         cand.join(va, "id_a").join(vb, "id_b")

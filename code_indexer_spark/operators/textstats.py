@@ -619,12 +619,13 @@ def cooccur_pmi(docs: DataFrame, text_col: str = "text",
     token pairs with the next ``window`` tokens via
     transform+slice+least/greatest (canonical order, self-pairs
     dropped), NO positional self-join — so the pair stream is a single
-    narrow O(tokens × window) projection. The only shuffles are the
-    (a, b) pair count and the unigram count derived from the SAME pair
-    stream; both are partial-aggregated map-side, so stopword-pair key
-    skew ships one partial row per task, not the raw stream. Totals are
-    a 1-row aggregate joined by broadcast; top-k is
-    TakeOrderedAndProject (no global sort).
+    narrow O(tokens × window) projection, generated once. The (a, b)
+    pair count is partial-aggregated map-side, so stopword-pair key
+    skew ships one partial row per task, not the raw stream; the
+    unigram counts and the pair total are sums over those pair counts,
+    never a second pass over the stream. The total is a 1-row aggregate
+    joined by broadcast; top-k is TakeOrderedAndProject (no global
+    sort).
 
     Estimator: p(a,b) = c_ab/P over P window pairs, p(a) = c_a/(2P)
     over pair endpoints, so pmi = ln(4·P·c_ab / (c_a·c_b)). Every
@@ -651,17 +652,16 @@ def cooccur_pmi(docs: DataFrame, text_col: str = "text",
         .select("p.a", "p.b")
     )
     pc = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
+    # a <> b, so c_a = Σ c_ab over pairs with a at either end; P = Σ c_ab
     uni = (
-        pairs.select(F.explode(F.array("a", "b")).alias("tok"))
-        .groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+        pc.select(F.explode(F.array("a", "b")).alias("tok"), "c_ab")
+        .groupBy("tok").agg(F.sum("c_ab").alias("c"))
     )
-    tot = pairs.select(F.count(F.lit(1)).alias("p_total"))
+    tot = pc.select(F.sum("c_ab").alias("p_total"))
     scored = (
         pc.filter(F.col("c_ab") >= min_count)
-        .join(uni.withColumnRenamed("tok", "a")
-                 .withColumnRenamed("c", "c_a"), "a")
-        .join(uni.withColumnRenamed("tok", "b")
-                 .withColumnRenamed("c", "c_b"), "b")
+        .join(uni.toDF("a", "c_a"), "a")
+        .join(uni.toDF("b", "c_b"), "b")
         .crossJoin(F.broadcast(tot))
         .select(
             "a", "b", "c_ab",

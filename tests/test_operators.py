@@ -502,6 +502,8 @@ def test_deterministic_sample_properties(spark):
 
 def test_empty_docs_make_no_shingles_or_pairs(spark):
     from code_indexer_spark.operators.dedup import (jaccard_pairs,
+                                                    lsh_candidate_pairs,
+                                                    minhash_long,
                                                     word_shingles_df)
 
     df = spark.createDataFrame(
@@ -509,6 +511,10 @@ def test_empty_docs_make_no_shingles_or_pairs(spark):
     assert word_shingles_df(df).filter("id in (1, 2)").count() == 0
     # two empty docs are NOT a jac=1.0 phantom near-dup pair
     assert jaccard_pairs(df, threshold=0.1).count() == 0
+    # nor an all-'' minhash signature (the NULL-shingle vote canonicalize
+    # uses for empty names), which would collide in every LSH band
+    assert minhash_long(df).filter("id in (1, 2)").count() == 0
+    assert lsh_candidate_pairs(df).count() == 0
 
 
 def test_canonical_url_rules(spark):

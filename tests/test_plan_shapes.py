@@ -8,7 +8,9 @@ load-bearing claims, pinned by CI instead of prose —
    PushedFilters In(...) predicate (the pruned-scan contract).
 
 Plans are rendered lazily (`explain('formatted')` builds, never runs,
-the query), so the gate is cheap enough to run on every CI pass."""
+the query), so the gate is cheap enough to run on every CI pass. The
+one exception is the cooccur_pmi pin, which runs its query once at
+sf0.001 to read the final adaptive plan."""
 
 from __future__ import annotations
 
@@ -152,3 +154,38 @@ def test_canonicalize_join_conditions_carry_no_shingling(spark, kg_small):
     bad = [ln for ln in conds
            if "lambdafunction" in ln or "regexp_replace" in ln]
     assert not bad, f"name shingling inside a join condition:\n{bad}"
+
+
+def test_minhash_plans_have_no_seed_explode_or_collect_list(spark, kg_small):
+    """MinHash signatures are one aggregate per key (all seeds inside
+    it) and band keys index that array. A per-seed explode of every
+    shingle row, or a collect_list regroup to build band keys, would
+    multiply the shuffled rows by the number of hashes."""
+    import re
+
+    import __spark_entry__ as e
+    from code_indexer_spark.operators.canonicalize import verified_edges
+    from code_indexer_spark.plans.pipeline import read_entities
+
+    queries = e.queries()
+    plans = {name: _formatted_plan(queries[name](spark, SF_DIR))
+             for name in ("minhash_lsh_pairs", "minhash_signatures")}
+    plans["verified_edges"] = _formatted_plan(
+        verified_edges(read_entities(spark, kg_small)))
+    for name, plan in plans.items():
+        assert "collect_list" not in plan, f"{name}:\n{plan}"
+        seed_explodes = [ln for ln in plan.splitlines()
+                         if re.search(r"Arguments: explode\(.*\bseed#\d+", ln)]
+        assert not seed_explodes, f"{name}: per-seed explode\n{seed_explodes}"
+
+
+def test_cooccur_pmi_generates_pairs_once(spark):
+    """cooccur_pmi derives the unigram counts and the pair total from
+    the (a, b) pair counts, so the final adaptive plan runs the pair
+    Generate once; every other consumer reads that shuffle."""
+    import __spark_entry__ as e
+
+    df = e.queries()["cooccur_pmi"](spark, SF_DIR)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("explode(filter(flatten(") == 1, final
