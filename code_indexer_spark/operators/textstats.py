@@ -319,7 +319,10 @@ def domain_cap(docs: DataFrame, group_col: str = "source",
        <= cap. A mega-domain (10^8-10^9 pages of one host in a real
        crawl) splits into ``salt_buckets`` parallel sort tasks instead
        of serializing into ONE window partition — the skew AQE cannot
-       fix (it can split joins, never window partitions).
+       fix (it can split joins, never window partitions). Size
+       ``salt_buckets`` as the largest group's row count ÷ the rows one
+       window task should sort: 10^8 pages of one host at ~10^6 rows
+       per sort task wants ~100 buckets; more only adds phase-2 rows.
     2. the exact window over the survivors — at most
        ``salt_buckets * cap`` narrow rows per group.
 

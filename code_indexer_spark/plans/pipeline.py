@@ -6,7 +6,12 @@ One declarative DataFrame job per stage; each output's Python kernels
 mapInPandas pass over pages, so page html crosses the Arrow boundary
 once per output. The reference's thread-pool lifecycle
 (smart_indexer.py:277-640 -> high_throughput_processor.py:262-802) is
-replaced by Spark stage parallelism — SURVEY.md §3.1 mapping.
+replaced by Spark stage parallelism — SURVEY.md §3.1 mapping — plus one
+driver thread in run_pipeline: Spark runs one action at a time per
+thread, so the chunks write, which needs only pages, is submitted from
+a second thread and overlaps the canonical mapping and the triples
+chain. Only that write action crosses the thread; all plans are built
+on the caller's thread.
 
 Partitioning at scale (SURVEY.md §7.1 step 7):
 - pages: days(warc_ts) + bucket(url) (Iceberg spec; here the parquet
@@ -196,18 +201,28 @@ def run_incremental(
 def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     """Full batch run: materialize chunks, triples, nodes, edges.
 
+    The chunks branch needs only pages, so its write runs on a second
+    driver thread while this thread runs the entity/triples chain
+    (mapping -> raw triples -> apply_canonical -> triples, nodes,
+    edges writes). Spark schedules both threads' jobs on the same
+    executors, so the chunks stage fills the cores that the mapping's
+    small, latency-bound jobs leave idle. Only the write action crosses
+    the thread: every plan, including the chunks plan, is built here,
+    so callers that wrap the plan builders (tracing spans, the mapping
+    cache) stay single-threaded. The write is wrapped in
+    inheritable_thread_target so it carries this thread's job group,
+    description and tags, and cancelJobsWithTag reaches it. A failed
+    chunks write raises from here; if the main chain fails, the chunks
+    write is awaited first and the main chain's error propagates.
+
     Row counts come from the Observation API (A12 metrics in SURVEY
     §2.6) attached to each write — zero extra scan jobs, the same
     mechanism that would feed lineage metrics on a cluster — instead
     of re-reading all four tables."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
-
-    entities = read_entities(spark, kg_dir)
-    mapping = cached_canonical_mapping(spark, kg_dir)
-
-    raw = build_raw_triples(spark, kg_dir)
-    triples = apply_canonical(raw, mapping)
-    triples.persist()
 
     obs = {name: Observation(name) for name in
            ("triples", "nodes", "edges", "chunks")}
@@ -215,22 +230,35 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     def observed(df, name):
         return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
 
-    observed(triples, "triples").write.mode("overwrite").parquet(
-        f"{out_dir}/triples.parquet")
-    nodes = build_nodes(triples, entities, mapping)
-    observed(nodes, "nodes").write.mode("overwrite").parquet(
-        f"{out_dir}/nodes.parquet")
-    edges = build_edges(triples)
-    observed(edges.repartition(F.col("salted_key")), "edges") \
-        .write.mode("overwrite").parquet(f"{out_dir}/edges.parquet")
     chunks = build_chunks(spark, kg_dir)
     # repartition on the partition column first: one file per bucket
     # instead of (tasks x buckets) tiny files — at 100 TB this is the
     # difference between 65k and millions of output files
-    observed(chunks.repartition(F.col("vbucket")), "chunks") \
-        .write.mode("overwrite").partitionBy("vbucket") \
-        .parquet(f"{out_dir}/chunks.parquet")
-    counts = {name: o.get["n"] for name, o in obs.items()}
-    triples.unpersist()
-    # mapping stays persisted — it is the session-scoped cache
-    return counts
+    chunks_writer = observed(chunks.repartition(F.col("vbucket")), "chunks") \
+        .write.mode("overwrite").partitionBy("vbucket")
+    write_chunks = inheritable_thread_target(spark)(
+        lambda: chunks_writer.parquet(f"{out_dir}/chunks.parquet"))
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        chunks_written = pool.submit(write_chunks)
+
+        entities = read_entities(spark, kg_dir)
+        mapping = cached_canonical_mapping(spark, kg_dir)
+
+        raw = build_raw_triples(spark, kg_dir)
+        triples = apply_canonical(raw, mapping)
+        triples.persist()
+        try:
+            observed(triples, "triples").write.mode("overwrite").parquet(
+                f"{out_dir}/triples.parquet")
+            nodes = build_nodes(triples, entities, mapping)
+            observed(nodes, "nodes").write.mode("overwrite").parquet(
+                f"{out_dir}/nodes.parquet")
+            edges = build_edges(triples)
+            observed(edges.repartition(F.col("salted_key")), "edges") \
+                .write.mode("overwrite").parquet(f"{out_dir}/edges.parquet")
+            chunks_written.result()
+        finally:
+            # mapping stays persisted — it is the session-scoped cache
+            triples.unpersist()
+    return {name: o.get["n"] for name, o in obs.items()}
