@@ -14,10 +14,11 @@ stay small (type × first-token × band).
 
 Connected components over those match edges give the canonical mapping;
 the canonical id is the lexicographically smallest entity_id in the
-component. The Spark side (operators/canonicalize) computes the same
-edges with the same kernel hashes and dispatches on edge count: driver
-union-find below SMALL_GRAPH_EDGES, large-star/small-star above —
-identical result by construction, verified in tests.
+component. operators/canonicalize calls canonical_map directly for
+entity tables of at most SMALL_ENTITIES rows; above that it computes the
+same edges with the same kernel hashes in Spark and runs
+large-star/small-star — identical result by construction, verified in
+tests.
 
 Reference analog: content-id dedup + reconcile
 (``/root/reference/docs/algorithms.md:100-143``).

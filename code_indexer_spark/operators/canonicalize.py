@@ -1,11 +1,14 @@
 """Entity canonicalization: MinHash-LSH blocking + Jaccard verification +
-connected components — all DataFrame ops.
+connected components as DataFrame ops, for entity tables too large for
+the driver.
 
 Semantics are pinned by kernel/canon.py (the plain-Python oracle): same
 shingles, same seeded-md5 minhash bands (operators.dedup.minhash_bands,
 the signature and band helper the dedup operators share), same
 threshold, same min-id-as-canonical rule — so the Spark result equals
-the oracle's union-find exactly (tests/test_canonicalize.py).
+the oracle's union-find exactly (tests/test_canonicalize.py). Entity
+tables of at most SMALL_ENTITIES rows are mapped by that oracle on the
+driver (one collect); the Spark path below runs above it.
 
 Scale notes (the whole point of this module):
 - each name is normalized and shingled once (_name_shingles); blocking
@@ -16,10 +19,10 @@ Scale notes (the whole point of this module):
   splits any residual skew, and it emits id pairs only;
 - the exact Jaccard verify runs once per distinct candidate pair, on
   the carried shingle arrays;
-- connected components: driver union-find below SMALL_GRAPH_EDGES, else
-  large-star/small-star (Kiveris et al., "Connected Components in
-  MapReduce and Beyond"): O(log n) rounds, lineage cut each round with
-  localCheckpoint, no component materialized on one node.
+- connected components: large-star/small-star (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond"): O(log n) rounds,
+  lineage cut each round with localCheckpoint, no component
+  materialized on one node, no edge list collected.
 
 Reference analog: content-id dedup / reconcile
 (docs/algorithms.md:100-143) — G8 in SURVEY.md §2.9.
@@ -29,6 +32,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.columns import norm_surface, triple_id
 from .dedup import bucket_pairs, minhash_bands
@@ -182,62 +186,40 @@ def large_star_small_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     )
 
 
-# Below this edge count the component structure fits trivially on the
-# driver and the O(log n)-round distributed loop is pure fixed overhead
-# (~20 sequential tiny jobs). Adaptive algorithm choice, same spirit as
-# AQE's runtime re-planning: tiny graph -> driver union-find; big graph
-# -> large-star/small-star. Both produce the identical mapping
-# (component minimum), proven equal by tests/test_canonicalize.py.
-SMALL_GRAPH_EDGES = 2_000_000
-
-
-def connected_components(edges: DataFrame,
-                         threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
-    """edges(src, dst) -> (entity_id, canonical_id), canonical =
-    component min. Dispatches on edge count; at 10^9-entity scale the
-    distributed star loop runs, at bench scale the driver union-find
-    collapses ~20 scheduler round trips into one collect."""
-    edges = edges.select("src", "dst").distinct()
-    edges.persist()  # one materialization serves both count and collect
-    try:
-        n = edges.count()
-        if n > threshold:
-            return large_star_small_star(edges)
-        return _driver_union_find(edges)
-    finally:
-        edges.unpersist()
-
-
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:  # path-halving union-find
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    rows = edges.collect()
-    for row in rows:
-        a, b = find(row["src"]), find(row["dst"])
-        if a != b:
-            # min-id root keeps the canonical-id rule exact
-            lo, hi = (a, b) if a < b else (b, a)
-            parent[hi] = lo
-    nodes = {r["src"] for r in rows} | {r["dst"] for r in rows}
-    mapping = [(x, find(x)) for x in sorted(nodes)]
-    # explicit schema: createDataFrame([]) cannot infer one, and a clean
-    # input (no verified duplicate pairs) legitimately yields zero edges
-    return edges.sparkSession.createDataFrame(
-        mapping, "entity_id string, canonical_id string")
+# Entity tables up to this many rows are canonicalized on the driver by
+# the plain-Python oracle (kernel.canon.canonical_map) after one collect;
+# larger ones take the Spark path. Measured at local[4] (ROADMAP.md,
+# Recent): the kernel costs ~0.8 ms per entity on one core, the Spark
+# path ~10 s more job overhead but ~0.5 ms per entity; the kernel wins
+# by ~8 s at 14k entities, the two are within noise from 34k to 55k,
+# and Spark wins by ~28 s at 100k.
+# The constant sits below the tie because more executor cores speed up
+# only the Spark path.
+SMALL_ENTITIES = 20_000
 
 
 def canonical_mapping(entities: DataFrame) -> DataFrame:
-    """entities -> (entity_id, canonical_id) for ALL entities
-    (identity rows included for singletons)."""
-    mapping = connected_components(verified_edges(entities))
+    """entities -> (entity_id, canonical_id) for ALL entities, one row
+    per input row (identity rows included for singletons).
+
+    One size decision: a table of at most SMALL_ENTITIES rows is mapped
+    by kernel.canon on the driver; a larger one by LSH blocking +
+    verified_edges + large_star_small_star. A NULL id, name or type is a
+    NULL join key on the Spark path and never pairs, so on the driver
+    path such rows skip the kernel and map to themselves."""
+    from ..kernel.canon import canonical_map
+
+    rows = (entities.select("entity_id", "canonical_name", "entity_type")
+            .limit(SMALL_ENTITIES + 1).collect())
+    if len(rows) <= SMALL_ENTITIES:
+        # tuple first: `in` on a Row tests its field names, not values
+        m = canonical_map([t for t in map(tuple, rows) if None not in t])
+        id_type = entities.schema["entity_id"].dataType
+        return entities.sparkSession.createDataFrame(
+            [(r[0], m.get(r[0], r[0])) for r in rows],
+            StructType([StructField("entity_id", id_type),
+                        StructField("canonical_id", id_type)]))
+    mapping = large_star_small_star(verified_edges(entities))
     return (
         entities.select("entity_id")
         .join(mapping, "entity_id", "left")

@@ -434,8 +434,9 @@ def dedup_resolution(docs: DataFrame, id_col: str = "doc_id",
                      until_converged: bool = False) -> DataFrame:
     """End-to-end duplicate-CLUSTER resolution — the full dedup story,
     not just pair emission: banded MinHash-LSH candidate pairs ->
-    rounds-bounded min-label propagation -> one canonical keep id per
-    connected duplicate cluster.
+    rounds-bounded min-label propagation (or exact connected
+    components) -> one canonical keep id per connected duplicate
+    cluster.
 
     (doc_id, keep_id, is_canonical) for every document in at least one
     candidate pair; keep_id = the smallest doc_id in the component, so
@@ -448,15 +449,13 @@ def dedup_resolution(docs: DataFrame, id_col: str = "doc_id",
     component diameter <= rounds. LSH duplicate clusters are
     near-cliques (every member shares a band bucket with most others),
     so 4 rounds covers real corpora; ``until_converged=True`` is the
-    10^12-doc mode — the same per-round plan (one join + one groupBy
-    shuffle on doc id, edge list never collected) loops until a round
-    changes zero labels (one count() action per round on the slim label
-    table; labels are checkpointed per round so lineage stays flat).
+    10^12-doc mode: exact components of any diameter from
+    operators.canonicalize.large_star_small_star over the candidate
+    pairs (O(log n) rounds, lineage cut per round, edge list never
+    collected), each component root mapped to itself.
     The bounded unrolling is what makes the DEFAULT cross-engine
     value-checkable: the DuckDB oracle runs the identical recurrence,
-    and a pytest pins converged == rounds-bounded on the fixture. For
-    general graphs (not near-clique dup clusters) use
-    operators.canonicalize's large-star/small-star instead."""
+    and a pytest pins converged == rounds-bounded on the fixture."""
     pairs = lsh_candidate_pairs(docs, id_col, text_col)
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -485,23 +484,12 @@ def dedup_resolution(docs: DataFrame, id_col: str = "doc_id",
         )
 
     if until_converged:
-        from ..util import free_local_checkpoint
+        from .canonicalize import large_star_small_star
 
-        labels = labels.localCheckpoint(eager=True)
-        while True:
-            nxt = one_round(labels).localCheckpoint(eager=True)
-            changed = (
-                nxt.alias("a")
-                .join(labels.alias("b"), "u")
-                .filter(F.col("a.lbl") != F.col("b.lbl"))
-                .count()
-            )
-            # previous round's label table is dead once compared —
-            # release its blocks deterministically
-            free_local_checkpoint(labels)
-            labels = nxt
-            if changed == 0:
-                break
+        # the star graph has no row for a component root: it keeps u
+        star = large_star_small_star(edges.toDF("src", "dst")).toDF("u", "c")
+        labels = labels.join(star, "u", "left").select(
+            "u", F.coalesce("c", "lbl").alias("lbl"))
     else:
         for _ in range(rounds):
             labels = one_round(labels)

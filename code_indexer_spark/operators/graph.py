@@ -117,7 +117,7 @@ def call_chains(edges: DataFrame, from_node: str, to_node: str,
     done = paths.filter(F.col("head") == to_node).select("path")
     frontier = paths.filter(F.col("head") != to_node)
     # Superseded rounds are released deterministically (the
-    # pagerank/dedup_resolution discipline): `done` is re-checkpointed
+    # pagerank discipline): `done` is re-checkpointed
     # each round so it stops referencing earlier ext checkpoints, after
     # which the PREVIOUS ext (consumed into this round's ext and into
     # the new done) is safe to free — without the done checkpoint,
@@ -223,8 +223,8 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     DuckDB oracle runs the identical unrolled recurrence for the
     bounded default).
 
-    ``until_converged=True`` is the 10^12-edge mode (same checkpointed
-    loop-until-stable pattern as dedup_resolution): the slim inputs
+    ``until_converged=True`` is the 10^12-edge mode (a checkpointed
+    loop-until-stable): the slim inputs
     (edge list, node set, out-degrees) are eagerly localCheckpoint-ed
     once so no round re-executes the upstream subtree, each round's
     score table is checkpointed to keep lineage flat, and the loop

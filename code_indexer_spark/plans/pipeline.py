@@ -90,8 +90,8 @@ def build_mentions(spark: SparkSession, kg_dir: str) -> DataFrame:
 # in a session, so compute it once — the reference's collection-
 # metadata cache analog (filesystem_vector_store.py:307-426). Spark's
 # CacheManager cannot serve a repeat call here: canonical_mapping runs
-# its count and collect jobs on the driver before it returns a plan, so
-# only this lookup skips them. applicationId (not id(spark)) so a
+# its collect (and, above SMALL_ENTITIES, the star loop's checkpoint
+# jobs) before it returns a plan, so only this lookup skips them. applicationId (not id(spark)) so a
 # recycled object address can never serve a stopped session's entry.
 _MAPPING_CACHE: dict[tuple[str, str], DataFrame] = {}
 

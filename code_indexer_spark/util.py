@@ -9,11 +9,11 @@ def free_local_checkpoint(df: DataFrame) -> None:
     """Explicitly release the cached blocks behind a
     ``localCheckpoint(eager=True)`` DataFrame.
 
-    Iterative loops (pagerank until_converged, dedup_resolution)
-    checkpoint a fresh O(nodes) table every round; the superseded
-    round's blocks are otherwise reclaimed only when Python GC → py4j
-    detach → ContextCleaner all happen to run, so a slowly-converging
-    run can pin many node-sized tables in storage memory. This frees
+    Iterative loops (pagerank until_converged, call_chains) checkpoint
+    a fresh table every round; the superseded round's blocks are
+    otherwise reclaimed only when Python GC → py4j detach →
+    ContextCleaner all happen to run, so a slowly-converging
+    run can pin many round tables in storage memory. This frees
     them deterministically: the checkpointed Dataset's analyzed plan is
     a LogicalRDD wrapping the cached RDD — unpersist it (non-blocking).
 

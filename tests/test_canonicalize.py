@@ -1,13 +1,15 @@
 """Canonicalization: Spark LSH-blocking + large-star/small-star CC must
 equal the plain-Python union-find oracle exactly; dup-group goldens
-(FIXTURES.md §6) must merge."""
+(FIXTURES.md §6) must merge. Fixture-sized entity tables take the
+driver path, so the Spark-path tests patch SMALL_ENTITIES to 0."""
 
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import pyarrow.parquet as pq
 import pytest
 
 from code_indexer_spark.kernel.canon import canonical_map
+from code_indexer_spark.operators import canonicalize
 
 
 @pytest.fixture(scope="module")
@@ -39,9 +41,10 @@ def test_dup_groups_fully_merge(entities):
     assert merged == len(groups)  # 100/100 on the seed-fixed fixture
 
 
-def test_spark_cc_equals_oracle(spark, kg_small, entities):
+def test_spark_cc_equals_oracle(spark, kg_small, entities, monkeypatch):
     from code_indexer_spark.operators.canonicalize import canonical_mapping
 
+    monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", 0)
     oracle = canonical_map(
         [(e["entity_id"], e["canonical_name"], e["entity_type"])
          for e in entities]
@@ -69,50 +72,119 @@ def test_large_star_small_star_chain_and_star(spark):
 
 
 def test_star_loop_equals_union_find(spark, kg_small):
-    """The distributed large-star/small-star path must produce the
-    exact mapping the driver union-find path produces (the dispatcher
-    picks by size; both must be interchangeable)."""
+    """The distributed large-star/small-star loop must produce exactly
+    the components kernel.canon's union-find gives on the same edges."""
+    from code_indexer_spark.kernel.canon import connected_components
     from code_indexer_spark.operators.canonicalize import (
-        connected_components, large_star_small_star, verified_edges)
+        large_star_small_star, verified_edges)
     from code_indexer_spark.plans.pipeline import read_entities
 
-    # materialized once: the three paths below all read the same edges
+    # materialized once: both sides read the same edges
     edges = verified_edges(read_entities(spark, kg_small)).localCheckpoint(
         eager=True)
-    # normalize: the star graph has no identity row for component roots
-    # (canonical_mapping coalesces those); union-find emits (root, root)
-    def nonid(rows):
-        return {(r.entity_id, r.canonical_id) for r in rows
-                if r.entity_id != r.canonical_id}
-
-    star = nonid(large_star_small_star(edges).collect())
-    # threshold=0 forces the star loop; threshold=inf forces union-find
-    uf = nonid(connected_components(edges, threshold=0).collect())
-    uf2 = nonid(connected_components(edges, threshold=10**9).collect())
-    assert star == uf == uf2
+    # the star graph has no identity row for component roots
+    # (canonical_mapping coalesces those); union-find maps root -> root
+    star = {(r.entity_id, r.canonical_id)
+            for r in large_star_small_star(edges).collect()}
+    uf = {(n, root) for n, root in connected_components(
+              [(r.src, r.dst) for r in edges.collect()]).items()
+          if n != root}
+    assert star == uf
     assert len(star) > 0
 
 
-def test_empty_edges_clean_input(spark):
+def test_empty_edges_clean_input(spark, monkeypatch):
     """A clean entity set (no verified duplicate pairs) must yield an
-    empty mapping, not CANNOT_INFER_EMPTY_SCHEMA, on BOTH CC paths —
-    canonical_mapping then returns pure identity rows."""
+    empty star mapping, not CANNOT_INFER_EMPTY_SCHEMA, and
+    canonical_mapping then returns pure identity rows on both paths."""
     from code_indexer_spark.operators.canonicalize import (
-        canonical_mapping, connected_components)
+        canonical_mapping, large_star_small_star)
 
     empty = spark.createDataFrame([], "src string, dst string")
-    for threshold in (0, 10**9):
-        got = connected_components(empty, threshold=threshold).collect()
-        assert got == []
+    assert large_star_small_star(empty).collect() == []
 
     ents = spark.createDataFrame(
         [("e1", "Alpha Corp", "org"), ("e2", "Totally Different Llc", "org")],
         ["entity_id", "canonical_name", "entity_type"])
-    m = {r.entity_id: r.canonical_id for r in canonical_mapping(ents).collect()}
-    assert m == {"e1": "e1", "e2": "e2"}
+    for small in (canonicalize.SMALL_ENTITIES, 0):
+        monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", small)
+        m = {r.entity_id: r.canonical_id
+             for r in canonical_mapping(ents).collect()}
+        assert m == {"e1": "e1", "e2": "e2"}
 
 
-def test_band_stage_matches_kernel(spark):
+def test_small_entity_table_maps_in_one_job(spark, kg_small):
+    """At fixture size the mapping is one collect of the entities plus
+    the kernel on the driver: exactly one Spark job, oracle-equal."""
+    from code_indexer_spark.operators.canonicalize import canonical_mapping
+    from code_indexer_spark.plans.pipeline import read_entities
+
+    ents = read_entities(spark, kg_small)  # schema inference runs a job
+    sc = spark.sparkContext
+    tag = "test-canonical-mapping-jobs"
+    sc.addJobTag(tag)
+    try:
+        mapping = canonical_mapping(ents)
+    finally:
+        sc.clearJobTags()
+    assert len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)) == 1
+    rows = [tuple(r) for r in ents.select(
+        "entity_id", "canonical_name", "entity_type").collect()]
+    assert dict(map(tuple, mapping.collect())) == canonical_map(rows)
+
+
+def test_driver_path_matches_spark_path_on_nulls_and_duplicates(
+        spark, monkeypatch):
+    """NULL ids, names and types never pair on the Spark path (NULL join
+    keys); the driver path must keep them out of the kernel and map each
+    such row to itself, one output row per input row."""
+    from code_indexer_spark.operators.canonicalize import canonical_mapping
+
+    ents = spark.createDataFrame(
+        [("e1", "Acme Corp", "org"),
+         ("e2", "Acme Corp", "org"),        # duplicate name: merges
+         ("e3", "Acme Corp", None),         # NULL type
+         ("e4", "Acme Corp", None),         # a second NULL type
+         ("e5", None, "org"),               # NULL name
+         ("e6", None, "org"),
+         (None, "Acme Corp", "org"),        # NULL id
+         ("e1", "Acme Corp", "org"),        # duplicate row
+         ("e7", "Zen Labs", "org")],
+        "entity_id string, canonical_name string, entity_type string")
+    fast = canonical_mapping(ents)
+    monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", 0)
+    forced = canonical_mapping(ents)
+    assert fast.schema == forced.schema
+    got = Counter(map(tuple, fast.collect()))
+    assert got == Counter(map(tuple, forced.collect()))
+    assert got == Counter({("e1", "e1"): 2, ("e2", "e1"): 1,
+                           ("e3", "e3"): 1, ("e4", "e4"): 1,
+                           ("e5", "e5"): 1, ("e6", "e6"): 1,
+                           (None, None): 1, ("e7", "e7"): 1})
+
+
+def test_size_decision_boundary(spark, monkeypatch):
+    """SMALL_ENTITIES rows take the driver path; one more row takes the
+    Spark path (large_star_small_star runs); both equal the oracle."""
+    from code_indexer_spark.operators.canonicalize import canonical_mapping
+
+    calls = []
+    star = canonicalize.large_star_small_star
+    monkeypatch.setattr(canonicalize, "large_star_small_star",
+                        lambda edges: calls.append(1) or star(edges))
+    monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", 3)
+    rows = [("e1", "Acme Corp", "org"), ("e2", "Acme Corp Inc", "org"),
+            ("e3", "Zen Labs", "org"), ("e4", "Zen Labs Inc", "org")]
+    for n, star_calls in ((3, 0), (4, 1)):
+        calls.clear()
+        df = spark.createDataFrame(
+            rows[:n], ["entity_id", "canonical_name", "entity_type"])
+        got = dict(map(tuple, canonical_mapping(df).collect()))
+        assert len(calls) == star_calls
+        assert got == canonical_map(rows[:n])
+
+
+def test_band_stage_matches_kernel(spark, monkeypatch):
     """The JVM-side band_stage must emit exactly the (tok0, band_id,
     band_key) set kernel.canon computes in plain Python — including the
     short-name (<3 chars) and empty-name edge cases."""
@@ -137,5 +209,6 @@ def test_band_stage_matches_kernel(spark):
     }
     assert got == want
     # empty names merge: jaccard(∅, ∅) = 1.0 on both sides
+    monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", 0)
     assert {r.entity_id: r.canonical_id
             for r in canonical_mapping(df).collect()} == canonical_map(ents)
