@@ -835,37 +835,35 @@ def q_image_dims(spark, sf_dir):
     from code_indexer_spark.operators.multimodal import (
         ASSET_SCHEMA, image_dims_stage,
     )
+    from code_indexer_spark.util import arrow_rows
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
+    def make_rows():
         import numpy as np
-        import pandas as pd
 
         from code_indexer_spark.kernel.jpeg import make_jpeg_fixture
         from code_indexer_spark.kernel.png import encode_png
 
-        for pdf in batches:
-            rows = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w, h = 1 + i % 16, 1 + i % 9
-                if i % 5 == 0:
-                    content = b"not an image"
-                elif i % 2 == 0:
-                    px = np.full((h, w, 1 + i % 4), (i * 37) % 256,
-                                 dtype=np.uint8)
-                    content = encode_png(px)
-                else:
-                    content = make_jpeg_fixture(
-                        w, h, components=1 if i % 7 == 0 else 3,
-                        progressive=(i % 3 == 0))
-                rows.append((str(i), f"asset/{i}", "image",
-                             content, len(content), "bin"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ASSET_SCHEMA.fields])
+        def rows(raw):
+            i = int(raw)
+            w, h = 1 + i % 16, 1 + i % 9
+            if i % 5 == 0:
+                content = b"not an image"
+            elif i % 2 == 0:
+                px = np.full((h, w, 1 + i % 4), (i * 37) % 256,
+                             dtype=np.uint8)
+                content = encode_png(px)
+            else:
+                content = make_jpeg_fixture(
+                    w, h, components=1 if i % 7 == 0 else 3,
+                    progressive=(i % 3 == 0))
+            return [(str(i), f"asset/{i}", "image", content, len(content),
+                     "bin")]
 
-    assets = docs.mapInPandas(gen, schema=ASSET_SCHEMA)
+        return rows
+
+    assets = arrow_rows(docs, ["doc_id"], ASSET_SCHEMA, make_rows)
     return (
         image_dims_stage(assets)
         .select(F.col("url").cast("long").alias("doc_id"),

@@ -64,7 +64,7 @@ def parse_png_header(content: bytes) -> dict:
             raise ValueError("zero dimension")
         # PNG spec caps dims at 2^31-1; a larger (corrupt/adversarial)
         # value must become a decode_error ROW, not an int64 that later
-        # kills a whole Int32 batch conversion in image_dims_stage
+        # kills a whole batch's int32 conversion in image_dims_stage
         if width > 0x7FFFFFFF or height > 0x7FFFFFFF:
             raise ValueError("dimension exceeds PNG 2^31-1 bound")
         if color_type not in _CHANNELS:

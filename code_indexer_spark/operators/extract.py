@@ -1,17 +1,18 @@
 """Extraction + chunking + embedding Spark stages (SURVEY.md §2.2-2.3).
 
-All heavy per-row work runs in Arrow-batched ``mapInPandas`` /
-``pandas_udf`` stages that wrap the plain-Python kernels — no
-row-at-a-time Python UDFs, no driver-side loops. Column-expression work
-(hashes, ids, explode) stays JVM-side in whole-stage codegen.
+All heavy per-row work runs in Arrow-batched row stages
+(``util.arrow_rows``, one ``mapInPandas`` each) that wrap the
+plain-Python kernels — no row-at-a-time Python UDFs, no driver-side
+loops. Column-expression work (hashes, ids) stays JVM-side in
+whole-stage codegen.
 
 Reference parity:
 - extract: deterministic HTML->text + <img src> kernel
   (image_extractor.py:420-440 semantics; encoding cascade
   fixed_size_chunker.py:264-277);
-- chunk: fixed-size windows (fixed_size_chunker.py:159-238), emitted as
-  array<struct> then ``posexplode``-free explode (index carried in the
-  struct — cheaper than a window);
+- chunk: fixed-size windows (fixed_size_chunker.py:159-238), one output
+  row per window straight from the row stage (the index is a column of
+  the row — no explode, no window);
 - ids: point_id = md5(url + content-hash + chunk_index)
   (file_chunking_manager.py:376-380), content_hash = sha256(chunk text)
   (:386-387) — both as JVM-side F.md5/F.sha2 column expressions, not UDFs;
@@ -22,33 +23,19 @@ Reference parity:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, StringType, StructField, StructType,
 )
 
 from ..functions.columns import content_hash, point_id
-
-CHUNK_STRUCT = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("chunk_index", IntegerType()),
-        StructField("total_chunks", IntegerType()),
-        StructField("size", IntegerType()),
-        StructField("line_start", IntegerType()),
-        StructField("line_end", IntegerType()),
-    ]
-)
+from ..util import arrow_rows
 
 
 def extract_stage(pages: DataFrame, text_col: str = "text_extracted") -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) -> + text_extracted, images.
 
-    mapInPandas (not a scalar UDF) so one pass yields both text and the
+    A row stage (not a scalar UDF) so one pass yields both text and the
     image list without parsing the HTML twice.
     """
     fields = [f for f in pages.schema.fields if f.name not in (text_col, "images")]
@@ -60,18 +47,14 @@ def extract_stage(pages: DataFrame, text_col: str = "text_extracted") -> DataFra
         ]
     )
     names = [f.name for f in fields]
+    html_at = names.index("html")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_rows():
         from ..kernel.extract import extract_page
 
-        for pdf in batches:
-            pairs = [extract_page(h) for h in pdf["html"]]
-            out = pdf[names].copy()
-            out[text_col] = [p[0] for p in pairs]
-            out["images"] = [p[1] for p in pairs]
-            yield out
+        return lambda *vals: [(*vals, *extract_page(vals[html_at]))]
 
-    return pages.mapInPandas(run, schema=out_schema)
+    return arrow_rows(pages, names, out_schema, make_rows)
 
 
 def _with_ids(chunks: DataFrame) -> DataFrame:
@@ -81,33 +64,44 @@ def _with_ids(chunks: DataFrame) -> DataFrame:
         "point_id", point_id("url", "content_hash", "chunk_index"))
 
 
+def _chunk_schema(df: DataFrame) -> StructType:
+    """One row per window; warc_ts keeps ``df``'s type."""
+    return StructType(
+        [
+            StructField("url", StringType()),
+            StructField("warc_ts", df.schema["warc_ts"].dataType),
+            StructField("lang", StringType()),
+            StructField("text", StringType()),
+            StructField("chunk_index", IntegerType()),
+            StructField("total_chunks", IntegerType()),
+            StructField("size", IntegerType()),
+            StructField("line_start", IntegerType()),
+            StructField("line_end", IntegerType()),
+        ]
+    )
+
+
+def _chunk_rows(chunker, chunk_size: int):
+    """The per-text chunk-row function every chunk stage shares:
+    (url, warc_ts, lang, text) -> one ``_chunk_schema`` tuple per
+    window ``chunker`` (a kernel.chunker function) cuts."""
+
+    def rows(url, ts, lang, text):
+        for c in chunker(text or "", chunk_size):
+            yield (url, ts, lang, c["text"], c["chunk_index"],
+                   c["total_chunks"], c["size"], c["line_start"],
+                   c["line_end"])
+
+    return rows
+
+
 def _chunk_with(chunker, extracted: DataFrame, text_col: str,
                 chunk_size: int) -> DataFrame:
     """The body of chunk_stage/smart_chunk_stage; ``chunker`` is the
     kernel.chunker function that cuts one text into windows."""
-
-    @F.pandas_udf(ArrayType(CHUNK_STRUCT))
-    def chunk_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                [
-                    (
-                        c["text"], c["chunk_index"], c["total_chunks"],
-                        c["size"], c["line_start"], c["line_end"],
-                    )
-                    for c in chunker(t or "", chunk_size)
-                ]
-                for t in texts
-            ]
-        )
-
-    return _with_ids(
-        extracted.select(
-            "url", "warc_ts", "lang",
-            F.explode(chunk_udf(F.col(text_col))).alias("c"),
-        )
-        .select("url", "warc_ts", "lang", "c.*")
-    )
+    return _with_ids(arrow_rows(
+        extracted, ["url", "warc_ts", "lang", text_col],
+        _chunk_schema(extracted), lambda: _chunk_rows(chunker, chunk_size)))
 
 
 def chunk_stage(
@@ -117,8 +111,8 @@ def chunk_stage(
 ) -> DataFrame:
     """extracted pages -> chunks table (one row per window).
 
-    chunks(url, warc_ts, lang, chunk_index, total_chunks, size,
-           line_start, line_end, text, content_hash, point_id)
+    chunks(url, warc_ts, lang, text, chunk_index, total_chunks, size,
+           line_start, line_end, content_hash, point_id)
     """
     from ..kernel.chunker import chunk_text
 
@@ -127,55 +121,33 @@ def chunk_stage(
 
 def build_chunks_fused(pages: DataFrame) -> DataFrame:
     """Fused extract + chunk + embed: html -> embedded chunk rows in ONE
-    mapInPandas pass (one Arrow round trip instead of three; html and
-    the full extracted text never re-cross the JVM/Python boundary —
-    a staged extract -> chunk -> embed chain spent ~10x the kernel cost
-    on Arrow serialization of full page payloads).
+    Arrow pass (one round trip instead of three; html and the full
+    extracted text never re-cross the JVM/Python boundary — a staged
+    extract -> chunk -> embed chain spent ~10x the kernel cost on Arrow
+    serialization of full page payloads).
 
-    Adds ``embedding`` (unit-norm array<float>) and ``vbucket``, the
-    2-bit-quantized vector bucket used as a partition column (K3 in
-    SURVEY.md §2.5)."""
-    out_schema = StructType(
-        [
-            StructField("url", StringType()),
-            StructField("warc_ts",
-                        pages.schema["warc_ts"].dataType),
-            StructField("lang", StringType()),
-        ]
-        + list(CHUNK_STRUCT.fields)
-        + [
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("vbucket", StringType()),
-        ]
-    )
+    The chunk rows are chunk_stage's; this stage appends ``embedding``
+    (unit-norm array<float>) and ``vbucket``, the 2-bit-quantized
+    vector bucket used as a partition column (K3 in SURVEY.md §2.5)."""
+    out_schema = _chunk_schema(pages) \
+        .add("embedding", ArrayType(FloatType())).add("vbucket", StringType())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_rows():
         from ..kernel.chunker import chunk_text
         from ..kernel.embed import bucket_of, embed_text
         from ..kernel.extract import extract_text
 
-        for pdf in batches:
-            rows = []
-            for url, ts, lang, html in zip(
-                pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["html"]
-            ):
-                text = extract_text(html)
-                for c in chunk_text(text, 1000):
-                    v = embed_text(c["text"])
-                    rows.append((
-                        url, ts, lang, c["text"], c["chunk_index"],
-                        c["total_chunks"], c["size"], c["line_start"],
-                        c["line_end"], v.tolist(), bucket_of(v),
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "lang", "text", "chunk_index",
-                         "total_chunks", "size", "line_start", "line_end",
-                         "embedding", "vbucket"],
-            )
+        chunk_rows = _chunk_rows(chunk_text, 1000)
 
-    return _with_ids(pages.select("url", "warc_ts", "lang", "html")
-                     .mapInPandas(run, schema=out_schema))
+        def rows(url, ts, lang, html):
+            for r in chunk_rows(url, ts, lang, extract_text(html)):
+                v = embed_text(r[3])
+                yield (*r, v.tolist(), bucket_of(v))
+
+        return rows
+
+    return _with_ids(arrow_rows(pages, ["url", "warc_ts", "lang", "html"],
+                                out_schema, make_rows))
 
 
 def incremental_anti_join(

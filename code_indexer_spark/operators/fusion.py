@@ -19,7 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-RRF_K = 60
+from ..functions.columns import RRF_K, rrf_term
+
 SCORE_GATE_DETECT = 0.80
 SCORE_GATE_CULL = 0.70
 
@@ -46,7 +47,7 @@ def fuse_rrf(ranked: DataFrame, key_cols: list[str],
     return (
         ranked.groupBy(*key_cols)
         .agg(
-            F.round(F.sum(1.0 / (F.lit(k) + F.col(rank_col))), 6)
+            F.round(F.sum(rrf_term(rank_col, k)), 6)
             .alias("rrf_score"),
             F.countDistinct(provider_col).alias("n_providers"),
             F.array_join(F.array_sort(F.collect_set(provider_col)), ",")

@@ -13,7 +13,7 @@ needs system codecs absent from this container, so for those
 `decode_image` raises NotImplementedError unless
 `deterministic_fake=True`, in which case it produces a seeded fake
 feature tensor from the bytes' md5 — the Spark-side plumbing (schemas,
-mapInPandas batch shape, partitioning, routing) is real and tested
+Arrow batch shape, partitioning, routing) is real and tested
 either way.
 
 Asset table schema (what a 100 TB crawl would carry):
@@ -25,16 +25,15 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, FloatType, IntegerType, LongType,
     StringType, StructField, StructType,
 )
+
+from ..util import arrow_rows
 
 ASSET_SCHEMA = StructType(
     [
@@ -129,7 +128,7 @@ _DECODE_ERRORS = (ValueError, NotImplementedError, zlib.error, struct.error)
 
 def image_features_stage(assets: DataFrame,
                          deterministic_fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over binary content — the real
+    """Arrow-batched feature extraction over binary content — the real
     Arrow batch shape a GPU/CPU decode stage would use (batched bytes
     in, fixed-dim float vectors out).
 
@@ -138,26 +137,18 @@ def image_features_stage(assets: DataFrame,
     survives with features=NULL and the exception in ``decode_error``,
     the skip_reason discipline of validate_assets applied to decode."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, errs = [], []
-            for c in pdf["content"]:
-                try:
-                    feats.append(decode_image(
-                        c, deterministic_fake=deterministic_fake).tolist())
-                    errs.append(None)
-                except _DECODE_ERRORS as exc:
-                    feats.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = pdf[["url", "asset_path", "fmt"]].copy()
-            out["n_bytes"] = [len(c or b"") for c in pdf["content"]]
-            out["features"] = feats
-            out["decode_error"] = errs
-            yield out
+    def rows(url, path, fmt, c):
+        try:
+            feats = decode_image(
+                c, deterministic_fake=deterministic_fake).tolist()
+            err = None
+        except _DECODE_ERRORS as exc:
+            feats, err = None, f"{type(exc).__name__}: {exc}"
+        return [(url, path, fmt, len(c or b""), feats, err)]
 
-    return assets.filter(F.col("kind") == "image").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
+    return arrow_rows(assets.filter(F.col("kind") == "image"),
+                      ["url", "asset_path", "fmt", "content"],
+                      FEATURES_SCHEMA, lambda: rows)
 
 
 DIMS_SCHEMA = StructType(
@@ -187,47 +178,36 @@ def image_dims_stage(assets: DataFrame) -> DataFrame:
     applied to header parsing. Reference analog: dimension validation
     in indexing/image_extractor.py:69-122 (PIL's ``.size`` is the same
     lazy header read)."""
-    from ..kernel.jpeg import (
-        parse_gif_header, parse_jpeg_header, parse_webp_header,
-    )
-    from ..kernel.png import parse_png_header, sniff_format
+    geometry = ("width", "height", "components", "bit_depth", "progressive")
 
-    parsers = {"png": parse_png_header, "jpeg": parse_jpeg_header,
-               "gif": parse_gif_header, "webp": parse_webp_header}
+    def make_rows():
+        from ..kernel.jpeg import (
+            parse_gif_header, parse_jpeg_header, parse_webp_header,
+        )
+        from ..kernel.png import parse_png_header, sniff_format
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in
-                                     ("width", "height", "components",
-                                      "bit_depth", "progressive",
-                                      "decode_error")}
-            for c in pdf["content"]:
-                sniffed = sniff_format(c)
-                try:
-                    if sniffed is None:
-                        raise ValueError("unrecognized image magic")
-                    hdr = parsers[sniffed](c)
-                    err = None
-                except _DECODE_ERRORS as exc:
-                    hdr = dict.fromkeys(
-                        ("width", "height", "components", "bit_depth",
-                         "progressive"))
-                    err = f"{type(exc).__name__}: {exc}"
-                for k in ("width", "height", "components", "bit_depth"):
-                    cols[k].append(hdr[k])
-                cols["progressive"].append(
-                    None if hdr["progressive"] is None
-                    else bool(hdr["progressive"]))
-                cols["decode_error"].append(err)
-            out = pdf[["url", "asset_path", "fmt"]].copy()
-            for k, v in cols.items():
-                out[k] = pd.array(v, dtype="Int32") \
-                    if k in ("width", "height", "components",
-                             "bit_depth") else v
-            yield out
+        parsers = {"png": parse_png_header, "jpeg": parse_jpeg_header,
+                   "gif": parse_gif_header, "webp": parse_webp_header}
 
-    return assets.filter(F.col("kind") == "image").mapInPandas(
-        run, schema=DIMS_SCHEMA)
+        def rows(url, path, fmt, c):
+            sniffed = sniff_format(c)
+            try:
+                if sniffed is None:
+                    raise ValueError("unrecognized image magic")
+                hdr = parsers[sniffed](c)
+                err = None
+            except _DECODE_ERRORS as exc:
+                hdr = dict.fromkeys(geometry)
+                err = f"{type(exc).__name__}: {exc}"
+            w, h, comp, depth, prog = (hdr[k] for k in geometry)
+            return [(url, path, fmt, w, h, comp, depth,
+                     None if prog is None else bool(prog), err)]
+
+        return rows
+
+    return arrow_rows(assets.filter(F.col("kind") == "image"),
+                      ["url", "asset_path", "fmt", "content"],
+                      DIMS_SCHEMA, make_rows)
 
 
 def validate_assets(assets: DataFrame,
@@ -265,7 +245,7 @@ RESIZED_SCHEMA = StructType(
 def resize_images_stage(assets: DataFrame, width: int = 224,
                         height: int = 224,
                         deterministic_fake: bool = True) -> DataFrame:
-    """Resize as a 1:1 mapInPandas stage: binary in, binary out plus
+    """Resize as a 1:1 Arrow row stage: binary in, binary out plus
     (width, height) metadata — the batch shape a PIL/opencv resize
     would use. PNG content takes the REAL path: stdlib decode →
     nearest-neighbor resample → stdlib re-encode (kernel/png.py).
@@ -286,38 +266,32 @@ def resize_images_stage(assets: DataFrame, width: int = 224,
         xs = np.minimum((np.arange(w) * src_w) // w, src_w - 1)
         return encode_png(px[ys][:, xs])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_rows():
         from ..kernel.png import sniff_format
 
-        for pdf in batches:
-            resized, errs = [], []
-            for c in pdf["content"]:
-                err = None
-                if sniff_format(c) == "png":
-                    try:
-                        out_bytes = _resize_png(c, width, height)
-                    except _DECODE_ERRORS as exc:
-                        out_bytes = None
-                        err = f"{type(exc).__name__}: {exc}"
-                elif deterministic_fake:
-                    out_bytes = hashlib.md5(
-                        (c or b"") + f"|{width}x{height}".encode()).digest()
-                else:
-                    raise NotImplementedError(
-                        "non-PNG resize requires system codecs (not in "
-                        "this container); deterministic_fake=True "
-                        "exercises the plumbing path")
-                resized.append(out_bytes)
-                errs.append(err)
-            out = pdf[["url", "asset_path", "fmt"]].copy()
-            out["width"] = width
-            out["height"] = height
-            out["content"] = resized
-            out["decode_error"] = errs
-            yield out
+        def rows(url, path, fmt, c):
+            err = None
+            if sniff_format(c) == "png":
+                try:
+                    out_bytes = _resize_png(c, width, height)
+                except _DECODE_ERRORS as exc:
+                    out_bytes = None
+                    err = f"{type(exc).__name__}: {exc}"
+            elif deterministic_fake:
+                out_bytes = hashlib.md5(
+                    (c or b"") + f"|{width}x{height}".encode()).digest()
+            else:
+                raise NotImplementedError(
+                    "non-PNG resize requires system codecs (not in "
+                    "this container); deterministic_fake=True "
+                    "exercises the plumbing path")
+            return [(url, path, fmt, width, height, out_bytes, err)]
 
-    return assets.filter(F.col("kind") == "image").mapInPandas(
-        run, schema=RESIZED_SCHEMA)
+        return rows
+
+    return arrow_rows(assets.filter(F.col("kind") == "image"),
+                      ["url", "asset_path", "fmt", "content"],
+                      RESIZED_SCHEMA, make_rows)
 
 
 FRAMES_SCHEMA = StructType(
@@ -334,7 +308,7 @@ FRAMES_SCHEMA = StructType(
 def sample_frames_stage(assets: DataFrame, fps: float = 0.5,
                         max_frames: int = 16,
                         deterministic_fake: bool = True) -> DataFrame:
-    """Video frame sampling as a ROW-EXPANDING mapInPandas stage: one
+    """Video frame sampling as a ROW-EXPANDING Arrow row stage: one
     input video row -> up to max_frames frame rows at 1/fps-second
     spacing. The decode is STUBBED (no ffmpeg here): fake duration =
     (content_len % 120) + 1 seconds, frame bytes md5(content | index) —
@@ -343,27 +317,23 @@ def sample_frames_stage(assets: DataFrame, fps: float = 0.5,
     scale this is the stage that dominates bytes: partition the assets
     table by bucket(url) so one hot site cannot pin an executor."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not deterministic_fake:
-                raise NotImplementedError(
-                    "frame sampling requires ffmpeg/av (not in this "
-                    "container); deterministic_fake=True exercises the "
-                    "plumbing path")
-            rows = []
-            for url, path, content in zip(
-                    pdf["url"], pdf["asset_path"], pdf["content"]):
-                c = content or b""
-                duration_s = (len(c) % 120) + 1
-                n = min(max_frames, max(1, int(duration_s * fps)))
-                for i in range(n):
-                    rows.append((
-                        url, path, i, float(i / fps),
-                        hashlib.md5(c + f"|frame{i}".encode()).digest(),
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["url", "asset_path", "frame_index",
-                               "ts_offset_s", "frame"])
+    def make_rows():
+        if not deterministic_fake:
+            raise NotImplementedError(
+                "frame sampling requires ffmpeg/av (not in this "
+                "container); deterministic_fake=True exercises the "
+                "plumbing path")
 
-    return assets.filter(F.col("kind") == "video").mapInPandas(
-        run, schema=FRAMES_SCHEMA)
+        def rows(url, path, content):
+            c = content or b""
+            duration_s = (len(c) % 120) + 1
+            n = min(max_frames, max(1, int(duration_s * fps)))
+            for i in range(n):
+                yield (url, path, i, float(i / fps),
+                       hashlib.md5(c + f"|frame{i}".encode()).digest())
+
+        return rows
+
+    return arrow_rows(assets.filter(F.col("kind") == "video"),
+                      ["url", "asset_path", "content"],
+                      FRAMES_SCHEMA, make_rows)

@@ -4,7 +4,10 @@ The alias dictionary (~5k rows) is broadcast to executors once per job
 via ``SparkContext.broadcast`` and rebuilt lazily into an AliasIndex
 inside each Python worker (a plain broadcast variable — the Spark analog
 of the reference keeping its payload indexes in process memory,
-filesystem_vector_store.py:307-426).
+filesystem_vector_store.py:307-426). Both fused stages are
+``util.arrow_rows`` row stages: the index is looked up once per
+partition, on its first Arrow batch, and each page row expands into
+its triple or mention rows.
 
 Reference parity (SURVEY.md §7.0):
 - mention detection <- FTS identifiers side channel
@@ -19,16 +22,13 @@ Reference parity (SURVEY.md §7.0):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
 from ..functions.columns import triple_id
+from ..util import arrow_rows
 
 TRIPLE_SCHEMA = StructType(
     [
@@ -78,32 +78,25 @@ def _index_of(bc):
 
 def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
     """Fused extract + rule-match + link stage: html -> triples in ONE
-    mapInPandas pass (one Arrow round trip instead of two; the full
-    extracted text never crosses the JVM/Python boundary).
+    Arrow pass (one round trip instead of two; the full extracted text
+    never crosses the JVM/Python boundary).
 
-    One Arrow batch in, zero-or-more raw (pre-canonicalization) triple
-    rows out — mapInPandas is the right shape for a row-expanding UDF
-    stage."""
+    One page row in, zero-or-more raw (pre-canonicalization) triple
+    rows out — a row-expanding ``util.arrow_rows`` stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_rows():
         from ..kernel.extract import extract_text
         from ..kernel.nlp import extract_triples_from_text
 
-        idx = None
-        for pdf in batches:
-            if idx is None:
-                idx = _index_of(alias_bc)
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
-                for s, p, o, rid, conf in extract_triples_from_text(text, idx):
-                    rows.append((url, s, p, o, rid, conf))
-            yield pd.DataFrame(
-                rows, columns=["src_url", "subj", "pred", "obj", "rule_id",
-                               "confidence"],
-            )
+        idx = _index_of(alias_bc)
 
-    raw = pages.select("url", "html").mapInPandas(run, schema=TRIPLE_SCHEMA)
+        def rows(url, html):
+            for t in extract_triples_from_text(extract_text(html), idx):
+                yield (url, *t)
+
+        return rows
+
+    raw = arrow_rows(pages, ["url", "html"], TRIPLE_SCHEMA, make_rows)
     return raw.withColumn(
         "triple_id", triple_id("subj", "pred", "obj", "src_url"))
 
@@ -111,42 +104,35 @@ def extract_triples_fused(pages: DataFrame, alias_bc) -> DataFrame:
 def mentions_fused(pages: DataFrame, alias_bc) -> DataFrame:
     """Fused extract + chunk + mention-detect + link: html ->
     mentions(url, chunk_index, token_pos, alias_norm, entity_id,
-    link_score, entity_id_candidates) in ONE mapInPandas pass (one
-    Arrow round trip instead of three — the html/extracted text never
-    re-crosses the JVM/Python boundary).
+    link_score, entity_id_candidates) in ONE Arrow pass (one round trip
+    instead of three — the html/extracted text never re-crosses the
+    JVM/Python boundary).
 
     Linking context = the chunk's own embedding (sentence-free
     variant): score each candidate by prior × (0.5 + 0.5·cos(chunk_vec,
     name_vec)) — same funnel as triples linking."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_rows():
         from ..kernel.chunker import chunk_text
         from ..kernel.embed import embed_text
         from ..kernel.extract import extract_text
 
-        idx = None
-        for pdf in batches:
-            if idx is None:
-                idx = _index_of(alias_bc)
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
-                for c in chunk_text(text, 1000):
-                    ments = idx.detect_mentions(c["text"])
-                    if not ments:
-                        continue
-                    ctx = embed_text(c["text"])
-                    for pos, norm, _ in ments:
-                        linked = idx.link(norm, None, ctx)
-                        if linked is None:
-                            continue
-                        eid, score, cands = linked
-                        rows.append((url, int(c["chunk_index"]), pos, norm,
-                                     eid, round(score, 6), cands))
-            yield pd.DataFrame(
-                rows, columns=["url", "chunk_index", "token_pos",
-                               "alias_norm", "entity_id", "link_score",
-                               "entity_id_candidates"],
-            )
+        idx = _index_of(alias_bc)
 
-    return pages.select("url", "html").mapInPandas(run, schema=MENTION_SCHEMA)
+        def rows(url, html):
+            for c in chunk_text(extract_text(html), 1000):
+                ments = idx.detect_mentions(c["text"])
+                if not ments:
+                    continue
+                ctx = embed_text(c["text"])
+                for pos, norm, _ in ments:
+                    linked = idx.link(norm, None, ctx)
+                    if linked is None:
+                        continue
+                    eid, score, cands = linked
+                    yield (url, int(c["chunk_index"]), pos, norm, eid,
+                           round(score, 6), cands)
+
+        return rows
+
+    return arrow_rows(pages, ["url", "html"], MENTION_SCHEMA, make_rows)

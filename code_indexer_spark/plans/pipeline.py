@@ -3,8 +3,9 @@
 
 One declarative DataFrame job per stage; each output's Python kernels
 (extract + rules + link, or extract + chunk + embed) run in one fused
-mapInPandas pass over pages, so page html crosses the Arrow boundary
-once per output. The reference's thread-pool lifecycle
+Arrow row stage over pages (``util.arrow_rows``, the single batch
+boundary every Python pass shares), so page html crosses the Arrow
+boundary once per output. The reference's thread-pool lifecycle
 (smart_indexer.py:277-640 -> high_throughput_processor.py:262-802) is
 replaced by Spark stage parallelism — SURVEY.md §3.1 mapping — plus one
 driver thread in run_pipeline: Spark runs one action at a time per
@@ -39,13 +40,16 @@ EDGE_SALT_BUCKETS = 16
 
 def read_pages(spark: SparkSession, kg_dir: str,
                for_udf: bool = False) -> DataFrame:
-    """Read the pages table. With for_udf=True, ensure at least
-    defaultParallelism input partitions for the CPU-bound Arrow-UDF
-    stages. Spark's file scan already targets
-    spark.sql.files.minPartitionNum = defaultParallelism splits, so the
-    repartition (a shuffle of the raw html bytes) only triggers when the
-    scan genuinely can't split enough — at cluster scale the table is
-    partitioned by days(warc_ts)/bucket(url) and this is a no-op."""
+    """Read the pages table. With for_udf=True, repartition to
+    defaultParallelism when the scan plans fewer than
+    max(2, defaultParallelism // 2) splits, for the CPU-bound Arrow-UDF
+    stages. The probe counts splits, not non-empty partitions: parquet
+    splits on row-group boundaries, so a file of one row group is read
+    by the one split holding its midpoint and the other splits come
+    back empty (a 2,000-page fixture file at local[4]: 5 splits, all
+    rows in one). At cluster scale the table is partitioned by
+    days(warc_ts)/bucket(url) and the repartition (a shuffle of the raw
+    html bytes) never triggers."""
     df = spark.read.parquet(f"{kg_dir}/pages.parquet")
     if for_udf:
         want = spark.sparkContext.defaultParallelism

@@ -34,8 +34,9 @@ def get_spark(
     shuffle_partitions: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    # default: one task slot per CPU this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS
     )

@@ -16,8 +16,9 @@ Spark mapping:
   rows (triple_id / point_id), so replays after failure dedupe at read
   time exactly like the reference's content-id check.
 
-The SAME batch stages run inside the stream — extract/chunk/triples are
-narrow mapInPandas transforms, legal in Structured Streaming.
+The SAME batch stages run inside the stream — the fused chunks and
+triples stages are narrow Arrow row stages (``util.arrow_rows``), legal
+in Structured Streaming.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from ..operators.extract import chunk_stage, extract_stage
+from ..operators.extract import build_chunks_fused
 from ..operators.triples import extract_triples_fused
 
 PAGES_SCHEMA = StructType(
@@ -59,7 +60,8 @@ def stream_triples(pages_stream: DataFrame, alias_bc) -> DataFrame:
 
 
 def stream_chunks(pages_stream: DataFrame) -> DataFrame:
-    return chunk_stage(extract_stage(pages_stream))
+    """Streaming embedded chunks — identical stage as batch."""
+    return build_chunks_fused(pages_stream)
 
 
 def run_available_now(stream_df: DataFrame, out_dir: str,

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def free_local_checkpoint(df: DataFrame) -> None:
@@ -26,3 +29,31 @@ def free_local_checkpoint(df: DataFrame) -> None:
     except Exception:
         pass
 
+
+def arrow_rows(df: DataFrame, in_cols: list[str], schema: StructType,
+               make_row_fn: Callable[[], Callable[..., Iterable[tuple]]],
+               ) -> DataFrame:
+    """The one Arrow batch boundary of every Python row stage.
+
+    Selects ``in_cols`` and runs a single ``mapInPandas``. On a
+    partition's first batch the worker calls ``make_row_fn()`` (kernel
+    imports, broadcast lookups), so an empty partition builds no worker
+    state; the returned function takes one input row's ``in_cols``
+    values positionally and returns zero or more output tuples in
+    ``schema`` field order. Each output batch is built from
+    ``schema.fieldNames()``, so no stage keeps a column list by hand.
+    """
+    names = schema.fieldNames()
+
+    def run(batches):
+        import pandas as pd
+
+        row_fn = None
+        for pdf in batches:
+            row_fn = row_fn or make_row_fn()
+            yield pd.DataFrame(
+                [out for vals in zip(*(pdf[c] for c in in_cols))
+                 for out in row_fn(*vals)],
+                columns=names)
+
+    return df.select(*in_cols).mapInPandas(run, schema=schema)

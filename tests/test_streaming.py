@@ -51,6 +51,32 @@ def test_stream_triples_equals_batch(spark, kg_small, pages_stream_dir,
     assert spark.read.parquet(out).count() == len(expect)
 
 
+def test_stream_chunks_equal_fused_batch(spark, pages_stream_dir, tmp_path):
+    """Streamed chunks carry the batch table's embedding and vbucket:
+    the stream runs build_chunks_fused, not a staged chain without
+    them."""
+    from code_indexer_spark.operators.extract import build_chunks_fused
+    from code_indexer_spark.streaming.watch import (
+        PAGES_SCHEMA, read_pages_stream, run_available_now, stream_chunks)
+
+    out = str(tmp_path / "chunks_out")
+    run_available_now(
+        stream_chunks(read_pages_stream(spark, pages_stream_dir,
+                                        max_files_per_trigger=1)),
+        out, str(tmp_path / "chunks_ck"))
+
+    def rows(df):
+        return sorted((r.point_id, tuple(r.embedding), r.vbucket)
+                      for r in df.select("point_id", "embedding",
+                                         "vbucket").collect())
+
+    got = rows(spark.read.parquet(out))
+    expect = rows(build_chunks_fused(
+        spark.read.schema(PAGES_SCHEMA).parquet(pages_stream_dir)))
+    assert len(expect) > 1000
+    assert got == expect
+
+
 def test_stream_new_file_incremental(spark, kg_small, pages_stream_dir,
                                      tmp_path):
     """New file after a drain -> only its rows are appended (S10/K4

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
+from collections import defaultdict
 from contextlib import redirect_stdout
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -46,6 +48,25 @@ REPORT_QUERIES = [
 ]
 
 
+# session-global counters in a plan's text: expression ids (u#2318L),
+# exchange plan ids ([plan_id=19]) and RDD ids (MapPartitionsRDD[113])
+_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+
+
+def normalize_ids(plan: str) -> str:
+    """Renumber each kind of session-global id from 1 in order of first
+    appearance, so a plan's text depends on its shape, not on how many
+    plans the session built before it. Equal ids stay equal and
+    distinct ids stay distinct within the plan."""
+    seen: dict[str, dict[str, str]] = defaultdict(dict)
+
+    def renumber(m: re.Match) -> str:
+        ids = seen[m.group(1)]
+        return m.group(1) + ids.setdefault(m.group(2), str(len(ids) + 1))
+
+    return _SESSION_IDS.sub(renumber, plan)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("explain", master="local[4]")
@@ -59,8 +80,10 @@ def main() -> None:
         "`PushedFilters` (predicates reached the parquet scan),",
         "`ReadSchema` (column pruning), `BroadcastHashJoin` (small dims",
         "never shuffle the big side), `WholeStageCodegen` spans (JVM-",
-        "side expression work), `ArrowEvalPython`/`MapInPandas` only in",
-        "the deliberate vectorized-UDF stages.",
+        "side expression work), `MapInPandas` only in the Arrow row",
+        "stages (`util.arrow_rows`). Expression, exchange and",
+        "RDD ids are renumbered from 1 within each plan, so regenerating",
+        "this file changes only the plans whose shape changed.",
         "",
     ]
     for name in REPORT_QUERIES:
@@ -68,7 +91,8 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
+        out += [f"## {name}", "", "```", normalize_ids(buf.getvalue().rstrip()),
+                "```", ""]
 
     with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
