@@ -414,20 +414,16 @@ def q_rerank_funnel(spark, sf_dir):
 
 
 def q_reconcile(spark, sf_dir):
-    """U4: full-outer hash reconcile of 'indexed' vs 'current' snapshots."""
-    d = _t(spark, sf_dir, "documents")
-    indexed = d.filter(F.col("doc_id") % 3 != 0).select(
-        "doc_id", F.md5("text").alias("h_idx"))
-    current = d.filter(F.col("doc_id") % 7 != 0).select(
-        "doc_id", F.md5("text").alias("h_cur"))
-    j = indexed.join(current, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("h_idx").isNull(), F.lit("added"))
-        .when(F.col("h_cur").isNull(), F.lit("deleted"))
-        .when(F.col("h_idx") == F.col("h_cur"), F.lit("same"))
-        .otherwise(F.lit("changed"))
-    )
-    return j.select("doc_id", status.alias("status")).filter(
+    """U4: full-outer hash reconcile of 'indexed' vs 'current' snapshots
+    (sources.tables.reconcile_status, the work list run_incremental
+    consumes); keys whose status is not 'same'."""
+    from code_indexer_spark.sources.tables import reconcile_status
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.md5("text").alias("h"))
+    indexed = d.filter(F.col("doc_id") % 3 != 0)
+    current = d.filter(F.col("doc_id") % 7 != 0)
+    return reconcile_status(indexed, current, ["doc_id"]).filter(
         F.col("status") != "same")
 
 
@@ -1038,40 +1034,40 @@ def q_norm_surface(spark, sf_dir):
         "doc_id", norm_surface(F.substring("text", 1, 100)).alias("norm"))
 
 
-def q_graph_deps(spark, sf_dir):
-    """G3 depth-2 dependencies: supplier -> part -> co-supplier."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    seeds = li.filter(F.col("l_suppkey") % 50 == 0)
+def _cosupplier_edges(spark, sf_dir):
+    """(src, dst) co-supplier graph: two suppliers are linked when they
+    supply the same part. Symmetric, no self-loops."""
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_suppkey").distinct()
     return (
-        seeds.alias("a")
-        .join(li.alias("b"), F.col("a.l_partkey") == F.col("b.l_partkey"))
-        .filter(F.col("a.l_suppkey") != F.col("b.l_suppkey"))
-        .select(F.col("a.l_suppkey").alias("suppkey"),
-                F.col("b.l_suppkey").alias("co_suppkey"))
-        .distinct()
-        .orderBy("suppkey", "co_suppkey")
-    )
-
-
-def q_graph_impact(spark, sf_dir):
-    """G4 BFS (depth<=2, min dist) over the co-supplier graph from seed 0."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    edges = (
         li.alias("a").join(li.alias("b"),
                            F.col("a.l_partkey") == F.col("b.l_partkey"))
         .filter(F.col("a.l_suppkey") != F.col("b.l_suppkey"))
         .select(F.col("a.l_suppkey").alias("src"),
                 F.col("b.l_suppkey").alias("dst")).distinct()
     )
-    d1 = edges.filter(F.col("src") == 0).select("dst").distinct()
-    d2 = (
-        d1.alias("f").join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
-        .select(F.col("e.dst").alias("dst")).distinct()
-        .join(d1, "dst", "left_anti")
-        .filter(F.col("dst") != 0)
+
+
+def q_graph_deps(spark, sf_dir):
+    """G3 depth-2 dependencies: supplier -> part -> co-supplier."""
+    return (
+        _cosupplier_edges(spark, sf_dir).filter(F.col("src") % 50 == 0)
+        .select(F.col("src").alias("suppkey"),
+                F.col("dst").alias("co_suppkey"))
+        .orderBy("suppkey", "co_suppkey")
     )
-    return d1.select("dst", F.lit(1).alias("dist")).unionByName(
-        d2.select("dst", F.lit(2).alias("dist"))).orderBy("dist", "dst")
+
+
+def q_graph_impact(spark, sf_dir):
+    """G4 BFS (depth<=2, min dist) over the co-supplier graph from seed
+    0. impact_bfs walks reversed edges; the graph is symmetric, so that
+    is the same walk."""
+    from code_indexer_spark.operators.graph import impact_bfs
+
+    edges = _cosupplier_edges(spark, sf_dir)
+    seeds = edges.filter(F.col("src") == 0).select(F.col("src").alias("node"))
+    return impact_bfs(edges, seeds, max_depth=2).select(
+        F.col("node").alias("dst"), "dist").orderBy("dist", "dst")
 
 
 def q_pagerank(spark, sf_dir):
@@ -1079,16 +1075,8 @@ def q_pagerank(spark, sf_dir):
     graph (per-round rounding makes the recurrence engine-portable)."""
     from code_indexer_spark.operators.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey").distinct()
-    edges = (
-        li.alias("a").join(li.alias("b"),
-                           F.col("a.l_partkey") == F.col("b.l_partkey"))
-        .filter(F.col("a.l_suppkey") != F.col("b.l_suppkey"))
-        .select(F.col("a.l_suppkey").alias("src"),
-                F.col("b.l_suppkey").alias("dst")).distinct()
-    )
-    return pagerank(edges).orderBy(F.desc("pr"), "node").limit(100)
+    return pagerank(_cosupplier_edges(spark, sf_dir)).orderBy(
+        F.desc("pr"), "node").limit(100)
 
 
 def q_smart_context(spark, sf_dir):
@@ -1200,7 +1188,7 @@ def kg_time_range(spark, sf_dir):
         build_raw_triples, read_pages)
 
     kg = _kg_dir(sf_dir)
-    pages = read_pages(spark, kg, for_udf=True).filter(
+    pages = read_pages(spark, kg).filter(
         (F2.col("warc_ts") >= F2.lit("2025-01-01"))
         & (F2.col("warc_ts") < F2.lit("2025-01-02")))
     return build_raw_triples(spark, kg, pages=pages)
@@ -1274,6 +1262,15 @@ def _kg_graph(spark, sf_dir):
         F.col("obj").alias("dst"))
 
 
+def _top_nodes(g, col, n):
+    """The n nodes of edge column ``col`` with the most edges, ties
+    broken by name: the deterministic seed rule of the kg_* graph
+    queries. One column, ``node``."""
+    return (g.groupBy(F.col(col).alias("node"))
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .orderBy(F.desc("deg"), "node").limit(n).select("node"))
+
+
 def kg_graph_impact(spark, sf_dir):
     """G4 impact BFS over the real KG edges table (rows-only — the
     upstream triples come from the Arrow-UDF extract pipeline): seeds
@@ -1285,10 +1282,8 @@ def kg_graph_impact(spark, sf_dir):
     from code_indexer_spark.operators.graph import impact_bfs
 
     g = _kg_graph(spark, sf_dir)
-    seeds = (g.groupBy(F.col("dst").alias("node"))
-             .agg(F.count(F.lit(1)).alias("deg"))
-             .orderBy(F.desc("deg"), "node").limit(3).select("node"))
-    return impact_bfs(g, seeds, max_depth=3).orderBy("dist", "node")
+    return impact_bfs(g, _top_nodes(g, "dst", 3), max_depth=3).orderBy(
+        "dist", "node")
 
 
 def kg_pagerank(spark, sf_dir):
@@ -1327,10 +1322,7 @@ def kg_smart_context(spark, sf_dir):
     # 1-row bounded collect (the documented driver-side discipline):
     # joining the limit-1 aggregate into three branches would recompute
     # it per branch; a literal filter is narrow and pushes down
-    target = (g.groupBy(F.col("dst").alias("node"))
-              .agg(F.count(F.lit(1)).alias("deg"))
-              .orderBy(F.desc("deg"), "node").limit(1)
-              .collect()[0]["node"])
+    target = _top_nodes(g, "dst", 1).first()["node"]
     definitions = (trip.filter(F.col("subj") == target)
                    .select(F.col("src_url").alias("file"),
                            F.col("subj").alias("symbol")).distinct())
@@ -1360,12 +1352,8 @@ def kg_call_chains(spark, sf_dir):
     from code_indexer_spark.operators.graph import call_chains
 
     g = _kg_graph(spark, sf_dir).localCheckpoint(eager=True)
-    src = (g.groupBy(F.col("src").alias("node"))
-           .agg(F.count(F.lit(1)).alias("deg"))
-           .orderBy(F.desc("deg"), "node").limit(1).collect()[0]["node"])
-    dst = (g.groupBy(F.col("dst").alias("node"))
-           .agg(F.count(F.lit(1)).alias("deg"))
-           .orderBy(F.desc("deg"), "node").limit(1).collect()[0]["node"])
+    src = _top_nodes(g, "src", 1).first()["node"]
+    dst = _top_nodes(g, "dst", 1).first()["node"]
     return call_chains(g, src, dst, max_depth=4, max_paths=20000)
 
 

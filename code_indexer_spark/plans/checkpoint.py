@@ -122,49 +122,55 @@ def run_triples_checkpointed(
     mapping.persist().count()
 
     completed = 0
-    for pid in range(partitions):
-        if pid in done:
-            continue
-        if fail_after is not None and completed >= fail_after:
-            raise RuntimeError(f"simulated crash after {completed} slices")
-        t0 = time.monotonic()
-        # Observation on both ends of the slice: rows_in counts the
-        # pages entering the UDF stage, rows_out the triples written —
-        # both ride the ONE write job instead of a count() pre-scan and
-        # a re-read of the just-written parquet (2 extra jobs per slice,
-        # 32 per run at 16 slices; same mechanism as run_pipeline)
-        from pyspark.sql import Observation
+    try:
+        for pid in range(partitions):
+            if pid in done:
+                continue
+            if fail_after is not None and completed >= fail_after:
+                raise RuntimeError(
+                    f"simulated crash after {completed} slices")
+            t0 = time.monotonic()
+            # Observation on both ends of the slice: rows_in counts the
+            # pages entering the UDF stage, rows_out the triples
+            # written — both ride the ONE write job instead of a count()
+            # pre-scan and a re-read of the just-written parquet (2
+            # extra jobs per slice, 32 per run at 16 slices; same
+            # mechanism as run_pipeline)
+            from pyspark.sql import Observation
 
-        obs_in, obs_out = Observation(), Observation()
-        slice_pages = pages.filter(F.col("work_pid") == pid).observe(
-            obs_in, F.count(F.lit(1)).alias("n"))
-        raw = extract_triples_fused(slice_pages, alias_bc)
-        # hash-repartition + sortWithinPartitions, NOT a global sort: a
-        # range sort samples its child for partition boundaries, which
-        # re-executes the whole extract UDF stage — every slice was
-        # being extracted TWICE (caught by the Observation row counts
-        # double-counting). Hash assignment + in-file order are both
-        # deterministic, so output bytes stay resume-stable.
-        out = (
-            apply_canonical(raw, mapping)
-            .repartition(4, F.col("triple_id"))
-            .sortWithinPartitions("triple_id")
-            .observe(obs_out, F.count(F.lit(1)).alias("n"))
-        )
-        part_path = os.path.join(triples_dir, f"work_pid={pid}")
-        out.write.mode("overwrite").parquet(part_path)
-        rows_in, rows_out = obs_in.get["n"], obs_out.get["n"]
-        append_checkpoint(
-            out_dir,
-            stage="triples",
-            partition_id=pid,
-            status="done",
-            rows_in=rows_in,
-            rows_out=rows_out,
-            wall_ms=int((time.monotonic() - t0) * 1000),
-            input_fingerprint=fingerprint,
-            committed_at=datetime.now(timezone.utc).isoformat(),
-        )
-        completed += 1
-    mapping.unpersist()
+            obs_in, obs_out = Observation(), Observation()
+            slice_pages = pages.filter(F.col("work_pid") == pid).observe(
+                obs_in, F.count(F.lit(1)).alias("n"))
+            raw = extract_triples_fused(slice_pages, alias_bc)
+            # hash-repartition + sortWithinPartitions, NOT a global
+            # sort: a range sort samples its child for partition
+            # boundaries, which re-executes the whole extract UDF stage
+            # — every slice was being extracted TWICE (caught by the
+            # Observation row counts double-counting). Hash assignment
+            # + in-file order are both deterministic, so output bytes
+            # stay resume-stable.
+            out = (
+                apply_canonical(raw, mapping)
+                .repartition(4, F.col("triple_id"))
+                .sortWithinPartitions("triple_id")
+                .observe(obs_out, F.count(F.lit(1)).alias("n"))
+            )
+            part_path = os.path.join(triples_dir, f"work_pid={pid}")
+            out.write.mode("overwrite").parquet(part_path)
+            rows_in, rows_out = obs_in.get["n"], obs_out.get["n"]
+            append_checkpoint(
+                out_dir,
+                stage="triples",
+                partition_id=pid,
+                status="done",
+                rows_in=rows_in,
+                rows_out=rows_out,
+                wall_ms=int((time.monotonic() - t0) * 1000),
+                input_fingerprint=fingerprint,
+                committed_at=datetime.now(timezone.utc).isoformat(),
+            )
+            completed += 1
+    finally:
+        # a crash between slices must not leave the mapping cached
+        mapping.unpersist()
     return triples_dir

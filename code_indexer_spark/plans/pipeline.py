@@ -16,7 +16,7 @@ on the caller's thread.
 
 Partitioning at scale (SURVEY.md §7.1 step 7):
 - pages: days(warc_ts) + bucket(url) (Iceberg spec; here the parquet
-  layout is the fixture's natural row order and we repartition on read);
+  layout is the fixture's natural row order, read as the scan plans it);
 - chunks: vbucket (2-bit vector quantization prefix — the reference's
   own vector-space partitioning, vector_quantizer.py:129-155);
 - edges: salted head-entity key — `salt = pmod(xxhash64(src_url), 16)`
@@ -38,24 +38,8 @@ from ..operators.triples import (
 EDGE_SALT_BUCKETS = 16
 
 
-def read_pages(spark: SparkSession, kg_dir: str,
-               for_udf: bool = False) -> DataFrame:
-    """Read the pages table. With for_udf=True, repartition to
-    defaultParallelism when the scan plans fewer than
-    max(2, defaultParallelism // 2) splits, for the CPU-bound Arrow-UDF
-    stages. The probe counts splits, not non-empty partitions: parquet
-    splits on row-group boundaries, so a file of one row group is read
-    by the one split holding its midpoint and the other splits come
-    back empty (a 2,000-page fixture file at local[4]: 5 splits, all
-    rows in one). At cluster scale the table is partitioned by
-    days(warc_ts)/bucket(url) and the repartition (a shuffle of the raw
-    html bytes) never triggers."""
-    df = spark.read.parquet(f"{kg_dir}/pages.parquet")
-    if for_udf:
-        want = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < max(2, want // 2):
-            df = df.repartition(want)
-    return df
+def read_pages(spark: SparkSession, kg_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{kg_dir}/pages.parquet")
 
 
 def read_alias(spark: SparkSession, kg_dir: str) -> DataFrame:
@@ -69,15 +53,14 @@ def read_entities(spark: SparkSession, kg_dir: str) -> DataFrame:
 def build_chunks(spark: SparkSession, kg_dir: str) -> DataFrame:
     """pages -> embedded chunks table (the reference's vector points),
     via the fused one-pass UDF stage."""
-    return build_chunks_fused(read_pages(spark, kg_dir, for_udf=True))
+    return build_chunks_fused(read_pages(spark, kg_dir))
 
 
 def build_raw_triples(spark: SparkSession, kg_dir: str,
                       pages: DataFrame | None = None) -> DataFrame:
     """html -> raw triples via the fused one-pass UDF stage (see
     operators.triples.extract_triples_fused)."""
-    pages = pages if pages is not None else read_pages(spark, kg_dir,
-                                                       for_udf=True)
+    pages = pages if pages is not None else read_pages(spark, kg_dir)
     alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
     return extract_triples_fused(pages, alias_bc)
 
@@ -85,7 +68,7 @@ def build_raw_triples(spark: SparkSession, kg_dir: str,
 def build_mentions(spark: SparkSession, kg_dir: str) -> DataFrame:
     """html -> linked mentions via the fused one-pass UDF stage."""
     alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
-    pages = read_pages(spark, kg_dir, for_udf=True)
+    pages = read_pages(spark, kg_dir)
     return mentions_fused(pages, alias_bc)
 
 
@@ -188,7 +171,7 @@ def run_incremental(
     file's old points even when the new parse emits none)."""
     from ..sources.tables import reconcile_status
 
-    pages = read_pages(spark, kg_dir, for_udf=True)
+    pages = read_pages(spark, kg_dir)
     current_index = pages.select("url", F.md5(F.col("html")).alias("h"))
     status = reconcile_status(indexed_index, current_index, ["url"])
     work = status.filter(F.col("status").isin("added", "changed")) \

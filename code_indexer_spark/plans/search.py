@@ -44,20 +44,6 @@ def _query_vec_lit(query_text: str):
     return F.array(*[F.lit(float(x)) for x in v])
 
 
-# The reference's filtered-search over-fetch bands
-# (temporal_search_service.py:265-293): requested k -> candidate
-# multiplier. Small k with a selective filter needs the widest net.
-_OVERFETCH_BANDS = ((5, 20), (10, 15), (20, 10))
-_OVERFETCH_DEFAULT = 5
-
-
-def overfetch_multiplier(k: int) -> int:
-    for cap, mult in _OVERFETCH_BANDS:
-        if k <= cap:
-            return mult
-    return _OVERFETCH_DEFAULT
-
-
 def semantic_search(
     chunks: DataFrame,
     query_text: str,

@@ -10,7 +10,7 @@ Reference parity (SURVEY.md §2.1):
 - S2 incremental scan  <- find_modified_files(since_ts)
   (/root/reference/src/code_indexer/indexing/file_finder.py:307-314);
 - S3 deleted detection <- find_deleted_files
-  (file_finder.py:341-355) = left_anti join;
+  (file_finder.py:341-355): reconcile_status' 'deleted' rows;
 - S6 upsert sink       <- upsert_points + orphan cleanup
   (storage/filesystem_vector_store.py:1015-1416, orphans :1148-1241):
   MERGE INTO target USING source ON key WHEN MATCHED UPDATE
@@ -50,15 +50,6 @@ def incremental_read(spark: SparkSession, path: str, ts_col: str,
     comparison on the partition/sort column, so Catalyst turns it into
     partition pruning + row-group skipping (no full scan)."""
     return spark.read.parquet(path).filter(F.col(ts_col) > F.lit(watermark))
-
-
-def deleted_keys(indexed: DataFrame, current: DataFrame,
-                 key_cols: list[str]) -> DataFrame:
-    """S3/U1: keys present in the indexed snapshot but gone from the
-    current one — left_anti join (shuffle on key, broadcast if small)."""
-    return indexed.select(*key_cols).distinct().join(
-        current.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-    )
 
 
 def merge_upsert(target: DataFrame, source: DataFrame,

@@ -76,3 +76,15 @@ def test_chunks_write_failure_propagates(spark, kg_small, tmp_path,
             F.raise_error(F.lit("chunks boom")).cast("string")))
     with pytest.raises(Exception, match="chunks boom"):
         pipeline.run_pipeline(spark, kg_small, str(tmp_path))
+
+
+def test_build_chunks_reads_pages_as_scanned(spark, kg_small, tmp_path):
+    """A pages table of one split feeds the chunk stage as scanned: the
+    plan has no round-robin shuffle of the page html."""
+    pages = str(tmp_path / "pages.parquet")
+    spark.read.parquet(f"{kg_small}/pages.parquet").limit(20).coalesce(1) \
+        .write.parquet(pages)
+    assert spark.read.parquet(pages).rdd.getNumPartitions() == 1
+    plan = pipeline.build_chunks(spark, str(tmp_path)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan

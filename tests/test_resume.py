@@ -56,6 +56,23 @@ def test_kill_resume_identical(spark, kg_small, tmp_path):
         == rows(build_canonical_triples(spark, kg_small))
 
 
+def test_crash_unpersists_mapping(spark, kg_small, tmp_path, monkeypatch):
+    """A crash between slices leaves the canonical mapping uncached."""
+    from code_indexer_spark.plans import checkpoint
+
+    real, mappings = checkpoint.canonical_mapping, []
+
+    def recording_mapping(entities):
+        mappings.append(real(entities))
+        return mappings[-1]
+
+    monkeypatch.setattr(checkpoint, "canonical_mapping", recording_mapping)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        checkpoint.run_triples_checkpointed(
+            spark, kg_small, str(tmp_path), partitions=4, fail_after=1)
+    assert len(mappings) == 1 and not mappings[0].is_cached
+
+
 def test_checkpoint_rows_have_lineage(spark, kg_small, tmp_path):
     from code_indexer_spark.plans.checkpoint import run_triples_checkpointed
 

@@ -9,7 +9,7 @@ from code_indexer_spark.functions.columns import (
     identifiers, norm_surface, point_id, rrf_term, snippet, triple_id,
 )
 from code_indexer_spark.sources.tables import (
-    deleted_keys, incremental_read, merge_upsert, merge_upsert_clean_orphans,
+    incremental_read, merge_upsert, merge_upsert_clean_orphans,
 )
 
 
@@ -32,13 +32,6 @@ def test_merge_clean_orphans_scoped_delete(spark):
     got = {(r.doc, r.chunk, r.v) for r in merge_upsert_clean_orphans(
         target, source, ["doc"]).collect()}
     assert got == {(10, 0, "a2"), (20, 0, "c"), (20, 1, "d")}
-
-
-def test_deleted_keys_left_anti(spark):
-    indexed = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
-    current = spark.createDataFrame([(2,), (3,)], ["k"])
-    got = {r.k for r in deleted_keys(indexed, current, ["k"]).collect()}
-    assert got == {1}
 
 
 def test_incremental_read_watermark(spark, tmp_path):

@@ -46,7 +46,7 @@ spark = get_spark("scaling", master="local[{cores}]",
                   shuffle_partitions="{parts}")
 spark.sparkContext.setLogLevel("ERROR")
 kg = {kg!r}
-pages = read_pages(spark, kg, for_udf=True)
+pages = read_pages(spark, kg)
 n_pages = pages.count()
 alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg))
 

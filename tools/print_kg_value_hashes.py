@@ -21,7 +21,7 @@ def main():
     import __spark_entry__ as e
     from code_indexer_spark.session import get_spark
 
-    spark = get_spark("kg-value-hashes", master="local[8]")
+    spark = get_spark("kg-value-hashes")
     spark.sparkContext.setLogLevel("ERROR")
     # every rows-only queries() entry (the 13 kg_* Arrow-UDF paths) —
     # keep in sync with tests/test_kg_graph.py::KG_VALUE_GOLDENS
