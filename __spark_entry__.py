@@ -228,22 +228,17 @@ def q_embedding_dup_pairs(spark, sf_dir):
 
 def _emb_corpus(spark, sf_dir):
     """embeddings + planted near-duplicates: every 5th vector gets a
-    copy (vec_id+100000) with a deterministic ±10% per-component
-    rational perturbation (cos ≈ 0.998 to its source; the fixture's
-    random-pair max is 0.44) — known duplicates for the near-dup
-    operators to find, mirroring _corpus for text dedup."""
+    copy (vec_id+100000) perturbed by similarity.planted_queries
+    (cos ≈ 0.998 to its source; the fixture's random-pair max is 0.44)
+    — known duplicates for the near-dup operators to find, mirroring
+    _corpus for text dedup."""
+    from code_indexer_spark.operators.similarity import planted_queries
+
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    # two-step projection: the lambda must see the ORIGINAL vec_id (a
-    # same-select alias of vec_id+100000 would capture the new value)
-    pert = emb.filter(F.col("vec_id") % 5 == 0).select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x, i: x * (1.0 + 0.1 * (
-                (F.pmod(F.col("vec_id") + i, F.lit(7)) - 3) / 3.0)),
-        ).alias("embedding"),
-    ).select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
+    pert = planted_queries(emb.filter(F.col("vec_id") % 5 == 0)).select(
+        (F.col("query_id") + 100000).alias("vec_id"),
+        F.col("query_vec").alias("embedding"))
     return emb.unionByName(pert)
 
 
@@ -271,24 +266,26 @@ def q_embedding_dup_pairs_lsh(spark, sf_dir):
     return embedding_dup_pairs_lsh(_emb_corpus(spark, sf_dir), threshold=0.9)
 
 
+def _ann_queries(emb, n=5):
+    """(query_id, query_vec): the embeddings with vec_id < n, each
+    probing for its own neighbors."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
 def q_ann_topk(spark, sf_dir):
     from code_indexer_spark.operators.similarity import brute_force_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return brute_force_topk(emb, queries, k=10)
+    return brute_force_topk(emb, _ann_queries(emb), k=10)
 
 
 def q_ann_lsh(spark, sf_dir):
     from code_indexer_spark.operators.similarity import lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return lsh_topk(emb, queries, k=10)
+    return lsh_topk(emb, _ann_queries(emb), k=10)
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -297,10 +294,7 @@ def q_ann_ivf(spark, sf_dir):
     from code_indexer_spark.operators.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_topk(emb, queries, k=10)
+    return ivf_topk(emb, _ann_queries(emb), k=10)
 
 
 def q_ann_recall(spark, sf_dir):
@@ -311,10 +305,7 @@ def q_ann_recall(spark, sf_dir):
     from code_indexer_spark.operators.similarity import recall_report
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return recall_report(emb, queries, k=10)
+    return recall_report(emb, _ann_queries(emb, 20), k=10)
 
 
 def q_rrf_fusion(spark, sf_dir):

@@ -12,7 +12,9 @@ DuckDB oracle computes the exact same values):
               (bucket_pairs) the Jaccard, SimHash and embedding pairs
               (K5 in SURVEY.md §2.5; all JVM-side: F.md5, no Python)
 - SimHash:    md5-hex-parity bit votes -> per-bit majority
-- embedding:  cosine-threshold near-dup pairs over array<float>
+- embedding:  cosine-threshold near-dup pairs over array<float>;
+              crossJoin or banded-LSH candidates, one verify step
+              (similarity.pair_cosine)
 
 Scale notes: every operator here is a shuffle on a *content-derived*
 key (hash / shingle / band), so it parallelizes by data, never by
@@ -340,20 +342,24 @@ def embedding_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding",
                         threshold: float = 0.5) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a, id_b, sim) — brute-force
-    O(n²) baseline; the LSH/bucketed scale path is operators/similarity.
+    O(n²) baseline; embedding_dup_pairs_lsh below is the scale path."""
+    from .similarity import normed
 
-    Norms are computed ONCE per row before the join (not per pair) —
-    cuts ~2/3 of the per-pair array work."""
-    from .similarity import _dot, _norm as norm
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                   norm(F.col(vec_col)).alias("na"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                   norm(F.col(vec_col)).alias("nb"))
-    dot = _dot(F.col("va"), F.col("vb"))
+    pairs = normed(emb, id_col, vec_col, "a").crossJoin(
+        normed(emb, id_col, vec_col, "b"))
+    return _cosine_above(pairs.filter(F.col("id_a") < F.col("id_b")),
+                         threshold)
+
+
+def _cosine_above(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The verify step of both embedding near-dup operators: candidate
+    pairs of two ``similarity.normed`` sides (norms computed once per
+    row, not per pair) -> (id_a, id_b, sim) with the rounded cosine at
+    or above ``threshold``."""
+    from .similarity import pair_cosine
+
     return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(dot / (F.col("na") * F.col("nb")), 4))
+        pairs.withColumn("sim", pair_cosine())
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -374,37 +380,25 @@ def embedding_dup_pairs_lsh(emb: DataFrame, id_col: str = "vec_id",
     get exact cosine rescoring, so precision is exact; only recall is
     approximate (tests pin it against the brute-force oracle).
 
-    Shuffle shape: the band explode is narrow; the self-join shuffles
-    O(n·bands) slim (id, band, bucket) rows on (band, bucket); the
-    distinct candidate set is O(near-dups); vectors re-join by id for
-    rescoring. No stage is O(n²).
+    Shuffle shape: the band posexplode is narrow (the minhash_bands
+    form); the self-join shuffles O(n·bands) slim (id, band, bucket)
+    rows on (band, bucket); the distinct candidate set is
+    O(near-dups); vectors re-join by id for rescoring. No stage is
+    O(n²).
     """
-    from .similarity import _dot, _norm as norm, lsh_bucket_expr
+    from .similarity import lsh_bucket_expr, normed
 
     bands = emb.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                lsh_bucket_expr(vec_col, planes_per_band,
-                                plane_offset=b * planes_per_band)
-                .alias("bucket"),
-            )
-            for b in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+        F.posexplode(F.array(*[
+            lsh_bucket_expr(vec_col, planes_per_band,
+                            plane_offset=b * planes_per_band)
+            for b in range(n_bands)])).alias("band", "bucket"))
     cand = bucket_pairs(bands, "id", ["band", "bucket"]).distinct()
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                    norm(F.col(vec_col)).alias("na"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                    norm(F.col(vec_col)).alias("nb"))
-    dot = _dot(F.col("va"), F.col("vb"))
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .withColumn("sim", F.round(dot / (F.col("na") * F.col("nb")), 4))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
+    return _cosine_above(
+        cand.join(normed(emb, id_col, vec_col, "a"), "id_a")
+        .join(normed(emb, id_col, vec_col, "b"), "id_b"),
+        threshold)
 
 
 def ngram_dup_spans(docs: DataFrame, id_col: str = "doc_id",

@@ -125,11 +125,8 @@ def fuse_average(joined: DataFrame, score_a: str = "score_a",
 def dedup_by_key(df: DataFrame, key_cols: list[str], score_col: str,
                  tiebreak_col: str) -> DataFrame:
     """A8/A9: keep the best-scoring row per key (window dedup)."""
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(score_col), F.asc(tiebreak_col)
-    )
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        add_rank(df, key_cols, score_col, tiebreak_col, "_rn")
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )

@@ -3,7 +3,6 @@
 The reference's SCIP SQLite graph queries (scip/query/primitives.py)
 become joins / depth-bounded iterative self-joins:
 
-- neighbors / find_references (G1/G2): filter + join + limit
 - transitive deps (G3):  depth-bounded loop of frontier joins
 - impact BFS (G4):       frontier.join(edges).subtract(visited), min dist
 - path enumeration (G5): path-array extension join with
@@ -20,17 +19,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def neighbors(edges: DataFrame, nodes: DataFrame | None = None,
-              direction: str = "out") -> DataFrame:
-    """1-hop adjacency, optionally joined to node metadata (G1/G2)."""
-    e = edges
-    if direction == "in":
-        e = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return e if nodes is None else e.join(
-        nodes.withColumnRenamed("id", "dst"), "dst"
-    )
 
 
 def transitive_closure(edges: DataFrame, max_depth: int) -> DataFrame:
@@ -180,7 +168,7 @@ def smart_context(definitions: DataFrame, dependents: DataFrame,
 
     Returns (file, relevance_score, n_symbols, read_priority).
     """
-    from pyspark.sql import Window
+    from .fusion import add_rank
 
     def tagged(df: DataFrame, rel: str, score: float) -> DataFrame:
         return df.select(
@@ -202,8 +190,8 @@ def smart_context(definitions: DataFrame, dependents: DataFrame,
         .orderBy(F.desc("relevance_score"), F.asc("file"))
         .limit(limit)
     )
-    w = Window.orderBy(F.desc("relevance_score"), F.asc("file"))
-    return per_file.withColumn("read_priority", F.row_number().over(w))
+    return add_rank(per_file, [], "relevance_score", "file",
+                    "read_priority")
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,

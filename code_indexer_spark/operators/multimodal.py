@@ -126,11 +126,11 @@ FEATURES_SCHEMA = StructType(
 _DECODE_ERRORS = (ValueError, NotImplementedError, zlib.error, struct.error)
 
 
-def image_features_stage(assets: DataFrame,
-                         deterministic_fake: bool = True) -> DataFrame:
+def image_features_stage(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content — the real
     Arrow batch shape a GPU/CPU decode stage would use (batched bytes
-    in, fixed-dim float vectors out).
+    in, fixed-dim float vectors out). Non-PNG formats get
+    ``decode_image``'s md5-seeded fake features (codecs absent).
 
     Per-asset decode failures (truncated/interlaced/16-bit PNGs — a
     100 TB crawl always carries some) must NOT fail the task: the row
@@ -139,8 +139,7 @@ def image_features_stage(assets: DataFrame,
 
     def rows(url, path, fmt, c):
         try:
-            feats = decode_image(
-                c, deterministic_fake=deterministic_fake).tolist()
+            feats = decode_image(c, deterministic_fake=True).tolist()
             err = None
         except _DECODE_ERRORS as exc:
             feats, err = None, f"{type(exc).__name__}: {exc}"
@@ -243,16 +242,14 @@ RESIZED_SCHEMA = StructType(
 
 
 def resize_images_stage(assets: DataFrame, width: int = 224,
-                        height: int = 224,
-                        deterministic_fake: bool = True) -> DataFrame:
+                        height: int = 224) -> DataFrame:
     """Resize as a 1:1 Arrow row stage: binary in, binary out plus
     (width, height) metadata — the batch shape a PIL/opencv resize
     would use. PNG content takes the REAL path: stdlib decode →
     nearest-neighbor resample → stdlib re-encode (kernel/png.py).
-    Other formats keep the stub contract (codecs absent): with
-    deterministic_fake=True the fake output is md5(content | w | h)-
-    seeded bytes, so the stage stays deterministic and the downstream
-    schema/partitioning is real either way. A PNG-magic asset whose
+    Other formats keep the stub contract (codecs absent): the output
+    is md5(content | w | h)-seeded bytes, so the stage stays
+    deterministic and the downstream schema/partitioning is real. A PNG-magic asset whose
     body is corrupt (truncated/interlaced/16-bit) survives as a row
     with content=NULL and the exception in ``decode_error`` — one bad
     asset must never fail the task."""
@@ -277,14 +274,9 @@ def resize_images_stage(assets: DataFrame, width: int = 224,
                 except _DECODE_ERRORS as exc:
                     out_bytes = None
                     err = f"{type(exc).__name__}: {exc}"
-            elif deterministic_fake:
+            else:
                 out_bytes = hashlib.md5(
                     (c or b"") + f"|{width}x{height}".encode()).digest()
-            else:
-                raise NotImplementedError(
-                    "non-PNG resize requires system codecs (not in "
-                    "this container); deterministic_fake=True "
-                    "exercises the plumbing path")
             return [(url, path, fmt, width, height, out_bytes, err)]
 
         return rows
@@ -306,8 +298,7 @@ FRAMES_SCHEMA = StructType(
 
 
 def sample_frames_stage(assets: DataFrame, fps: float = 0.5,
-                        max_frames: int = 16,
-                        deterministic_fake: bool = True) -> DataFrame:
+                        max_frames: int = 16) -> DataFrame:
     """Video frame sampling as a ROW-EXPANDING Arrow row stage: one
     input video row -> up to max_frames frame rows at 1/fps-second
     spacing. The decode is STUBBED (no ffmpeg here): fake duration =
@@ -318,12 +309,6 @@ def sample_frames_stage(assets: DataFrame, fps: float = 0.5,
     table by bucket(url) so one hot site cannot pin an executor."""
 
     def make_rows():
-        if not deterministic_fake:
-            raise NotImplementedError(
-                "frame sampling requires ffmpeg/av (not in this "
-                "container); deterministic_fake=True exercises the "
-                "plumbing path")
-
         def rows(url, path, content):
             c = content or b""
             duration_s = (len(c) % 120) + 1

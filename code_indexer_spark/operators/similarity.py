@@ -11,6 +11,12 @@
   infeasible; the bucket join shuffles O(n·probes) rows instead of
   O(n·q).
 
+Every top-k and near-dup operator generates candidates its own way
+(crossJoin, bucket join, inverted-list join) and verifies them with one
+step: ``normed`` projects each side's norm once per row and
+``rounded_cosine`` scores the pairs; top-k ranks through
+``fusion.add_rank`` (``_topk``).
+
 Hyperplanes are derived from md5 bytes of (plane, dim) — deterministic,
 no stored model, reproducible on any engine.
 """
@@ -34,6 +40,69 @@ def _norm(c):
 
 def cosine_expr(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def rounded_cosine(a, b, norm_a=None, norm_b=None):
+    """round(cos(a, b), 4) — the one score every cosine verifier ranks
+    and thresholds on; 4 decimals so a cross-engine last-ulp difference
+    cannot flip a rank. Pass the norm columns of ``normed`` to compute
+    each norm once per row instead of once per candidate pair."""
+    dot = _dot(a, b)
+    norm_a = _norm(a) if norm_a is None else norm_a
+    norm_b = _norm(b) if norm_b is None else norm_b
+    return F.round(dot / (norm_a * norm_b), 4)
+
+
+def normed(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """(id_<side>, v_<side>, n_<side>): each vector with its norm,
+    computed once per row before any candidate join. Candidate pairs
+    join a side "a" to a side "b" and are scored by ``pair_cosine``."""
+    return df.select(F.col(id_col).alias(f"id_{side}"),
+                     F.col(vec_col).alias(f"v_{side}"),
+                     _norm(F.col(vec_col)).alias(f"n_{side}"))
+
+
+def pair_cosine():
+    """``rounded_cosine`` of the a and b sides of two ``normed``
+    projections joined into candidate pairs."""
+    return rounded_cosine(F.col("v_a"), F.col("v_b"),
+                          F.col("n_a"), F.col("n_b"))
+
+
+def _topk(cand: DataFrame, k: int, qid_col: str) -> DataFrame:
+    """The verify step of every top-k operator: score the (a = query,
+    b = data vector) candidate pairs, then keep each query's top k by
+    sim desc, neighbor id asc (cross-engine determinism).
+
+    Returns (query_id, neighbor_id, rank, sim)."""
+    from .fusion import add_rank
+
+    return (
+        add_rank(cand.withColumn("sim", pair_cosine()), ["id_a"], "sim",
+                 "id_b")
+        .filter(F.col("rank") <= k)
+        .select(F.col("id_a").alias(qid_col),
+                F.col("id_b").alias("neighbor_id"), "rank", "sim")
+    )
+
+
+def _hash_sample(emb: DataFrame, id_col: str, vec_col: str, h,
+                 n: int) -> DataFrame:
+    """(centroid_id, centroid_vec): the n rows smallest by hash column
+    ``h`` (ties by id), numbered from 1 — a deterministic uniform sample
+    selected by TakeOrderedAndProject (per-partition top-n, n-row merge
+    on the driver): no global sort, no count() pre-action. row_number
+    ranks only the n sampled rows, not the full table."""
+    sample = (
+        emb.select(F.col(id_col), F.col(vec_col), h.alias("_h"))
+        .orderBy("_h", id_col)
+        .limit(n)
+    )
+    return sample.select(
+        F.row_number().over(Window.orderBy("_h", id_col))
+        .alias("centroid_id"),
+        F.col(vec_col).alias("centroid_vec"),
+    )
 
 
 def assign_nearest_lists(df, vcol, centroids, top=1, out_col="list_id",
@@ -95,25 +164,11 @@ def brute_force_topk(
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
 ) -> DataFrame:
-    """(query_id, neighbor_id, rank, sim) — exact top-k by cosine;
-    ties broken by neighbor id for cross-engine determinism."""
-    joined = queries.withColumn("_qn", _norm(F.col(qvec_col))).crossJoin(
-        emb.select(F.col(id_col).alias("neighbor_id"),
-                   F.col(vec_col).alias("_v"),
-                   _norm(F.col(vec_col)).alias("_vn"))
-    ).withColumn(
-        "sim",
-        F.round(_dot(F.col(qvec_col), F.col("_v"))
-                / (F.col("_qn") * F.col("_vn")), 4),
-    )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "neighbor_id", "rank", "sim")
-    )
+    """(query_id, neighbor_id, rank, sim) — exact top-k by cosine over
+    every (query, vector) pair; ties broken by neighbor id."""
+    cand = normed(queries, qid_col, qvec_col, "a").crossJoin(
+        normed(emb, id_col, vec_col, "b"))
+    return _topk(cand, k, qid_col)
 
 
 N_PLANES = 8
@@ -176,51 +231,28 @@ def ivf_topk(
     Scale path beyond LSH: assign every vector to its nearest centroid
     (broadcast centroid table, JVM-side dot products), then probe only
     the n_probe nearest lists per query — the scan shrinks by
-    ~n_centroids/n_probe. Centroids are the n_centroids hash-smallest
-    rows by xxhash64(id): a deterministic uniform sample selected by
-    TakeOrderedAndProject (per-partition top-k, k-row merge on the
-    driver) — no global sort, no count() pre-action, reproducible with
-    no iterative training job; at 100 TB the same plan holds with
-    KMeans-refined centroids swapped in.
+    ~n_centroids/n_probe. Centroids are the n_centroids md5(id)-smallest
+    rows (``_hash_sample``), reproducible with no iterative training
+    job; at 100 TB the same plan holds with KMeans-refined centroids
+    swapped in. Norms are computed once per row, not once per
+    candidate pair.
 
     Returns (query_id, neighbor_id, rank, sim) — approximate: recall
     depends on n_probe/n_centroids (rows-only check, like ann_lsh).
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
     if centroids is None:
         # md5 (not xxhash64) sample order: portable — the DuckDB oracle
         # reproduces the exact centroid set and ids
-        sample = (
-            emb.select(F.col(id_col), F.col(vec_col),
-                       F.md5(F.col(id_col).cast("string")).alias("_h"))
-            .orderBy("_h", id_col)
-            .limit(n_centroids)
-        )
-        # row_number ranks only the n_centroids sampled rows (a k-row
-        # relation), not the full table — negligible by construction
-        centroids = sample.select(
-            F.row_number().over(Window.orderBy("_h", id_col))
-            .alias("centroid_id"),
-            F.col(vec_col).alias("centroid_vec"),
-        )
+        centroids = _hash_sample(
+            emb, id_col, vec_col, F.md5(F.col(id_col).cast("string")),
+            n_centroids)
 
     assigned = assign_nearest_lists(
-        emb.select(id_col, vec_col), vec_col, centroids, top=1)
+        normed(emb, id_col, vec_col, "b"), "v_b", centroids, top=1)
     probed = assign_nearest_lists(
-        queries.select("query_id", "query_vec"), "query_vec", centroids,
+        normed(queries, "query_id", "query_vec", "a"), "v_a", centroids,
         top=n_probe)
-
-    cand = probed.join(assigned, "list_id")
-    sim = cosine_expr(F.col("query_vec"), F.col(vec_col))
-    wk = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        cand.withColumn("sim", F.round(sim, 4))
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "sim")
-    )
+    return _topk(probed.join(assigned, "list_id"), k, "query_id")
 
 
 def kmeans_centroids(
@@ -233,8 +265,9 @@ def kmeans_centroids(
     """Spherical-KMeans centroid refinement as a DataFrame job —
     (centroid_id, centroid_vec), unit-normalized.
 
-    Init = the n_centroids xxhash64-smallest rows — a deterministic
-    uniform sample, keyed differently from ivf_topk's default md5
+    Init = the n_centroids xxhash64-smallest rows (``_hash_sample``) —
+    a deterministic uniform sample, keyed differently from ivf_topk's
+    default md5
     sample on purpose (refined centroids should not start from the
     exact rows the oracle-portable default already covers); each Lloyd
     round is: broadcast centroids →
@@ -249,17 +282,10 @@ def kmeans_centroids(
     boundary ties. Cost per round: one broadcast join + one shuffle of
     (cluster, dim) partial sums — at 10^12 rows this is the standard
     IVF training job, run once per index build."""
-    init = (
-        emb.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"),
-                   F.col(id_col))
-        .orderBy("_h", id_col)
-        .limit(n_centroids)
-    )
-    centroids = init.select(
-        F.row_number().over(Window.orderBy("_h", id_col))
-        .alias("centroid_id"),
-        F.col(vec_col).cast("array<double>").alias("centroid_vec"),
-    )
+    centroids = _hash_sample(
+        emb, id_col, vec_col, F.xxhash64(F.col(id_col)), n_centroids,
+    ).withColumn("centroid_vec",
+                 F.col("centroid_vec").cast("array<double>"))
     for _ in range(iters):
         assigned = assign_nearest_lists(
             emb.select(F.col(id_col), F.col(vec_col)), vec_col, centroids,
@@ -311,28 +337,15 @@ def lsh_topk(
     O(n_planes+1 buckets per query), not O(n). The reference protects
     filtered recall the same way by over-fetching 2-15x
     (filesystem_vector_store.py:2968-2970)."""
-    e = emb.select(F.col(id_col).alias("neighbor_id"),
-                   F.col(vec_col).alias("_v"),
-                   _norm(F.col(vec_col)).alias("_vn"),
-                   lsh_bucket_expr(vec_col, n_planes, dim).alias("bucket"))
-    qb = lsh_bucket_expr(qvec_col, n_planes, dim)
+    e = normed(emb, id_col, vec_col, "b").withColumn(
+        "bucket", lsh_bucket_expr("v_b", n_planes, dim))
+    qb = lsh_bucket_expr("v_a", n_planes, dim)
     probes = [qb]
     if n_probe_bits >= 1:
         probes += [qb.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
-    q = queries.withColumn(
-        "bucket", F.explode(F.array(*probes))
-    ).withColumn("_qn", _norm(F.col(qvec_col)))
-    joined = q.join(e, "bucket").withColumn(
-        "sim",
-        F.round(_dot(F.col(qvec_col), F.col("_v"))
-                / (F.col("_qn") * F.col("_vn")), 4),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "neighbor_id", "rank", "sim")
-    )
+    q = normed(queries, qid_col, qvec_col, "a").withColumn(
+        "bucket", F.explode(F.array(*probes)))
+    return _topk(q.join(e, "bucket"), k, qid_col)
 
 
 def planted_queries(emb: DataFrame, id_col: str = "vec_id",

@@ -176,6 +176,8 @@ def tfidf_top_terms(docs: DataFrame, id_col: str = "doc_id",
     Scores are stabilized with floor(x*1e6+0.5)/1e6 (engine-identical
     rounding) and ranked on the ROUNDED value, ties by term — the same
     cross-engine discipline as quality_score/ann_topk."""
+    from .fusion import add_rank
+
     toks = docs.select(F.col(id_col).alias("id"),
                        F.explode(tokens_expr(text_col)).alias("term"))
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -193,9 +195,8 @@ def tfidf_top_terms(docs: DataFrame, id_col: str = "doc_id",
                     * 1000000.0 + 0.5) / 1000000.0,
         )
     )
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("term"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        add_rank(scored, ["id"], "score", "term")
         .filter(F.col("rank") <= k)
         .select("id", "term", "score", "rank")
     )
@@ -246,6 +247,8 @@ def bm25_topk(docs: DataFrame, query_terms: list[str],
     Returns (id, score, rank)."""
     from collections import Counter
 
+    from .fusion import add_rank
+
     weights = Counter(t.lower() for t in query_terms)
     terms = sorted(weights)
     if dl_col is not None:
@@ -292,9 +295,7 @@ def bm25_topk(docs: DataFrame, query_terms: list[str],
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
-    w = Window.orderBy(F.desc("score"), F.asc("id"))
-    return topk.withColumn("rank", F.row_number().over(w)) \
-        .select("id", "score", "rank")
+    return add_rank(topk, [], "score", "id").select("id", "score", "rank")
 
 
 def domain_cap(docs: DataFrame, group_col: str = "source",

@@ -33,7 +33,7 @@ from ..functions.columns import snippet as snippet_expr
 from ..kernel.embed import embed_text
 from ..operators.filters import build_filter, detect_filter_conflicts
 from ..operators.fusion import fuse_rrf
-from ..operators.similarity import cosine_expr, lsh_bucket_expr
+from ..operators.similarity import lsh_bucket_expr, rounded_cosine
 
 
 def _query_vec_lit(query_text: str):
@@ -116,8 +116,7 @@ def semantic_search(
             qb[:1] if widen else qb[:2]))
     # 'high': full scan (exact)
 
-    scored = cand.withColumn("score", F.round(
-        cosine_expr(F.col(vec_col), qv), 4))
+    scored = cand.withColumn("score", rounded_cosine(F.col(vec_col), qv))
     if score_threshold is not None:
         scored = scored.filter(F.col("score") >= score_threshold)
     if filter_spec:

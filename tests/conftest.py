@@ -27,7 +27,7 @@ def kg_small() -> str:
 def spark():
     from code_indexer_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions="8")
+    s = get_spark("tests", shuffle_partitions="8")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
