@@ -1223,32 +1223,27 @@ def kg_reconcile_incremental(spark, sf_dir):
 
 def kg_nodes(spark, sf_dir):
     from code_indexer_spark.plans.pipeline import (
-        build_canonical_triples, build_nodes, cached_canonical_mapping,
-        read_entities)
+        build_nodes, cached_canonical_mapping, read_entities)
 
     kg = _kg_dir(sf_dir)
-    return build_nodes(build_canonical_triples(spark, kg),
-                       read_entities(spark, kg),
+    return build_nodes(kg_triples(spark, sf_dir), read_entities(spark, kg),
                        cached_canonical_mapping(spark, kg))
 
 
 def kg_edges(spark, sf_dir):
-    from code_indexer_spark.plans.pipeline import (
-        build_canonical_triples, build_edges)
+    from code_indexer_spark.plans.pipeline import build_edges
 
-    return build_edges(build_canonical_triples(spark, _kg_dir(sf_dir)))
+    return build_edges(kg_triples(spark, sf_dir))
 
 
-def _kg_graph(spark, sf_dir):
-    """(src, dst) adjacency from the REAL materialized-edges shape:
-    build_edges output read back the way a consumer reads the salted
-    table — src recovered by stripping the skew salt,
-    split(salted_key, '#')[0] (plans/pipeline.py build_edges)."""
-    from code_indexer_spark.plans.pipeline import (
-        build_canonical_triples, build_edges)
+def _kg_graph(triples):
+    """(src, dst) adjacency of canonical triples in the REAL
+    materialized-edges shape: build_edges output read back the way a
+    consumer reads the salted table — src recovered by stripping the
+    skew salt, split(salted_key, '#')[0] (plans/pipeline.py build_edges)."""
+    from code_indexer_spark.plans.pipeline import build_edges
 
-    edges = build_edges(build_canonical_triples(spark, _kg_dir(sf_dir)))
-    return edges.select(
+    return build_edges(triples).select(
         F.split("salted_key", "#")[0].alias("src"),
         F.col("obj").alias("dst"))
 
@@ -1272,7 +1267,7 @@ def kg_graph_impact(spark, sf_dir):
     """
     from code_indexer_spark.operators.graph import impact_bfs
 
-    g = _kg_graph(spark, sf_dir)
+    g = _kg_graph(kg_triples(spark, sf_dir))
     return impact_bfs(g, _top_nodes(g, "dst", 3), max_depth=3).orderBy(
         "dist", "node")
 
@@ -1285,7 +1280,7 @@ def kg_pagerank(spark, sf_dir):
     a consumer would read."""
     from code_indexer_spark.operators.graph import pagerank
 
-    return (pagerank(_kg_graph(spark, sf_dir), iters=3)
+    return (pagerank(_kg_graph(kg_triples(spark, sf_dir)), iters=3)
             .orderBy(F.desc("pr"), "node").limit(20))
 
 
@@ -1301,15 +1296,13 @@ def kg_smart_context(spark, sf_dir):
     kg_graph_impact (max in-degree, tie-break by name) so the target
     is deterministic on the seed-fixed fixtures."""
     from code_indexer_spark.operators.graph import smart_context
-    from code_indexer_spark.plans.pipeline import build_canonical_triples
 
     # trip feeds three join branches (definitions/dependents/references)
-    # and g two (target degree + in-neighbors): checkpoint both once so
-    # the Arrow-UDF extract subtree runs once, not per branch — same
-    # reasoning as kg_call_chains' checkpoint of g
-    trip = build_canonical_triples(
-        spark, _kg_dir(sf_dir)).localCheckpoint(eager=True)
-    g = _kg_graph(spark, sf_dir).localCheckpoint(eager=True)
+    # and g, built from trip, two (target degree + in-neighbors):
+    # checkpoint both once so the Arrow-UDF extract runs once, not per
+    # branch — same reasoning as kg_call_chains' checkpoint of g
+    trip = kg_triples(spark, sf_dir).localCheckpoint(eager=True)
+    g = _kg_graph(trip).localCheckpoint(eager=True)
     # 1-row bounded collect (the documented driver-side discipline):
     # joining the limit-1 aggregate into three branches would recompute
     # it per branch; a literal filter is narrow and pushes down
@@ -1342,7 +1335,7 @@ def kg_call_chains(spark, sf_dir):
     result is the exact full enumeration (13 paths, pinned)."""
     from code_indexer_spark.operators.graph import call_chains
 
-    g = _kg_graph(spark, sf_dir).localCheckpoint(eager=True)
+    g = _kg_graph(kg_triples(spark, sf_dir)).localCheckpoint(eager=True)
     src = _top_nodes(g, "src", 1).first()["node"]
     dst = _top_nodes(g, "dst", 1).first()["node"]
     return call_chains(g, src, dst, max_depth=4, max_paths=20000)

@@ -38,10 +38,6 @@ def _norm(c):
                               lambda acc, x: acc + x))
 
 
-def cosine_expr(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def rounded_cosine(a, b, norm_a=None, norm_b=None):
     """round(cos(a, b), 4) — the one score every cosine verifier ranks
     and thresholds on; 4 decimals so a cross-engine last-ulp difference
@@ -106,7 +102,7 @@ def _hash_sample(emb: DataFrame, id_col: str, vec_col: str, h,
 
 
 def assign_nearest_lists(df, vcol, centroids, top=1, out_col="list_id",
-                         round_sims: int | None = 4):
+                         round_sims: bool = True):
     """Shuffle-free nearest-centroid assignment — a narrow map.
 
     Packs the (small, n_centroids-row) centroid table into ONE row via
@@ -123,19 +119,23 @@ def assign_nearest_lists(df, vcol, centroids, top=1, out_col="list_id",
     that shuffle dwarfs the probe join it enables.
 
     top=1 appends ``out_col``; top>1 explodes the per-row top-n list
-    (sort desc / slice / explode — all narrow). ``round_sims`` rounds
-    sims before ranking so a cross-engine last-ulp difference cannot
-    flip a boundary vector's list (None = rank raw sims, used by
-    KMeans where centroid means are already rounded)."""
-    sim_of = lambda c: cosine_expr(F.col(vcol), c["centroid_vec"])  # noqa: E731
-    if round_sims is not None:
-        raw = sim_of
-        sim_of = lambda c: F.round(raw(c), round_sims)  # noqa: E731
+    (sort desc / slice / explode — all narrow). ``round_sims`` scores
+    with ``rounded_cosine`` so a cross-engine last-ulp difference cannot
+    flip a boundary vector's list (False = rank raw sims, used by
+    KMeans where centroid means are already rounded). Norms are computed
+    once per row and once per centroid, not per (row, centroid) pair."""
+    def sim_of(c):
+        v, cv = F.col(vcol), c["centroid_vec"]
+        if round_sims:
+            return rounded_cosine(v, cv, F.col("_n"), c["centroid_norm"])
+        return _dot(v, cv) / (F.col("_n") * c["centroid_norm"])
+
     packed = F.broadcast(centroids.agg(
-        F.array_sort(
-            F.collect_list(F.struct("centroid_id", "centroid_vec")))
+        F.array_sort(F.collect_list(F.struct(
+            "centroid_id", "centroid_vec",
+            _norm(F.col("centroid_vec")).alias("centroid_norm"))))
         .alias("_cents")))
-    j = df.crossJoin(packed)
+    j = df.withColumn("_n", _norm(F.col(vcol))).crossJoin(packed)
     sims = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -289,7 +289,7 @@ def kmeans_centroids(
     for _ in range(iters):
         assigned = assign_nearest_lists(
             emb.select(F.col(id_col), F.col(vec_col)), vec_col, centroids,
-            top=1, out_col="centroid_id", round_sims=None,
+            top=1, out_col="centroid_id", round_sims=False,
         ).select("centroid_id", F.col(vec_col).alias("_v"))
         sums = (
             assigned.select(

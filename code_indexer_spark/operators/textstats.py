@@ -481,10 +481,13 @@ def deterministic_sample(df: DataFrame, key_col: str,
     batches sample consistently with history. The sampling every
     training-data pipeline needs but Spark's df.sample() can't give
     (seed-and-partitioning dependent)."""
-    threshold = int(fraction * (1 << 32))
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
-               16, 10).cast("long")
-    return df.filter(h < threshold)
+    return df.filter(_key_hash32(key_col) < int(fraction * (1 << 32)))
+
+
+def _key_hash32(key_col: str):
+    """md5(key)'s first 8 hex chars as a uniform 32-bit integer."""
+    return F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
+                  16, 10).cast("long")
 
 
 def corpus_mix(docs: DataFrame, fractions: dict[str, float],
@@ -494,8 +497,7 @@ def corpus_mix(docs: DataFrame, fractions: dict[str, float],
     rates (e.g. downsample English, keep all low-resource languages) —
     the corpus-mixing step of an LLM data pipeline as one filter.
     Strata absent from `fractions` are dropped (explicit mix only)."""
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
-               16, 10).cast("long")
+    h = _key_hash32(key_col)
     cond = F.lit(False)
     for stratum, frac in sorted(fractions.items()):
         cond = cond | (

@@ -17,6 +17,12 @@ fcntl-locked JSON; resume decision smart_indexer.py:277-640):
   so a re-run of a half-written slice is idempotent — the directory is
   simply overwritten with identical bytes (MERGE-on-Iceberg at scale).
 
+Each slice is ``plans.pipeline.build_canonical_triples`` over that
+slice's pages, so it shares the session's alias broadcast and persisted
+canonical mapping with every other triples path. The mapping stays
+persisted after a run, finished or crashed, as it does after
+``run_pipeline``; nothing else a run builds stays cached.
+
 Exactness: the final triples table after kill+resume is byte-identical
 to an uninterrupted run (tests/test_resume.py proves it by value-hash).
 """
@@ -29,11 +35,11 @@ import time
 from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from ..operators.canonicalize import apply_canonical, canonical_mapping
-from ..operators.triples import broadcast_alias_rows, extract_triples_fused
-from .pipeline import read_alias, read_entities, read_pages
+# perfbench/worker.py rebinds this name on the module to trace it
+from ..operators.canonicalize import canonical_mapping  # noqa: F401
+from .pipeline import build_canonical_triples, read_pages
 
 WORK_PARTITIONS = 16
 
@@ -117,60 +123,47 @@ def run_triples_checkpointed(
                               ignore_errors=True)
 
     pages = with_work_partition(read_pages(spark, kg_dir), partitions)
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
-    mapping = canonical_mapping(read_entities(spark, kg_dir))
-    mapping.persist().count()
-
     completed = 0
-    try:
-        for pid in range(partitions):
-            if pid in done:
-                continue
-            if fail_after is not None and completed >= fail_after:
-                raise RuntimeError(
-                    f"simulated crash after {completed} slices")
-            t0 = time.monotonic()
-            # Observation on both ends of the slice: rows_in counts the
-            # pages entering the UDF stage, rows_out the triples
-            # written — both ride the ONE write job instead of a count()
-            # pre-scan and a re-read of the just-written parquet (2
-            # extra jobs per slice, 32 per run at 16 slices; same
-            # mechanism as run_pipeline)
-            from pyspark.sql import Observation
-
-            obs_in, obs_out = Observation(), Observation()
-            slice_pages = pages.filter(F.col("work_pid") == pid).observe(
-                obs_in, F.count(F.lit(1)).alias("n"))
-            raw = extract_triples_fused(slice_pages, alias_bc)
-            # hash-repartition + sortWithinPartitions, NOT a global
-            # sort: a range sort samples its child for partition
-            # boundaries, which re-executes the whole extract UDF stage
-            # — every slice was being extracted TWICE (caught by the
-            # Observation row counts double-counting). Hash assignment
-            # + in-file order are both deterministic, so output bytes
-            # stay resume-stable.
-            out = (
-                apply_canonical(raw, mapping)
-                .repartition(4, F.col("triple_id"))
-                .sortWithinPartitions("triple_id")
-                .observe(obs_out, F.count(F.lit(1)).alias("n"))
-            )
-            part_path = os.path.join(triples_dir, f"work_pid={pid}")
-            out.write.mode("overwrite").parquet(part_path)
-            rows_in, rows_out = obs_in.get["n"], obs_out.get["n"]
-            append_checkpoint(
-                out_dir,
-                stage="triples",
-                partition_id=pid,
-                status="done",
-                rows_in=rows_in,
-                rows_out=rows_out,
-                wall_ms=int((time.monotonic() - t0) * 1000),
-                input_fingerprint=fingerprint,
-                committed_at=datetime.now(timezone.utc).isoformat(),
-            )
-            completed += 1
-    finally:
-        # a crash between slices must not leave the mapping cached
-        mapping.unpersist()
+    for pid in range(partitions):
+        if pid in done:
+            continue
+        if fail_after is not None and completed >= fail_after:
+            raise RuntimeError(
+                f"simulated crash after {completed} slices")
+        t0 = time.monotonic()
+        # Observation on both ends of the slice: rows_in counts the pages
+        # entering the UDF stage, rows_out the triples written — both
+        # ride the ONE write job instead of a count() pre-scan and a
+        # re-read of the just-written parquet (2 extra jobs per slice,
+        # 32 per run at 16 slices; same mechanism as run_pipeline)
+        obs_in, obs_out = Observation(), Observation()
+        slice_pages = pages.filter(F.col("work_pid") == pid).observe(
+            obs_in, F.count(F.lit(1)).alias("n"))
+        # hash-repartition + sortWithinPartitions, NOT a global sort: a
+        # range sort samples its child for partition boundaries, which
+        # re-executes the whole extract UDF stage — every slice was
+        # being extracted TWICE (caught by the Observation row counts
+        # double-counting). Hash assignment + in-file order are both
+        # deterministic, so output bytes stay resume-stable.
+        out = (
+            build_canonical_triples(spark, kg_dir, pages=slice_pages)
+            .repartition(4, F.col("triple_id"))
+            .sortWithinPartitions("triple_id")
+            .observe(obs_out, F.count(F.lit(1)).alias("n"))
+        )
+        part_path = os.path.join(triples_dir, f"work_pid={pid}")
+        out.write.mode("overwrite").parquet(part_path)
+        rows_in, rows_out = obs_in.get["n"], obs_out.get["n"]
+        append_checkpoint(
+            out_dir,
+            stage="triples",
+            partition_id=pid,
+            status="done",
+            rows_in=rows_in,
+            rows_out=rows_out,
+            wall_ms=int((time.monotonic() - t0) * 1000),
+            input_fingerprint=fingerprint,
+            committed_at=datetime.now(timezone.utc).isoformat(),
+        )
+        completed += 1
     return triples_dir

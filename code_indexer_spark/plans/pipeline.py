@@ -61,39 +61,54 @@ def build_raw_triples(spark: SparkSession, kg_dir: str,
     """html -> raw triples via the fused one-pass UDF stage (see
     operators.triples.extract_triples_fused)."""
     pages = pages if pages is not None else read_pages(spark, kg_dir)
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
-    return extract_triples_fused(pages, alias_bc)
+    return extract_triples_fused(pages, _alias_broadcast(spark, kg_dir))
 
 
 def build_mentions(spark: SparkSession, kg_dir: str) -> DataFrame:
     """html -> linked mentions via the fused one-pass UDF stage."""
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_dir))
-    pages = read_pages(spark, kg_dir)
-    return mentions_fused(pages, alias_bc)
+    return mentions_fused(read_pages(spark, kg_dir),
+                          _alias_broadcast(spark, kg_dir))
 
 
-# (applicationId, kg_dir) -> persisted mapping DataFrame. The mapping
-# is O(#entities) (tiny next to triples) and identical for every query
-# in a session, so compute it once — the reference's collection-
-# metadata cache analog (filesystem_vector_store.py:307-426). Spark's
-# CacheManager cannot serve a repeat call here: canonical_mapping runs
-# its collect (and, above SMALL_ENTITIES, the star loop's checkpoint
-# jobs) before it returns a plan, so only this lookup skips them. applicationId (not id(spark)) so a
-# recycled object address can never serve a stopped session's entry.
-_MAPPING_CACHE: dict[tuple[str, str], DataFrame] = {}
+# (applicationId, kg_dir) -> the session's KG dimensions, each built
+# once: "alias", the alias-dictionary broadcast, and "mapping", the
+# persisted canonical mapping — the reference's per-collection metadata
+# cache analog (filesystem_vector_store.py:307-426). One broadcast keeps
+# repeat triples/mentions plans sameResult (CacheManager can serve
+# them) and each Python worker builds its AliasIndex once. CacheManager
+# cannot serve a repeat mapping: canonical_mapping runs its collect
+# (and, above SMALL_ENTITIES, the star loop's checkpoint jobs) before
+# it returns a plan. applicationId (not id(spark)) so a recycled object
+# address can never serve a stopped session's entry.
+_SESSION_DIMS: dict[tuple[str, str], dict[str, object]] = {}
+
+
+def _session_dim(spark: SparkSession, kg_dir: str, name: str, build):
+    dims = _SESSION_DIMS.setdefault(
+        (spark.sparkContext.applicationId, kg_dir), {})
+    if name not in dims:
+        dims[name] = build()
+    return dims[name]
+
+
+def _alias_broadcast(spark: SparkSession, kg_dir: str):
+    return _session_dim(spark, kg_dir, "alias", lambda: broadcast_alias_rows(
+        spark, read_alias(spark, kg_dir)))
 
 
 def cached_canonical_mapping(spark: SparkSession, kg_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kg_dir)
-    if key not in _MAPPING_CACHE:
+    def build():
         mapping = canonical_mapping(read_entities(spark, kg_dir)).persist()
         mapping.count()
-        _MAPPING_CACHE[key] = mapping
-    return _MAPPING_CACHE[key]
+        return mapping
+
+    return _session_dim(spark, kg_dir, "mapping", build)
 
 
 def build_canonical_triples(spark: SparkSession, kg_dir: str,
                             pages: DataFrame | None = None) -> DataFrame:
+    """pages -> canonical triples: the one builder of every path (batch,
+    checkpointed slices, incremental, the kg_* queries)."""
     raw = build_raw_triples(spark, kg_dir, pages=pages)
     mapping = cached_canonical_mapping(spark, kg_dir)
     return apply_canonical(raw, mapping)
@@ -190,8 +205,8 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
 
     The chunks branch needs only pages, so its write runs on a second
     driver thread while this thread runs the entity/triples chain
-    (mapping -> raw triples -> apply_canonical -> triples, nodes,
-    edges writes). Spark schedules both threads' jobs on the same
+    (mapping -> build_canonical_triples -> triples, nodes, edges
+    writes). Spark schedules both threads' jobs on the same
     executors, so the chunks stage fills the cores that the mapping's
     small, latency-bound jobs leave idle. Only the write action crosses
     the thread: every plan, including the chunks plan, is built here,
@@ -231,10 +246,7 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
 
         entities = read_entities(spark, kg_dir)
         mapping = cached_canonical_mapping(spark, kg_dir)
-
-        raw = build_raw_triples(spark, kg_dir)
-        triples = apply_canonical(raw, mapping)
-        triples.persist()
+        triples = build_canonical_triples(spark, kg_dir).persist()
         try:
             observed(triples, "triples").write.mode("overwrite").parquet(
                 f"{out_dir}/triples.parquet")

@@ -35,20 +35,12 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     # default: one task slot per CPU this process may run on
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS
-    )
-    # Task granularity: aim for >= 4 tasks per core on file scans so the
-    # scan->UDF stages load-balance (stragglers cost <= 1/4 wave instead
-    # of a full wave). Mirrors tasks >> slots on a real cluster.
-    m = re.fullmatch(r"local\[(\d+|\*)\]", master)
-    if m:
-        cores = ((os.cpu_count() or 8) if m.group(1) == "*"
-                 else int(m.group(1)))
-    else:
-        cores = os.cpu_count() or 8
+    # local[N] sizes the scan splits for N cores; local[*] and cluster
+    # masters take engine_conf's default, the usable CPUs
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    cores = int(m.group(1)) if m else None
     b = SparkSession.builder.appName(app_name).master(master) \
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")) \
@@ -66,12 +58,19 @@ def get_spark(
     return b.getOrCreate()
 
 
+def _usable_cpus() -> int:
+    return len(os.sched_getaffinity(0))
+
+
 def engine_conf(shuffle_partitions: str | None = None,
                 cores: int | None = None) -> dict[str, str]:
     """The engine's SQL/Arrow tuning, master-agnostic — shared by
     get_spark (local) and the spark-submit job entry points (cluster),
     so the submitted job gets identical plans."""
-    cores = cores or os.cpu_count() or 8
+    # Task granularity: aim for >= 4 tasks per core on file scans so the
+    # scan->UDF stages load-balance (stragglers cost <= 1/4 wave instead
+    # of a full wave). Mirrors tasks >> slots on a real cluster.
+    cores = cores or _usable_cpus()
     return {
         "spark.sql.shuffle.partitions":
             shuffle_partitions or os.environ.get(

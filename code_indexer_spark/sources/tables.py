@@ -27,6 +27,8 @@ shuffle on the key columns once; AQE handles skewed keys.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -146,22 +148,36 @@ def write_snapshot(df: DataFrame, table_dir: str) -> int:
     complete before the pointer moves, exactly Iceberg's
     snapshot-then-swap metadata commit (the reference's end_indexing
     finalize, filesystem_vector_store.py:602). Returns N."""
-    import os
+    n = _write_next(df, table_dir)
+    _commit(table_dir, n)
+    return n
 
+
+def _current_version(table_dir: str) -> int:
+    """The committed version the ``_VERSION`` pointer names."""
+    with open(os.path.join(table_dir, "_VERSION")) as f:
+        return int(f.read().strip())
+
+
+def _write_next(df: DataFrame, table_dir: str) -> int:
+    """Write ``df`` as the next version's ``v=N`` directory, uncommitted
+    (readers following the pointer do not see it yet). Returns N."""
     os.makedirs(table_dir, exist_ok=True)
     versions = snapshot_versions(table_dir)
     n = (versions[-1] + 1) if versions else 1
     df.write.mode("overwrite").parquet(os.path.join(table_dir, f"v={n}"))
+    return n
+
+
+def _commit(table_dir: str, n: int) -> None:
+    """Atomically flip the ``_VERSION`` pointer to version ``n``."""
     tmp = os.path.join(table_dir, "_VERSION.tmp")
     with open(tmp, "w") as f:
         f.write(str(n))
     os.replace(tmp, os.path.join(table_dir, "_VERSION"))
-    return n
 
 
 def snapshot_versions(table_dir: str) -> list[int]:
-    import os
-
     if not os.path.isdir(table_dir):
         return []
     out = []
@@ -176,22 +192,16 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     """Time-travel read: the committed snapshot the ``_VERSION`` pointer
     names (default), or any retained historical version — Iceberg's
     ``VERSION AS OF`` over the parquet stand-in."""
-    import os
-
     if version is None:
-        with open(os.path.join(table_dir, "_VERSION")) as f:
-            version = int(f.read().strip())
+        version = _current_version(table_dir)
     return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
 
 
 def snapshot_file_stats(table_dir: str, version: int | None = None) -> dict:
     """(n_files, total_bytes) of a snapshot's parquet data files —
     the small-file diagnostic compaction decides on."""
-    import os
-
     if version is None:
-        with open(os.path.join(table_dir, "_VERSION")) as f:
-            version = int(f.read().strip())
+        version = _current_version(table_dir)
     vdir = os.path.join(table_dir, f"v={version}")
     files = [os.path.join(vdir, n) for n in os.listdir(vdir)
              if n.endswith(".parquet")]
@@ -228,29 +238,20 @@ def compact_snapshot(spark: SparkSession, table_dir: str,
     schedule compaction from the writer (single-committer), as Iceberg
     deployments do."""
     import math
-    import os
     import shutil
 
-    with open(os.path.join(table_dir, "_VERSION")) as f:
-        base = int(f.read().strip())
+    base = _current_version(table_dir)
     before = snapshot_file_stats(table_dir, version=base)
     n_files = max(1, math.ceil(before["total_bytes"] / target_bytes))
     df = read_snapshot(spark, table_dir, version=base)
     # write the rewrite dir WITHOUT committing, then check-then-flip
-    versions = snapshot_versions(table_dir)
-    n = (versions[-1] + 1) if versions else 1
-    vdir = os.path.join(table_dir, f"v={n}")
-    df.repartition(n_files).write.mode("overwrite").parquet(vdir)
-    with open(os.path.join(table_dir, "_VERSION")) as f:
-        now = int(f.read().strip())
+    n = _write_next(df.repartition(n_files), table_dir)
+    now = _current_version(table_dir)
     if now != base:
-        shutil.rmtree(vdir, ignore_errors=True)
+        shutil.rmtree(os.path.join(table_dir, f"v={n}"), ignore_errors=True)
         return {"conflict": True, "base": base, "committed": now,
                 "before": before, "target_bytes": target_bytes}
-    tmp = os.path.join(table_dir, "_VERSION.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(n))
-    os.replace(tmp, os.path.join(table_dir, "_VERSION"))
+    _commit(table_dir, n)
     after = snapshot_file_stats(table_dir, version=n)
     return {"conflict": False, "before": before, "after": after,
             "target_bytes": target_bytes}
@@ -262,12 +263,10 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     pointer names — a lagging pointer must stay readable). Returns the
     versions removed. Time travel keeps working for retained versions;
     storage stops growing unboundedly under per-micro-batch commits."""
-    import os
     import shutil
 
     versions = snapshot_versions(table_dir)
-    with open(os.path.join(table_dir, "_VERSION")) as f:
-        current = int(f.read().strip())
+    current = _current_version(table_dir)
     # versions[-0:] would be the WHOLE list — keep_last=0 must mean
     # "keep only the pointer target", not a silent no-op
     keep = (set(versions[-keep_last:]) if keep_last > 0 else set()) \

@@ -88,3 +88,12 @@ def test_build_chunks_reads_pages_as_scanned(spark, kg_small, tmp_path):
     plan = pipeline.build_chunks(spark, str(tmp_path)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" not in plan
+
+
+def test_raw_triples_plans_are_same_result(spark, kg_small):
+    """Repeat builds share the session's alias broadcast, so their
+    plans are sameResult and CacheManager can serve one from the
+    other."""
+    a, b = (pipeline.build_raw_triples(spark, kg_small)._jdf
+            .queryExecution().analyzed() for _ in range(2))
+    assert a.sameResult(b)

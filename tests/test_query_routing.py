@@ -61,7 +61,7 @@ def test_query_calls_credited_code(spark, sf_dir, monkeypatch,
     trip = spark.createDataFrame(
         [("a", "b", "u1")], "subj string, obj string, src_url string")
     monkeypatch.setattr(e, "_kg_dir", lambda d: d)
-    monkeypatch.setattr(e, "_kg_graph", lambda spark, d: g)
+    monkeypatch.setattr(e, "_kg_graph", lambda triples: g)
     monkeypatch.setattr(pipeline, "build_canonical_triples",
                         lambda spark, d: trip)
     monkeypatch.setattr(importlib.import_module(module), attr, routed)

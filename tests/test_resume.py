@@ -56,21 +56,60 @@ def test_kill_resume_identical(spark, kg_small, tmp_path):
         == rows(build_canonical_triples(spark, kg_small))
 
 
-def test_crash_unpersists_mapping(spark, kg_small, tmp_path, monkeypatch):
-    """A crash between slices leaves the canonical mapping uncached."""
-    from code_indexer_spark.plans import checkpoint
+def _count_calls(monkeypatch, module, name) -> list:
+    """Wrap ``module.name`` in every package module that imports it;
+    the returned list grows by one per call."""
+    import sys
 
-    real, mappings = checkpoint.canonical_mapping, []
+    real, calls = getattr(module, name), []
 
-    def recording_mapping(entities):
-        mappings.append(real(entities))
-        return mappings[-1]
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(checkpoint, "canonical_mapping", recording_mapping)
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("code_indexer_spark")
+                and vars(mod).get(name) is real):
+            monkeypatch.setattr(mod, name, counted)
+    return calls
+
+
+def test_crash_keeps_only_the_session_mapping_cached(spark, kg_small,
+                                                     tmp_path, monkeypatch):
+    """A crash between slices leaves no more persisted data than before
+    the run, and the run builds no mapping beside the session's."""
+    from code_indexer_spark.operators import canonicalize
+    from code_indexer_spark.plans import checkpoint, pipeline
+
+    pipeline.cached_canonical_mapping(spark, kg_small)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persisted()
+    mappings = _count_calls(monkeypatch, canonicalize, "canonical_mapping")
     with pytest.raises(RuntimeError, match="simulated crash"):
         checkpoint.run_triples_checkpointed(
             spark, kg_small, str(tmp_path), partitions=4, fail_after=1)
-    assert len(mappings) == 1 and not mappings[0].is_cached
+    assert persisted() == before
+    assert mappings == []
+
+
+def test_one_alias_broadcast_per_session_and_kg_dir(spark, kg_small,
+                                                    tmp_path, monkeypatch):
+    """Raw triples (twice), mentions and a checkpointed run over one
+    kg_dir share one alias broadcast."""
+    import shutil
+
+    from code_indexer_spark.operators import triples
+    from code_indexer_spark.plans import checkpoint, pipeline
+
+    kg = str(tmp_path / "kg")  # a kg_dir this session has not seen
+    shutil.copytree(kg_small, kg)
+    calls = _count_calls(monkeypatch, triples, "broadcast_alias_rows")
+    pipeline.build_raw_triples(spark, kg)
+    pipeline.build_raw_triples(spark, kg)
+    pipeline.build_mentions(spark, kg)
+    checkpoint.run_triples_checkpointed(spark, kg, str(tmp_path / "ck"),
+                                        partitions=2)
+    assert len(calls) == 1
 
 
 def test_checkpoint_rows_have_lineage(spark, kg_small, tmp_path):

@@ -45,3 +45,9 @@ def test_env_overrides_the_default_master(monkeypatch):
     assert _conf(monkeypatch, {"SPARK_GRAFT_CPUS": "2"})["master"] == "local[2]"
     assert _conf(monkeypatch, {"SPARK_GRAFT_MASTER": "local[1]",
                                "SPARK_GRAFT_CPUS": "2"})["master"] == "local[1]"
+
+
+def test_local_star_sizes_splits_from_the_affinity_mask(monkeypatch):
+    conf = _conf(monkeypatch, {"SPARK_GRAFT_MASTER": "local[*]"})
+    assert conf["master"] == "local[*]"
+    assert conf["spark.sql.files.minPartitionNum"] == "12"

@@ -38,9 +38,7 @@ import json, os, sys, time
 sys.path.insert(0, {root!r})
 import pyspark.sql.functions as F
 from code_indexer_spark.session import get_spark
-from code_indexer_spark.plans.pipeline import read_pages, read_alias
-from code_indexer_spark.operators.triples import (
-    broadcast_alias_rows, extract_triples_fused)
+from code_indexer_spark.plans.pipeline import build_raw_triples, read_pages
 
 spark = get_spark("scaling", master="local[{cores}]",
                   shuffle_partitions="{parts}")
@@ -48,16 +46,15 @@ spark.sparkContext.setLogLevel("ERROR")
 kg = {kg!r}
 pages = read_pages(spark, kg)
 n_pages = pages.count()
-alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg))
 
-# Warm-up (untimed): fork + import the Python workers and build the
-# per-worker AliasIndex on a ~2% url-hash sample, using the SAME
-# broadcast the timed run uses.
+# Warm-up (untimed): build the session's alias broadcast, fork + import
+# the Python workers and build the per-worker AliasIndex on a ~2%
+# url-hash sample; the timed run reuses the same broadcast.
 warm = pages.filter(F.pmod(F.xxhash64("url"), F.lit(50)) == 0)
-extract_triples_fused(warm, alias_bc).count()
+build_raw_triples(spark, kg, pages=warm).count()
 
 t0 = time.monotonic()
-n_triples = extract_triples_fused(pages, alias_bc).count()
+n_triples = build_raw_triples(spark, kg, pages=pages).count()
 dt = time.monotonic() - t0
 print(json.dumps(dict(cores={cores}, wall_sec=round(dt, 3),
                       n_pages=n_pages, n_triples=n_triples,
