@@ -26,7 +26,9 @@ Reference analog: content-id dedup + reconcile
 
 from __future__ import annotations
 
-from .hashes import char_shingles, jaccard, lsh_bands, minhash_signature
+from .hashes import (
+    char_shingles, jaccard, lsh_bands, md5_hex, minhash_signature,
+)
 from .nlp import normalize_surface
 
 JACCARD_THRESHOLD = 0.5
@@ -56,11 +58,26 @@ def candidate_pairs(
     entities: list[tuple[str, str, str]]
 ) -> set[tuple[str, str]]:
     """entities: (entity_id, canonical_name, entity_type) -> unordered
-    candidate pairs sharing (entity_type, first_token, band_id, band_key)."""
+    candidate pairs sharing (entity_type, first_token, band_id, band_key).
+
+    Each distinct shingle's NUM_HASHES seeded digests are computed once
+    per call; a name's signature is their element-wise min, the value
+    minhash_signature gives. The memo lives only for this call."""
+    digests: dict[str, list[str]] = {}
+
+    def signature(shingles: set[str]) -> list[str]:
+        if not shingles:
+            return [""] * NUM_HASHES
+        for s in shingles:
+            if s not in digests:
+                digests[s] = [md5_hex(f"{i}|{s}") for i in range(NUM_HASHES)]
+        return list(map(min, zip(*(digests[s] for s in shingles))))
+
     buckets: dict[tuple[str, str, int, str], list[str]] = {}
     for eid, name, etype in entities:
         tok0 = first_token(name)
-        for band_id, band_key in name_bands(name):
+        for band_id, band_key in lsh_bands(signature(name_shingles(name)),
+                                           BANDS):
             buckets.setdefault((etype, tok0, band_id, band_key), []).append(eid)
     pairs: set[tuple[str, str]] = set()
     for ids in buckets.values():

@@ -174,15 +174,21 @@ def cosine(a: np.ndarray, b: np.ndarray) -> float:
 # The reference 2-bit-quantizes the projected vector into a hex directory
 # prefix that IS its storage partitioning (vector_quantizer.py:37-127,
 # fixed range [-2, 2]; rationale docs/architecture.md:336-341). We reuse
-# the idea as a Spark partition/bucket column: the first _BUCKET_DIMS
+# the idea as the chunks table's clustering column: the first _BUCKET_DIMS
 # embedding dims -> 2 bits each -> hex string.
 
-_BUCKET_DIMS = 8  # 16 bits -> 4 hex chars -> 65,536 buckets max
+_BUCKET_DIMS = 8  # 16 bits -> 4 hex chars; 256 reachable (bucket_of)
 _QUANT_LO, _QUANT_HI = -2.0, 2.0
 
 
 def bucket_of(vec: np.ndarray) -> str:
-    """2-bit quantization prefix of a vector -> 4-hex-char bucket key."""
+    """2-bit quantization prefix of a vector -> 4-hex-char bucket key.
+
+    Of the 65,536 keys only 256 are reachable from embed_text: a unit
+    (or zero) vector's components lie in [-1, 1], which quantize to
+    level 1 ([-1, 0)) or 2 ([0, 1)) — level 3 needs a component of
+    exactly 1.0 — so each hex digit (two dims) is one of 5, 6, 9, a.
+    The kg_build input uses 208 of them."""
     out = 0
     for i in range(_BUCKET_DIMS):
         x = float(vec[i])

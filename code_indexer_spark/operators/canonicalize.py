@@ -206,7 +206,13 @@ def canonical_mapping(entities: DataFrame) -> DataFrame:
     by kernel.canon on the driver; a larger one by LSH blocking +
     verified_edges + large_star_small_star. A NULL id, name or type is a
     NULL join key on the Spark path and never pairs, so on the driver
-    path such rows skip the kernel and map to themselves."""
+    path such rows skip the kernel and map to themselves.
+
+    The driver path hands its rows to Spark as one Arrow table, so the
+    plan is a LocalRelation: counting or joining it starts no Python
+    worker (a list would be a pickled parallelize)."""
+    import pyarrow as pa
+
     from ..kernel.canon import canonical_map
 
     rows = (entities.select("entity_id", "canonical_name", "entity_type")
@@ -215,8 +221,10 @@ def canonical_mapping(entities: DataFrame) -> DataFrame:
         # tuple first: `in` on a Row tests its field names, not values
         m = canonical_map([t for t in map(tuple, rows) if None not in t])
         id_type = entities.schema["entity_id"].dataType
+        ids = [r[0] for r in rows]
         return entities.sparkSession.createDataFrame(
-            [(r[0], m.get(r[0], r[0])) for r in rows],
+            pa.table({"entity_id": ids,
+                      "canonical_id": [m.get(i, i) for i in ids]}),
             StructType([StructField("entity_id", id_type),
                         StructField("canonical_id", id_type)]))
     mapping = large_star_small_star(verified_edges(entities))

@@ -101,9 +101,10 @@ def _hash_sample(emb: DataFrame, id_col: str, vec_col: str, h,
     )
 
 
-def assign_nearest_lists(df, vcol, centroids, top=1, out_col="list_id",
+def assign_nearest_lists(df, side, centroids, top=1, out_col="list_id",
                          round_sims: bool = True):
-    """Shuffle-free nearest-centroid assignment — a narrow map.
+    """Shuffle-free nearest-centroid assignment of a ``normed`` side —
+    (id_<side>, v_<side>, n_<side>) — a narrow map.
 
     Packs the (small, n_centroids-row) centroid table into ONE row via
     collect_list and broadcast-nested-loop-joins that row onto ``df``,
@@ -122,20 +123,22 @@ def assign_nearest_lists(df, vcol, centroids, top=1, out_col="list_id",
     (sort desc / slice / explode — all narrow). ``round_sims`` scores
     with ``rounded_cosine`` so a cross-engine last-ulp difference cannot
     flip a boundary vector's list (False = rank raw sims, used by
-    KMeans where centroid means are already rounded). Norms are computed
-    once per row and once per centroid, not per (row, centroid) pair."""
+    KMeans where centroid means are already rounded). Each row's norm is
+    the ``normed`` column n_<side>, also read by the rescore after the
+    probe join, and each centroid's is computed once, never per (row,
+    centroid) pair."""
     def sim_of(c):
-        v, cv = F.col(vcol), c["centroid_vec"]
+        v, n, cv = F.col(f"v_{side}"), F.col(f"n_{side}"), c["centroid_vec"]
         if round_sims:
-            return rounded_cosine(v, cv, F.col("_n"), c["centroid_norm"])
-        return _dot(v, cv) / (F.col("_n") * c["centroid_norm"])
+            return rounded_cosine(v, cv, n, c["centroid_norm"])
+        return _dot(v, cv) / (n * c["centroid_norm"])
 
     packed = F.broadcast(centroids.agg(
         F.array_sort(F.collect_list(F.struct(
             "centroid_id", "centroid_vec",
             _norm(F.col("centroid_vec")).alias("centroid_norm"))))
         .alias("_cents")))
-    j = df.withColumn("_n", _norm(F.col(vcol))).crossJoin(packed)
+    j = df.crossJoin(packed)
     sims = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -248,9 +251,9 @@ def ivf_topk(
             n_centroids)
 
     assigned = assign_nearest_lists(
-        normed(emb, id_col, vec_col, "b"), "v_b", centroids, top=1)
+        normed(emb, id_col, vec_col, "b"), "b", centroids, top=1)
     probed = assign_nearest_lists(
-        normed(queries, "query_id", "query_vec", "a"), "v_a", centroids,
+        normed(queries, "query_id", "query_vec", "a"), "a", centroids,
         top=n_probe)
     return _topk(probed.join(assigned, "list_id"), k, "query_id")
 
@@ -288,9 +291,9 @@ def kmeans_centroids(
                  F.col("centroid_vec").cast("array<double>"))
     for _ in range(iters):
         assigned = assign_nearest_lists(
-            emb.select(F.col(id_col), F.col(vec_col)), vec_col, centroids,
+            normed(emb, id_col, vec_col, "b"), "b", centroids,
             top=1, out_col="centroid_id", round_sims=False,
-        ).select("centroid_id", F.col(vec_col).alias("_v"))
+        ).select("centroid_id", F.col("v_b").alias("_v"))
         sums = (
             assigned.select(
                 "centroid_id",

@@ -17,8 +17,11 @@ on the caller's thread.
 Partitioning at scale (SURVEY.md §7.1 step 7):
 - pages: days(warc_ts) + bucket(url) (Iceberg spec; here the parquet
   layout is the fixture's natural row order, read as the scan plans it);
-- chunks: vbucket (2-bit vector quantization prefix — the reference's
-  own vector-space partitioning, vector_quantizer.py:129-155);
+- chunks: clustered by vbucket (2-bit vector quantization prefix — the
+  reference's own vector-space partitioning, vector_quantizer.py:129-155)
+  with sortWithinPartitions, not a partition column: no shuffle of the
+  widest table, one file per write task, and a vbucket prefix filter
+  still prunes row groups through parquet min/max stats;
 - edges: salted head-entity key — `salt = pmod(xxhash64(src_url), 16)`
   appended to the subject key so one mega-entity ("hub" aliases) cannot
   pin a whole shuffle partition; AQE skew-join handles the residual.
@@ -233,11 +236,12 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
         return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
 
     chunks = build_chunks(spark, kg_dir)
-    # repartition on the partition column first: one file per bucket
-    # instead of (tasks x buckets) tiny files — at 100 TB this is the
-    # difference between 65k and millions of output files
-    chunks_writer = observed(chunks.repartition(F.col("vbucket")), "chunks") \
-        .write.mode("overwrite").partitionBy("vbucket")
+    # clustered, not hive-partitioned: each write task sorts its own rows
+    # by vbucket and writes one file, so the widest table (text +
+    # embedding) is never shuffled, and parquet min/max stats still let a
+    # vbucket prefix filter skip row groups; vbucket stays a string
+    chunks_writer = observed(chunks.sortWithinPartitions("vbucket"),
+                             "chunks").write.mode("overwrite")
     write_chunks = inheritable_thread_target(spark)(
         lambda: chunks_writer.parquet(f"{out_dir}/chunks.parquet"))
 

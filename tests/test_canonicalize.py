@@ -133,6 +133,51 @@ def test_small_entity_table_maps_in_one_job(spark, kg_small):
     assert dict(map(tuple, mapping.collect())) == canonical_map(rows)
 
 
+def test_driver_path_mapping_is_a_local_relation(spark, kg_small):
+    """The driver path hands its rows to Spark as Arrow: the mapping
+    plans as a LocalRelation, not a LogicalRDD of pickled rows."""
+    from code_indexer_spark.operators.canonicalize import canonical_mapping
+    from code_indexer_spark.plans.pipeline import read_entities
+
+    mapping = canonical_mapping(read_entities(spark, kg_small))
+    plan = mapping._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+
+
+def test_kernel_hashes_each_distinct_shingle_once(entities, monkeypatch):
+    """kernel.canon.candidate_pairs computes NUM_HASHES seeded digests
+    per distinct shingle, not per (entity, shingle) occurrence; band
+    keys are md5s of their own, one per (entity, band). The pairs equal
+    those of the per-name minhash_signature."""
+    from code_indexer_spark.kernel import canon, hashes
+
+    ents = [(e["entity_id"], e["canonical_name"], e["entity_type"])
+            for e in entities]
+    buckets = defaultdict(set)
+    for eid, name, etype in ents:
+        for band in canon.name_bands(name):
+            buckets[(etype, canon.first_token(name)) + band].add(eid)
+    want = {(a, b) for ids in buckets.values()
+            for a in ids for b in ids if a < b}
+
+    distinct = set().union(*(canon.name_shingles(n) for _, n, _ in ents))
+    seeds = {str(i) for i in range(canon.NUM_HASHES)}
+    seeded, band_keys = [], []
+    md5_hex = hashes.md5_hex
+
+    def counted(s):
+        head, _, tail = s.partition("|")
+        (seeded if head in seeds and tail in distinct else band_keys
+         ).append(s)
+        return md5_hex(s)
+
+    monkeypatch.setattr(hashes, "md5_hex", counted)
+    monkeypatch.setattr(canon, "md5_hex", counted)
+    assert canon.candidate_pairs(ents) == want
+    assert len(seeded) == canon.NUM_HASHES * len(distinct)
+    assert len(band_keys) == canon.BANDS * len(ents)
+
+
 def test_driver_path_matches_spark_path_on_nulls_and_duplicates(
         spark, monkeypatch):
     """NULL ids, names and types never pair on the Spark path (NULL join

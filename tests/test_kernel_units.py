@@ -64,6 +64,24 @@ def test_embed_deterministic_unit_norm():
     assert len(bucket_of(v1)) == 4
 
 
+def test_bucket_alphabet_of_unit_vectors(kg_small):
+    """Unit vectors quantize each dim to level 1 or 2 only, so every
+    hex digit of a chunk's vbucket is one of 5, 6, 9, a (256 reachable
+    buckets, not 65,536)."""
+    import pyarrow.parquet as pq
+
+    from code_indexer_spark.kernel.chunker import chunk_text
+    from code_indexer_spark.kernel.extract import extract_text
+
+    html = pq.read_table(f"{kg_small}/pages.parquet",
+                         columns=["html"]).column("html").to_pylist()
+    buckets = {bucket_of(embed_text(c["text"])) for h in html
+               for c in chunk_text(extract_text(h), 1000)}
+    assert len(buckets) > 100
+    assert set("".join(buckets)) == set("569a")
+    assert bucket_of(embed_text("")) == "aaaa"  # the zero vector
+
+
 def test_sentence_split():
     assert split_sentences("A b. C d! E?\nF g") == ["A b.", "C d!", "E?", "F g"]
 

@@ -1,10 +1,16 @@
 """run_pipeline end to end on the seed-fixed sf_small fixture: the four
 written tables match their plan builders, the chunks write overlaps the
 triples chain on a second driver thread that carries the caller's job
-tags, and a failure of that background write raises from run_pipeline."""
+tags, a failure of that background write raises from run_pipeline, and
+the chunks table is written clustered by vbucket, without a shuffle."""
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -97,3 +103,65 @@ def test_raw_triples_plans_are_same_result(spark, kg_small):
     a, b = (pipeline.build_raw_triples(spark, kg_small)._jdf
             .queryExecution().analyzed() for _ in range(2))
     assert a.sameResult(b)
+
+
+@pytest.fixture(scope="module")
+def digit_bucket_run(spark, kg_small, tmp_path_factory):
+    """run_pipeline over three sf_small pages whose chunks all fall in
+    all-digit vbuckets (a hive partition directory vbucket=5969 would
+    read back as int). Returns (out_dir, the chunks write's physical
+    plan), the plan taken from the status store right after the run."""
+    from code_indexer_spark.kernel.chunker import chunk_text
+    from code_indexer_spark.kernel.embed import bucket_of, embed_text
+    from code_indexer_spark.kernel.extract import extract_text
+
+    pages = pq.read_table(f"{kg_small}/pages.parquet")
+    keep = [i for i, html in enumerate(pages.column("html").to_pylist())
+            if (chunks := chunk_text(extract_text(html), 1000))
+            and all(bucket_of(embed_text(c["text"])).isdigit()
+                    for c in chunks)][:3]
+    assert len(keep) == 3
+    kg_dir = tmp_path_factory.mktemp("digit_kg")
+    pq.write_table(pages.take(keep), kg_dir / "pages.parquet")
+    for name in ("entities", "alias_dict"):
+        shutil.copy(f"{kg_small}/{name}.parquet", kg_dir)
+    out = str(tmp_path_factory.mktemp("digit_out"))
+    pipeline.run_pipeline(spark, str(kg_dir), out)
+    store = spark._jsparkSession.sharedState().statusStore()
+    plan = _write_execution(store, f"{out}/chunks.parquet") \
+        .physicalPlanDescription()
+    return out, plan
+
+
+def test_chunks_write_is_clustered_without_shuffle(digit_bucket_run):
+    """The chunks write sorts within its partitions: no Exchange moves
+    the chunk rows, and no vbucket=<key> directory is written."""
+    out, plan = digit_bucket_run
+    assert "Exchange" not in plan
+    assert re.search(r"\(\d+\) Sort \[[^\n]*\n(?:[^\n]+\n)*?"
+                     r"Arguments: \[vbucket#", plan), plan
+    assert not [d for d in os.listdir(f"{out}/chunks.parquet")
+                if d.startswith("vbucket=")]
+
+
+def test_chunks_vbucket_reads_back_as_string(spark, digit_bucket_run):
+    out, _ = digit_bucket_run
+    chunks = spark.read.parquet(f"{out}/chunks.parquet")
+    assert chunks.schema["vbucket"].dataType.simpleString() == "string"
+    buckets = {r.vbucket for r in chunks.select("vbucket").collect()}
+    assert buckets and all(b.isdigit() for b in buckets)
+
+
+def test_balanced_search_pushes_vbucket_prefix(spark, digit_bucket_run):
+    """The 'balanced' profile's vbucket prefix filter reaches the parquet
+    scan as a pushed filter, so row-group min/max stats can skip."""
+    from code_indexer_spark.plans.search import semantic_search
+
+    out, _ = digit_bucket_run
+    chunks = spark.read.parquet(f"{out}/chunks.parquet")
+    probe = chunks.limit(1).collect()[0]
+    top = semantic_search(chunks, probe.text, k=1, accuracy="balanced")
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert "StringStartsWith(vbucket," in plan.split("PushedFilters:", 1)[1] \
+        .split("]", 1)[0]
+    assert top.collect()[0].url == probe.url
