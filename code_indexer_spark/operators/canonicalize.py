@@ -209,8 +209,10 @@ def canonical_mapping(entities: DataFrame) -> DataFrame:
     path such rows skip the kernel and map to themselves.
 
     The driver path hands its rows to Spark as one Arrow table, so the
-    plan is a LocalRelation: counting or joining it starts no Python
-    worker (a list would be a pickled parallelize)."""
+    plan is a LocalRelation: its rows sit in the plan, and counting or
+    joining it starts no Python worker (a list would be a pickled
+    parallelize). The Spark path returns a persisted, counted frame, so
+    every consumer reads the star loop's result, not its lineage."""
     import pyarrow as pa
 
     from ..kernel.canon import canonical_map
@@ -228,14 +230,17 @@ def canonical_mapping(entities: DataFrame) -> DataFrame:
             StructType([StructField("entity_id", id_type),
                         StructField("canonical_id", id_type)]))
     mapping = large_star_small_star(verified_edges(entities))
-    return (
+    mapping = (
         entities.select("entity_id")
         .join(mapping, "entity_id", "left")
         .select(
             "entity_id",
             F.coalesce("canonical_id", "entity_id").alias("canonical_id"),
         )
+        .persist()
     )
+    mapping.count()
+    return mapping
 
 
 def apply_canonical(triples: DataFrame, mapping: DataFrame) -> DataFrame:

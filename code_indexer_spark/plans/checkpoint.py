@@ -18,9 +18,9 @@ fcntl-locked JSON; resume decision smart_indexer.py:277-640):
   simply overwritten with identical bytes (MERGE-on-Iceberg at scale).
 
 Each slice is ``plans.pipeline.build_canonical_triples`` over that
-slice's pages, so it shares the session's alias broadcast and persisted
-canonical mapping with every other triples path. The mapping stays
-persisted after a run, finished or crashed, as it does after
+slice's pages, so it shares the session's alias broadcast and canonical
+mapping with every other triples path. The mapping stays in the session
+memo after a run, finished or crashed, as it does after
 ``run_pipeline``; nothing else a run builds stays cached.
 
 Exactness: the final triples table after kill+resume is byte-identical

@@ -7,12 +7,13 @@ Arrow row stage over pages (``util.arrow_rows``, the single batch
 boundary every Python pass shares), so page html crosses the Arrow
 boundary once per output. The reference's thread-pool lifecycle
 (smart_indexer.py:277-640 -> high_throughput_processor.py:262-802) is
-replaced by Spark stage parallelism — SURVEY.md §3.1 mapping — plus one
-driver thread in run_pipeline: Spark runs one action at a time per
-thread, so the chunks write, which needs only pages, is submitted from
-a second thread and overlaps the canonical mapping and the triples
-chain. Only that write action crosses the thread; all plans are built
-on the caller's thread.
+replaced by Spark stage parallelism — SURVEY.md §3.1 mapping — plus two
+driver threads in run_pipeline: Spark runs one action at a time per
+thread, so the chunks write, which needs only pages, is submitted to a
+second thread and overlaps the canonical mapping and the triples
+chain, and the edges write, which needs only the persisted triples, is
+submitted to a third and overlaps the nodes write. Only those write
+actions cross threads; all plans are built on the caller's thread.
 
 Partitioning at scale (SURVEY.md §7.1 step 7):
 - pages: days(warc_ts) + bucket(url) (Iceberg spec; here the parquet
@@ -53,10 +54,12 @@ def read_entities(spark: SparkSession, kg_dir: str) -> DataFrame:
     return spark.read.parquet(f"{kg_dir}/entities.parquet")
 
 
-def build_chunks(spark: SparkSession, kg_dir: str) -> DataFrame:
+def build_chunks(spark: SparkSession, kg_dir: str,
+                 pages: DataFrame | None = None) -> DataFrame:
     """pages -> embedded chunks table (the reference's vector points),
     via the fused one-pass UDF stage."""
-    return build_chunks_fused(read_pages(spark, kg_dir))
+    pages = pages if pages is not None else read_pages(spark, kg_dir)
+    return build_chunks_fused(pages)
 
 
 def build_raw_triples(spark: SparkSession, kg_dir: str,
@@ -75,14 +78,17 @@ def build_mentions(spark: SparkSession, kg_dir: str) -> DataFrame:
 
 # (applicationId, kg_dir) -> the session's KG dimensions, each built
 # once: "alias", the alias-dictionary broadcast, and "mapping", the
-# persisted canonical mapping — the reference's per-collection metadata
+# canonical mapping (the driver path's LocalRelation, or the Spark
+# path's persisted frame) — the reference's per-collection metadata
 # cache analog (filesystem_vector_store.py:307-426). One broadcast keeps
 # repeat triples/mentions plans sameResult (CacheManager can serve
 # them) and each Python worker builds its AliasIndex once. CacheManager
 # cannot serve a repeat mapping: canonical_mapping runs its collect
 # (and, above SMALL_ENTITIES, the star loop's checkpoint jobs) before
 # it returns a plan. applicationId (not id(spark)) so a recycled object
-# address can never serve a stopped session's entry.
+# address can never serve a stopped session's entry. Input reads are
+# not memoized here: a file index listed before pages.parquet changes
+# would serve stale files to run_incremental.
 _SESSION_DIMS: dict[tuple[str, str], dict[str, object]] = {}
 
 
@@ -99,13 +105,10 @@ def _alias_broadcast(spark: SparkSession, kg_dir: str):
         spark, read_alias(spark, kg_dir)))
 
 
-def cached_canonical_mapping(spark: SparkSession, kg_dir: str) -> DataFrame:
-    def build():
-        mapping = canonical_mapping(read_entities(spark, kg_dir)).persist()
-        mapping.count()
-        return mapping
-
-    return _session_dim(spark, kg_dir, "mapping", build)
+def cached_canonical_mapping(spark: SparkSession, kg_dir: str,
+                             entities: DataFrame | None = None) -> DataFrame:
+    return _session_dim(spark, kg_dir, "mapping", lambda: canonical_mapping(
+        entities if entities is not None else read_entities(spark, kg_dir)))
 
 
 def build_canonical_triples(spark: SparkSession, kg_dir: str,
@@ -206,25 +209,29 @@ def run_incremental(
 def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     """Full batch run: materialize chunks, triples, nodes, edges.
 
-    The chunks branch needs only pages, so its write runs on a second
-    driver thread while this thread runs the entity/triples chain
-    (mapping -> build_canonical_triples -> triples, nodes, edges
-    writes). Spark schedules both threads' jobs on the same
-    executors, so the chunks stage fills the cores that the mapping's
-    small, latency-bound jobs leave idle. Only the write action crosses
-    the thread: every plan, including the chunks plan, is built here,
-    so callers that wrap the plan builders (tracing spans, the mapping
-    cache) stay single-threaded. The write is wrapped in
+    Pages and entities are each read once, and every builder takes
+    those frames. The chunks branch needs only pages, so its write runs
+    on a pool thread while this thread runs the entity/triples chain
+    (mapping -> build_canonical_triples -> triples write). Nodes and
+    edges both read only the persisted triples and the mapping, so once
+    the triples are written the edges write goes to the pool's second
+    thread and this thread writes the nodes. Spark schedules every
+    thread's jobs on the same executors, so the chunks stage fills the
+    cores that the mapping's small, latency-bound jobs leave idle, and
+    the nodes and edges jobs share them. Only the write actions cross
+    threads: every plan, including the chunks and edges plans, is built
+    here, so callers that wrap the plan builders (tracing spans, the
+    mapping cache) stay single-threaded. Each pool write is wrapped in
     inheritable_thread_target so it carries this thread's job group,
     description and tags, and cancelJobsWithTag reaches it. A failed
-    chunks write raises from here; if the main chain fails, the chunks
-    write is awaited first and the main chain's error propagates.
+    chunks or edges write raises from here; if this thread's chain
+    fails, the pool writes are awaited first and its error propagates.
 
     Row counts come from the Observation API (A12 metrics in SURVEY
     §2.6) attached to each write — zero extra scan jobs, the same
     mechanism that would feed lineage metrics on a cluster — instead
     of re-reading all four tables."""
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
@@ -235,7 +242,8 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     def observed(df, name):
         return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
 
-    chunks = build_chunks(spark, kg_dir)
+    pages = read_pages(spark, kg_dir)
+    chunks = build_chunks(spark, kg_dir, pages=pages)
     # clustered, not hive-partitioned: each write task sorts its own rows
     # by vbucket and writes one file, so the widest table (text +
     # embedding) is never shuffled, and parquet min/max stats still let a
@@ -245,23 +253,32 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     write_chunks = inheritable_thread_target(spark)(
         lambda: chunks_writer.parquet(f"{out_dir}/chunks.parquet"))
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         chunks_written = pool.submit(write_chunks)
 
         entities = read_entities(spark, kg_dir)
-        mapping = cached_canonical_mapping(spark, kg_dir)
-        triples = build_canonical_triples(spark, kg_dir).persist()
+        mapping = cached_canonical_mapping(spark, kg_dir, entities=entities)
+        triples = build_canonical_triples(spark, kg_dir, pages=pages) \
+            .persist()
+        edges_written = None
         try:
             observed(triples, "triples").write.mode("overwrite").parquet(
                 f"{out_dir}/triples.parquet")
+            edges_writer = observed(
+                build_edges(triples).repartition(F.col("salted_key")),
+                "edges").write.mode("overwrite")
+            edges_written = pool.submit(inheritable_thread_target(spark)(
+                lambda: edges_writer.parquet(f"{out_dir}/edges.parquet")))
             nodes = build_nodes(triples, entities, mapping)
             observed(nodes, "nodes").write.mode("overwrite").parquet(
                 f"{out_dir}/nodes.parquet")
-            edges = build_edges(triples)
-            observed(edges.repartition(F.col("salted_key")), "edges") \
-                .write.mode("overwrite").parquet(f"{out_dir}/edges.parquet")
+            edges_written.result()
             chunks_written.result()
         finally:
-            # mapping stays persisted — it is the session-scoped cache
+            # the edges write reads the persisted triples: unpersisting
+            # under it would recompute them from html. The mapping stays
+            # — it is the session-scoped cache.
+            if edges_written is not None:
+                wait([edges_written])
             triples.unpersist()
     return {name: o.get["n"] for name, o in obs.items()}

@@ -144,6 +144,27 @@ def test_driver_path_mapping_is_a_local_relation(spark, kg_small):
     assert plan.nodeName() == "LocalRelation", plan.toString()
 
 
+def test_spark_path_mapping_is_persisted_and_counted(spark, monkeypatch):
+    """The Spark path returns its mapping cached and already
+    materialized, so no consumer re-runs the star loop's lineage."""
+    from code_indexer_spark.operators.canonicalize import canonical_mapping
+
+    monkeypatch.setattr(canonicalize, "SMALL_ENTITIES", 0)
+    rows = [("e1", "Acme Corp", "org"), ("e2", "Acme Corp Inc", "org"),
+            ("e3", "Zen Labs", "org")]
+    mapping = canonical_mapping(spark.createDataFrame(
+        rows, ["entity_id", "canonical_name", "entity_type"]))
+    try:
+        assert mapping.is_cached
+        cached = spark._jsparkSession.sharedState().cacheManager() \
+            .lookupCachedData(mapping._jdf)
+        assert cached.get().cachedRepresentation().cacheBuilder() \
+            .isCachedColumnBuffersLoaded()
+        assert dict(map(tuple, mapping.collect())) == canonical_map(rows)
+    finally:
+        mapping.unpersist()
+
+
 def test_kernel_hashes_each_distinct_shingle_once(entities, monkeypatch):
     """kernel.canon.candidate_pairs computes NUM_HASHES seeded digests
     per distinct shingle, not per (entity, shingle) occurrence; band

@@ -1,8 +1,9 @@
 """run_pipeline end to end on the seed-fixed sf_small fixture: the four
-written tables match their plan builders, the chunks write overlaps the
-triples chain on a second driver thread that carries the caller's job
-tags, a failure of that background write raises from run_pipeline, and
-the chunks table is written clustered by vbucket, without a shuffle."""
+written tables match their plan builders, each input is read once, the
+chunks write overlaps the triples chain and the edges write overlaps
+the nodes write on pool threads that carry the caller's job tags, a
+failure of either background write raises from run_pipeline, and the
+chunks table is written clustered by vbucket, without a shuffle."""
 
 from __future__ import annotations
 
@@ -51,36 +52,103 @@ def _write_execution(store, path_part: str):
     return hits[0]
 
 
-def test_chunks_write_overlaps_triples_chain(spark, kg_small, tmp_path):
-    sc = spark.sparkContext
-    tag = "test-pipeline-overlap"
-    out = str(tmp_path)
-    sc.addJobTag(tag)
-    try:
-        pipeline.run_pipeline(spark, kg_small, out)
-    finally:
-        sc.clearJobTags()
+OVERLAP_TAG = "test-pipeline-overlap"
 
+
+@pytest.fixture(scope="module")
+def tagged_run(spark, kg_small, tmp_path_factory):
+    """One run_pipeline under a job tag, over a copy of sf_small that
+    this session has not mapped yet, counting the input reads. Returns
+    (out_dir, {reader name: calls})."""
+    kg_dir = str(tmp_path_factory.mktemp("overlap_kg") / "kg")
+    shutil.copytree(kg_small, kg_dir)
+    out = str(tmp_path_factory.mktemp("overlap_out"))
+    reads = {"read_pages": 0, "read_entities": 0}
+    sc = spark.sparkContext
+    with pytest.MonkeyPatch.context() as mp:
+        for name in reads:
+            def counted(*args, _name=name, _real=getattr(pipeline, name)):
+                reads[_name] += 1
+                return _real(*args)
+            mp.setattr(pipeline, name, counted)
+        sc.addJobTag(OVERLAP_TAG)
+        try:
+            pipeline.run_pipeline(spark, kg_dir, out)
+        finally:
+            sc.clearJobTags()
+    return out, reads
+
+
+def _tagged_jobs(spark, execution) -> list[int]:
+    """The execution's job ids; asserts each carries OVERLAP_TAG."""
+    job_ids, it = [], execution.jobs().keySet().iterator()
+    while it.hasNext():
+        job_ids.append(int(it.next()))
+    tagged = set(spark.sparkContext._jsc.sc().statusTracker()
+                 .getJobIdsForTag(OVERLAP_TAG))
+    assert job_ids and set(job_ids) <= tagged
+    return job_ids
+
+
+def test_chunks_write_overlaps_triples_chain(spark, tagged_run):
+    out, _ = tagged_run
     store = spark._jsparkSession.sharedState().statusStore()
     chunks = _write_execution(store, f"{out}/chunks.parquet")
     triples = _write_execution(store, f"{out}/triples.parquet")
     assert chunks.submissionTime() < triples.submissionTime()
+    _tagged_jobs(spark, chunks)
 
-    job_ids, it = [], chunks.jobs().keySet().iterator()
-    while it.hasNext():
-        job_ids.append(int(it.next()))
-    tagged = set(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
-    assert job_ids and set(job_ids) <= tagged
+
+def test_edges_write_overlaps_nodes_write(spark, tagged_run):
+    """The edges write is submitted from a pool thread before the nodes
+    write completes, and its jobs carry the caller's job tag."""
+    out, _ = tagged_run
+    store = spark._jsparkSession.sharedState().statusStore()
+    edges = _write_execution(store, f"{out}/edges.parquet")
+    nodes = _write_execution(store, f"{out}/nodes.parquet")
+    assert edges.submissionTime() < nodes.completionTime().get().getTime()
+    _tagged_jobs(spark, edges)
+
+
+def test_run_pipeline_reads_each_input_once(tagged_run):
+    _, reads = tagged_run
+    assert reads == {"read_pages": 1, "read_entities": 1}
+
+
+def test_driver_path_session_mapping_persists_nothing(spark, kg_small,
+                                                      tmp_path):
+    """The driver path's mapping is a LocalRelation whose rows sit in
+    the plan: building the session's mapping persists no RDD."""
+    kg_dir = str(tmp_path / "kg")  # a kg_dir this session has not mapped
+    shutil.copytree(kg_small, kg_dir)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persisted()
+    mapping = pipeline.cached_canonical_mapping(spark, kg_dir)
+    assert mapping.count() > 0
+    assert persisted() == before
+    assert not mapping.is_cached
 
 
 def test_chunks_write_failure_propagates(spark, kg_small, tmp_path,
                                          monkeypatch):
     monkeypatch.setattr(
         pipeline, "build_chunks",
-        lambda spark, kg_dir: spark.range(3).withColumn(
+        lambda spark, kg_dir, pages=None: spark.range(3).withColumn(
             "vbucket",
             F.raise_error(F.lit("chunks boom")).cast("string")))
     with pytest.raises(Exception, match="chunks boom"):
+        pipeline.run_pipeline(spark, kg_small, str(tmp_path))
+
+
+def test_edges_write_failure_propagates(spark, kg_small, tmp_path,
+                                        monkeypatch):
+    build_edges = pipeline.build_edges
+    monkeypatch.setattr(
+        pipeline, "build_edges",
+        lambda triples: build_edges(triples).withColumn(
+            "salted_key",
+            F.raise_error(F.lit("edges boom")).cast("string")))
+    with pytest.raises(Exception, match="edges boom"):
         pipeline.run_pipeline(spark, kg_small, str(tmp_path))
 
 
