@@ -194,9 +194,11 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 
 def q_dedup_resolution(spark, sf_dir):
-    """Cluster-level dedup: LSH pairs -> 4-round min-label propagation
-    -> (doc_id, keep_id, is_canonical). Full value oracle: DuckDB runs
-    the identical unrolled recurrence over the identical pair set."""
+    """Cluster-level dedup: LSH pairs -> connected components
+    (large-star/small-star) -> (doc_id, keep_id, is_canonical). Full
+    value oracle: DuckDB runs 4 unrolled rounds of min-label
+    propagation over the identical pair set, which equals the
+    components wherever every cluster's diameter is <= 4."""
     from code_indexer_spark.operators.dedup import dedup_resolution
 
     return dedup_resolution(_corpus(spark, sf_dir))
@@ -211,8 +213,9 @@ def q_simhash(spark, sf_dir):
 
 def q_simhash_pairs(spark, sf_dir):
     """SimHash banded near-dup pairs over the full documents table —
-    exact (blocking is lossless by pigeonhole, rescore is exact), so
-    the DuckDB twin reproduces every pair and hamming distance."""
+    exact (blocking is lossless by pigeonhole, the packed-band-key
+    rescore is exact), so the DuckDB twin, which rescores bit by bit,
+    reproduces every pair and hamming distance."""
     from code_indexer_spark.operators.dedup import simhash_pairs
 
     return simhash_pairs(_t(spark, sf_dir, "documents")) \
@@ -1660,9 +1663,9 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # dedup_resolution: the minhash_lsh_pairs pair set -> 4 unrolled
-    # rounds of min-label propagation (identical recurrence to
-    # operators.dedup.dedup_resolution; bounded rounds are what make
-    # cluster resolution value-checkable cross-engine)
+    # rounds of min-label propagation. It checks the Spark star loop
+    # (operators.dedup.dedup_resolution) wherever every cluster's
+    # diameter is <= 4, which holds at all three testdata scales.
     _prop = ["l0 AS (SELECT DISTINCT u, u AS lbl FROM dedup_edges)"]
     for _r in range(1, 5):
         _prop.append(f"""
@@ -1828,7 +1831,7 @@ def oracle_sql() -> dict[str, str]:
     # (positions 33-64 read the seeded md5(tok || '|2') — a hex digest
     # has only 32 chars), band key = order-free weighted bit sum per
     # 16-bit band (2^i exact in doubles), candidate bucket join, exact
-    # rescore.
+    # rescore bit by bit (Spark rescores on the packed band keys).
     sqls["simhash_pairs"] = """
         WITH toks AS (
             SELECT doc_id,

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructField, StructType
 
 from ..functions.columns import norm_surface, triple_id
+from ..util import free_local_checkpoint
 from .dedup import bucket_pairs, minhash_bands
 
 
@@ -131,16 +132,27 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def large_star_small_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
-    """edges(src, dst) -> mapping(entity_id, canonical_id) for all nodes
-    appearing in edges (canonical = component minimum).
+# Star rounds before large_star_small_star gives up: the loop needs
+# O(log n) rounds, so this bounds a runaway, not a working input.
+MAX_STAR_ROUNDS = 25
+
+
+def large_star_small_star(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) -> mapping(entity_id, canonical_id), one row per
+    node appearing in edges (canonical = component minimum, so a
+    component's root maps to itself).
 
     Alternates large-star and small-star rounds until the edge multiset
-    is stable (checksum), then reads the star edges as the mapping.
+    is stable (checksum), then reads the star edges as the mapping;
+    raises RuntimeError if it is not stable after MAX_STAR_ROUNDS.
+    Each round is checkpointed, and a superseded round's blocks are
+    freed once the next one is checkpointed and checksummed, so only the
+    distinct input (the node set) and the final round stay persisted.
     """
-    cur = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    inp = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    cur = inp
     prev_sum = None
-    for it in range(max_iter):
+    for _ in range(MAX_STAR_ROUNDS):
         # ---- large-star: connect every neighbor > u to min(N(u) ∪ {u})
         bidir = cur.union(cur.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst")))
@@ -176,14 +188,26 @@ def large_star_small_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         cur_sum = _checksum(new_edges)
+        if cur is not inp:
+            free_local_checkpoint(cur)
         cur = new_edges
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    # converged star graph: src -> component min (dst)
-    return cur.select(
-        F.col("src").alias("entity_id"), F.col("dst").alias("canonical_id")
-    )
+    else:
+        free_local_checkpoint(cur)
+        free_local_checkpoint(inp)
+        raise RuntimeError(
+            f"large_star_small_star: edges not stable after "
+            f"{MAX_STAR_ROUNDS} rounds")
+    # converged star graph: src -> component min (dst); a root has no
+    # star edge, so every input node absent from src maps to itself
+    nodes = inp.select(F.col("src").alias("entity_id")).union(
+        inp.select("dst")).distinct()
+    return nodes.join(cur.toDF("entity_id", "canonical_id"), "entity_id",
+                      "left").select(
+        "entity_id",
+        F.coalesce("canonical_id", "entity_id").alias("canonical_id"))
 
 
 # Entity tables up to this many rows are canonicalized on the driver by

@@ -11,10 +11,15 @@ DuckDB oracle computes the exact same values):
               shared with operators.canonicalize's entity blocking and
               (bucket_pairs) the Jaccard, SimHash and embedding pairs
               (K5 in SURVEY.md §2.5; all JVM-side: F.md5, no Python)
-- SimHash:    md5-hex-parity bit votes -> per-bit majority
+- SimHash:    md5-hex-parity bit votes -> per-bit majority; pairs
+              block on and rescore over packed per-band keys
 - embedding:  cosine-threshold near-dup pairs over array<float>;
               crossJoin or banded-LSH candidates, one verify step
               (similarity.pair_cosine)
+
+Duplicate clusters (dedup_resolution) are the connected components of
+the MinHash-LSH pairs, from the one Spark connected-components loop,
+operators.canonicalize.large_star_small_star.
 
 Scale notes: every operator here is a shuffle on a *content-derived*
 key (hash / shingle / band), so it parallelizes by data, never by
@@ -274,10 +279,11 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 64,
                   bands: int = 4, max_hamming: int = 3) -> DataFrame:
     """SimHash near-duplicate PAIRS: banded Hamming-LSH blocking over
-    the long-form signature, then exact Hamming rescore — the simhash
-    counterpart of minhash_lsh_pairs (the reference's near-dup story is
-    MinHash-only; simhash banding is the standard alternative for
-    token-order-sensitive near-dup, e.g. the Google WWW'07 crawl dedup).
+    packed band keys, then an exact Hamming rescore on the same keys —
+    the simhash counterpart of minhash_lsh_pairs (the reference's
+    near-dup story is MinHash-only; simhash banding is the standard
+    alternative for token-order-sensitive near-dup, e.g. the Google
+    WWW'07 crawl dedup).
 
     Pigeonhole guarantee (requires ``max_hamming < bands``): a pair
     within ``max_hamming`` differs in at most ``bands - 1`` of the
@@ -287,16 +293,16 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     is EXACTLY all pairs with hamming <= max_hamming.
 
     Scale shape: the bit-vote aggregation is one groupBy on
-    (id, bit_pos); band keys are a second groupBy; candidates come
+    (id, bit_pos); packing each band's r = bits // bands bits into one
+    integer key is a second groupBy, on (id, band). Candidates come
     from a bucket self-join on (band, key) — never an all-pairs join —
-    and the rescore joins the slim (id, bit_pos, bit) table twice,
-    ``bits`` rows per candidate side. The bits table is persisted: it
-    has three consumers (band keys and both rescore sides), and
-    uncached they would tokenize the corpus three times. The long
-    (id, bit_pos, bit) form instead of a packed 64-bit word is the
-    oracle-portability trade (parity-of-md5-hex-char is computable on
-    both engines); a production variant would pack bits into a long
-    and block on shifted words, same plan shape.
+    and the rescore joins the same (id, band, key) table back on id_a
+    and on (id_b, band), ``bands`` rows per candidate side: Hamming
+    distance is the sum over bands of bit_count(key_a ^ key_b). All
+    three consumers read one (id, band) exchange, which Spark reuses,
+    so the corpus is tokenized once without a cache. A key is a
+    weighted double sum, exact only while r <= 32, so wider bands
+    raise ValueError.
 
     Band width is the load-bearing scale knob: uniform random
     signatures put ~n/2^r docs in each of a band's 2^r buckets, so
@@ -316,12 +322,15 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
             f"differing in {max_hamming} bits can miss every one of "
             f"{bands} bands otherwise)")
     r = bits // bands
-    b = simhash_bits_long(docs, id_col, text_col, bits).persist(
-        StorageLevel.MEMORY_AND_DISK)
+    if r > 32:
+        raise ValueError(
+            f"bits // bands must be <= 32 (got {r}): each band's bits "
+            "pack into one exact integer key")
     # per-(id, band) integer key: order-free weighted bit sum (2^i is
     # exact in doubles for i < r <= 32)
     keyed = (
-        b.withColumn("band", ((F.col("bit_pos") - 1) / r).cast("int"))
+        simhash_bits_long(docs, id_col, text_col, bits)
+        .withColumn("band", ((F.col("bit_pos") - 1) / r).cast("int"))
         .groupBy("id", "band")
         .agg(F.sum(F.col("bit")
                    * F.pow(F.lit(2.0), (F.col("bit_pos") - 1) % r))
@@ -329,10 +338,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
     cand = bucket_pairs(keyed, "id", ["band", "bkey"]).distinct()
     return (
-        cand.join(b.toDF("id_a", "bit_pos", "bit_a"), "id_a")
-        .join(b.toDF("id_b", "bit_pos", "bit_b"), ["id_b", "bit_pos"])
+        cand.join(keyed.toDF("id_a", "band", "key_a"), "id_a")
+        .join(keyed.toDF("id_b", "band", "key_b"), ["id_b", "band"])
         .groupBy("id_a", "id_b")
-        .agg(F.sum(F.abs(F.col("bit_a") - F.col("bit_b")))
+        .agg(F.sum(F.bit_count(F.col("key_a").bitwiseXOR(F.col("key_b"))))
              .cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -424,13 +433,11 @@ def ngram_dup_spans(docs: DataFrame, id_col: str = "doc_id",
 
 
 def dedup_resolution(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", rounds: int = 4,
-                     until_converged: bool = False) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """End-to-end duplicate-CLUSTER resolution — the full dedup story,
     not just pair emission: banded MinHash-LSH candidate pairs ->
-    rounds-bounded min-label propagation (or exact connected
-    components) -> one canonical keep id per connected duplicate
-    cluster.
+    connected components -> one canonical keep id per connected
+    duplicate cluster.
 
     (doc_id, keep_id, is_canonical) for every document in at least one
     candidate pair; keep_id = the smallest doc_id in the component, so
@@ -438,59 +445,25 @@ def dedup_resolution(docs: DataFrame, id_col: str = "doc_id",
     the rest (the reference's keep-first dedup policy at cluster
     granularity).
 
-    Propagation is label(v) <- min(label(v), min over LSH-neighbors'
-    labels), `rounds` times — exact connected components whenever the
-    component diameter <= rounds. LSH duplicate clusters are
-    near-cliques (every member shares a band bucket with most others),
-    so 4 rounds covers real corpora; ``until_converged=True`` is the
-    10^12-doc mode: exact components of any diameter from
-    operators.canonicalize.large_star_small_star over the candidate
-    pairs (O(log n) rounds, lineage cut per round, edge list never
-    collected), each component root mapped to itself.
-    The bounded unrolling is what makes the DEFAULT cross-engine
-    value-checkable: the DuckDB oracle runs the identical recurrence,
-    and a pytest pins converged == rounds-bounded on the fixture."""
+    The components come from large_star_small_star
+    (operators.canonicalize) over the candidate pairs: exact for any
+    component diameter, O(log n) rounds, lineage cut per round, edge
+    list never collected; it maps every paired doc, a root to itself.
+    The DuckDB oracle checks it with 4 unrolled rounds of min-label
+    propagation, which agree wherever every cluster's diameter is
+    <= 4: LSH duplicate clusters are near-cliques (every member shares
+    a band bucket with most others), and it holds at all three
+    testdata scales. A pytest pins the result against kernel.canon's
+    union-find over the same pairs."""
+    from .canonicalize import large_star_small_star
+
     pairs = lsh_candidate_pairs(docs, id_col, text_col)
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-    )
-    # materialize the (slim, O(duplicates)) edge list once: every
-    # propagation round re-reads it, and without the checkpoint the
-    # whole shingle->minhash->band subtree would re-execute per round
-    edges = edges.localCheckpoint(eager=True)
-    labels = edges.select("u").distinct().withColumn("lbl", F.col("u"))
-
-    def one_round(lbls):
-        nbr = (
-            edges.alias("e")
-            .join(lbls.alias("l"), F.col("e.v") == F.col("l.u"))
-            .groupBy(F.col("e.u").alias("u"))
-            .agg(F.min("l.lbl").alias("nl"))
-        )
-        return (
-            lbls.alias("l")
-            .join(nbr.alias("n"), "u", "left")
-            .select("u", F.least(
-                F.col("l.lbl"),
-                F.coalesce(F.col("n.nl"), F.col("l.lbl"))).alias("lbl"))
-        )
-
-    if until_converged:
-        from .canonicalize import large_star_small_star
-
-        # the star graph has no row for a component root: it keeps u
-        star = large_star_small_star(edges.toDF("src", "dst")).toDF("u", "c")
-        labels = labels.join(star, "u", "left").select(
-            "u", F.coalesce("c", "lbl").alias("lbl"))
-    else:
-        for _ in range(rounds):
-            labels = one_round(labels)
-    return labels.select(
-        F.col("u").alias(id_col),
-        F.col("lbl").alias("keep_id"),
-        (F.col("u") == F.col("lbl")).alias("is_canonical"),
+    return large_star_small_star(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    ).select(
+        F.col("entity_id").alias(id_col),
+        F.col("canonical_id").alias("keep_id"),
+        (F.col("entity_id") == F.col("canonical_id")).alias("is_canonical"),
     )
 
 

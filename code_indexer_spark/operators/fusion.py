@@ -139,9 +139,3 @@ def merge_shards_by_score(shards: list[DataFrame], score_col: str,
     for s in shards[1:]:
         out = out.unionByName(s, allowMissingColumns=True)
     return out.orderBy(F.desc(score_col), F.asc(tiebreak_col)).limit(limit)
-
-
-def topk(df: DataFrame, score_col: str, tiebreak_col: str,
-         k: int) -> DataFrame:
-    """T1: global top-k — Spark plans TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(F.desc(score_col), F.asc(tiebreak_col)).limit(k)

@@ -327,25 +327,22 @@ def lsh_topk(
     qvec_col: str = "query_vec",
     n_planes: int = N_PLANES,
     dim: int = 64,
-    n_probe_bits: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share a hyperplane bucket with the
     query, then exact cosine rescoring + window top-k inside the bucket.
 
-    Multi-probe (n_probe_bits=1, the default): the query also probes
-    every bucket at Hamming distance 1 from its own — a near-boundary
-    query whose true neighbors landed one sign-flip away still finds
-    them. Each data vector lives in exactly ONE bucket and the probe set
-    is distinct buckets, so no candidate is scored twice; the scan is
-    O(n_planes+1 buckets per query), not O(n). The reference protects
-    filtered recall the same way by over-fetching 2-15x
+    Multi-probe: the query also probes every bucket at Hamming
+    distance 1 from its own — a near-boundary query whose true
+    neighbors landed one sign-flip away still finds them. Each data
+    vector lives in exactly ONE bucket and the probe set is distinct
+    buckets, so no candidate is scored twice; the scan is O(n_planes+1
+    buckets per query), not O(n). The reference protects filtered
+    recall the same way by over-fetching 2-15x
     (filesystem_vector_store.py:2968-2970)."""
     e = normed(emb, id_col, vec_col, "b").withColumn(
         "bucket", lsh_bucket_expr("v_b", n_planes, dim))
     qb = lsh_bucket_expr("v_a", n_planes, dim)
-    probes = [qb]
-    if n_probe_bits >= 1:
-        probes += [qb.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+    probes = [qb] + [qb.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
     q = normed(queries, qid_col, qvec_col, "a").withColumn(
         "bucket", F.explode(F.array(*probes)))
     return _topk(q.join(e, "bucket"), k, qid_col)

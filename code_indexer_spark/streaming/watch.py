@@ -18,7 +18,10 @@ Spark mapping:
 
 The SAME batch stages run inside the stream — the fused chunks and
 triples stages are narrow Arrow row stages (``util.arrow_rows``), legal
-in Structured Streaming.
+in Structured Streaming — so a stream is built by the batch builders
+over the stream frame: ``plans.pipeline.build_raw_triples(spark,
+kg_dir, pages=stream)`` and ``build_chunks(spark, kg_dir,
+pages=stream)``.
 """
 
 from __future__ import annotations
@@ -28,9 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
-
-from ..operators.extract import build_chunks_fused
-from ..operators.triples import extract_triples_fused
 
 PAGES_SCHEMA = StructType(
     [
@@ -52,16 +52,6 @@ def read_pages_stream(spark: SparkSession, pages_dir: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
     )
-
-
-def stream_triples(pages_stream: DataFrame, alias_bc) -> DataFrame:
-    """Streaming triple extraction — identical stage as batch."""
-    return extract_triples_fused(pages_stream, alias_bc)
-
-
-def stream_chunks(pages_stream: DataFrame) -> DataFrame:
-    """Streaming embedded chunks — identical stage as batch."""
-    return build_chunks_fused(pages_stream)
 
 
 def run_available_now(stream_df: DataFrame, out_dir: str,

@@ -82,15 +82,48 @@ def test_star_loop_equals_union_find(spark, kg_small):
     # materialized once: both sides read the same edges
     edges = verified_edges(read_entities(spark, kg_small)).localCheckpoint(
         eager=True)
-    # the star graph has no identity row for component roots
-    # (canonical_mapping coalesces those); union-find maps root -> root
-    star = {(r.entity_id, r.canonical_id)
+    # both map every node of the edges, a component root to itself
+    star = {r.entity_id: r.canonical_id
             for r in large_star_small_star(edges).collect()}
-    uf = {(n, root) for n, root in connected_components(
-              [(r.src, r.dst) for r in edges.collect()]).items()
-          if n != root}
+    uf = connected_components([(r.src, r.dst) for r in edges.collect()])
     assert star == uf
-    assert len(star) > 0
+    assert any(n != root for n, root in star.items())
+
+
+def _path_edges(spark, n):
+    """A path over n nodes: the longest diameter, the most star rounds."""
+    return spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)],
+        ["src", "dst"])
+
+
+def test_star_loop_raises_when_not_converged(spark, monkeypatch):
+    """A star loop cut off before its edges are stable raises instead
+    of returning a non-converged star graph as the mapping (the same
+    path converges within the default bound in the test below)."""
+    from code_indexer_spark.operators.canonicalize import large_star_small_star
+
+    monkeypatch.setattr(canonicalize, "MAX_STAR_ROUNDS", 2)
+    with pytest.raises(RuntimeError):
+        large_star_small_star(_path_edges(spark, 64))
+
+
+def test_star_loop_frees_superseded_rounds(spark):
+    """Each superseded round's checkpoint is freed as the loop goes:
+    after a call only the distinct input and the final round stay
+    persisted, and the returned mapping still reads them."""
+    from code_indexer_spark.operators.canonicalize import large_star_small_star
+
+    def persisted():
+        # ids, not a count: the context cleaner may drop other tests'
+        # RDDs meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    mapping = large_star_small_star(_path_edges(spark, 64))
+    assert len(persisted() - before) <= 2
+    m = dict(map(tuple, mapping.collect()))
+    assert len(m) == 64 and set(m.values()) == {"n000"}
 
 
 def test_empty_edges_clean_input(spark, monkeypatch):

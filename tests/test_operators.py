@@ -83,25 +83,37 @@ def test_dedup_resolution_clusters(spark):
                    7: (7, True), 8: (7, False)}
 
 
-def test_dedup_resolution_converged_equals_bounded(spark):
-    """until_converged (the 10^12-doc mode) must produce exactly the
-    rounds-bounded labeling on a long chain that NEEDS several rounds:
-    docs 1..6 all identical -> a 6-clique, plus a disjoint pair."""
-    from code_indexer_spark.operators.dedup import dedup_resolution
+def _seeded_corpus():
+    """60 seeded random docs over a 30-word vocabulary plus exact copies
+    of the first five (ids 100-104), so resolution has clusters."""
+    import random
 
-    same = "one two three four five six"
-    other = "seven eight nine ten eleven twelve"
-    df = spark.createDataFrame(
-        [(i, same) for i in range(1, 7)] + [(10, other), (11, other)],
-        ["doc_id", "text"])
-    bounded = sorted((r.doc_id, r.keep_id, r.is_canonical)
-                     for r in dedup_resolution(df).collect())
-    conv = sorted((r.doc_id, r.keep_id, r.is_canonical)
-                  for r in dedup_resolution(
-                      df, until_converged=True).collect())
-    assert bounded == conv
-    assert (1, 1, True) in conv and (6, 1, False) in conv
-    assert (10, 10, True) in conv and (11, 10, False) in conv
+    rng = random.Random(42)
+    vocab = [f"w{i}" for i in range(30)]
+    docs = [(i, " ".join(rng.choice(vocab)
+                         for _ in range(rng.randint(0, 40))))
+            for i in range(60)]
+    return docs + [(100 + i, docs[i][1]) for i in range(5)]
+
+
+def test_dedup_resolution_equals_union_find(spark):
+    """dedup_resolution equals kernel.canon's plain-Python union-find
+    over the same collected LSH candidate pairs: every paired doc, its
+    component minimum as keep id, and is_canonical for the minimum."""
+    import __spark_entry__ as entrymod
+    from test_plan_shapes import SF_DIR
+
+    from code_indexer_spark.kernel.canon import connected_components
+    from code_indexer_spark.operators.dedup import (
+        dedup_resolution, lsh_candidate_pairs)
+
+    for df in (spark.createDataFrame(_seeded_corpus(), ["doc_id", "text"]),
+               entrymod._corpus(spark, SF_DIR)):
+        uf = connected_components(
+            [(r.id_a, r.id_b) for r in lsh_candidate_pairs(df).collect()])
+        got = sorted(map(tuple, dedup_resolution(df).collect()))
+        assert got == sorted((n, root, n == root) for n, root in uf.items())
+        assert any(n != root for n, root in uf.items())
 
 
 def test_repetition_signals(spark):
@@ -126,15 +138,7 @@ def test_repetition_signals(spark):
 def test_dedup_and_repetition_invariants_random_corpus(spark):
     """Seeded random corpus: structural invariants that must hold for
     ANY input — fractions bounded, components closed under keep_id."""
-    import random
-
-    rng = random.Random(42)
-    vocab = [f"w{i}" for i in range(30)]
-    docs = [(i, " ".join(rng.choice(vocab)
-                         for _ in range(rng.randint(0, 40))))
-            for i in range(60)]
-    # plant a few exact copies so resolution has clusters to find
-    docs += [(100 + i, docs[i][1]) for i in range(5)]
+    docs = _seeded_corpus()
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
     from code_indexer_spark.operators.dedup import dedup_resolution
@@ -628,12 +632,12 @@ def test_call_chains_max_paths_exact_prefix(spark):
 
 
 def test_repeat_calls_share_one_cache_entry(spark):
-    """simhash_pairs, dsir_logweights and guarded jaccard_pairs persist
-    their shared subtree; Spark's CacheManager matches a rebuilt plan by
-    sameResult, so calling them again over the same input adds no
-    cache entry, and the second run reads the first run's table."""
+    """dsir_logweights and guarded jaccard_pairs persist their shared
+    subtree; Spark's CacheManager matches a rebuilt plan by sameResult,
+    so calling them again over the same input adds no cache entry, and
+    the second run reads the first run's table."""
     from code_indexer_spark.operators.dedup import (
-        jaccard_pairs, simhash_bits_long, simhash_pairs, word_shingles_df)
+        jaccard_pairs, word_shingles_df)
     from code_indexer_spark.operators.textstats import (
         bigram_buckets, dsir_logweights)
 
@@ -646,7 +650,7 @@ def test_repeat_calls_share_one_cache_entry(spark):
         ["doc_id", "text"])
 
     def build():
-        return [simhash_pairs(docs), dsir_logweights(docs, target),
+        return [dsir_logweights(docs, target),
                 jaccard_pairs(docs, threshold=0.3, max_df=30)]
 
     def persisted():
@@ -657,7 +661,7 @@ def test_repeat_calls_share_one_cache_entry(spark):
     before = persisted()
     first = [sorted(map(tuple, df.collect())) for df in build()]
     ours = persisted() - before
-    assert len(ours) == 3, (before, ours)  # one entry per operator
+    assert len(ours) == 2, (before, ours)  # one entry per operator
     again = build()
     second = [sorted(map(tuple, df.collect())) for df in again]
     assert persisted() - before == ours
@@ -665,9 +669,8 @@ def test_repeat_calls_share_one_cache_entry(spark):
     for df in again:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
-    # the three entries are exactly the shared subtrees; release them
-    for sub in (simhash_bits_long(docs, bits=64), bigram_buckets(docs),
-                word_shingles_df(docs)):
+    # the two entries are exactly the shared subtrees; release them
+    for sub in (bigram_buckets(docs), word_shingles_df(docs)):
         sub.unpersist(blocking=True)
     assert not persisted() & ours
 
@@ -873,6 +876,30 @@ def test_simhash_pairs_exact_vs_bruteforce(spark):
         simhash_pairs(docs, bands=4, max_hamming=4)  # pigeonhole broken
     with pytest.raises(ValueError):
         simhash_pairs(docs, bits=128, bands=4)       # > 2 hex digests
+    with pytest.raises(ValueError):
+        simhash_pairs(docs, bits=64, bands=1, max_hamming=0)  # r > 32
+
+
+def test_simhash_pairs_persists_nothing(spark):
+    """simhash_pairs blocks and rescores on the packed band keys, so no
+    bits table is cached: a call adds no persistent RDD and its final
+    plan reads no InMemoryTableScan."""
+    from code_indexer_spark.operators.dedup import simhash_pairs
+
+    words = "amber basil cedar delta ember fjord grove harbor iris jade"
+    docs = spark.createDataFrame(
+        [(i, " ".join(words.split()[i % 5:] + ["doc", str(i % 3)]))
+         for i in range(30)], ["doc_id", "text"])
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    df = simhash_pairs(docs)
+    assert df.collect()
+    assert not persisted() - before
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
 
 
 def test_cooccur_pmi_first_principles(spark):

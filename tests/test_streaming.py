@@ -24,17 +24,14 @@ def pages_stream_dir(kg_small, tmp_path):
 
 def test_stream_triples_equals_batch(spark, kg_small, pages_stream_dir,
                                      tmp_path):
-    from code_indexer_spark.operators.triples import broadcast_alias_rows
-    from code_indexer_spark.plans.pipeline import build_raw_triples, read_alias
+    from code_indexer_spark.plans.pipeline import build_raw_triples
     from code_indexer_spark.streaming.watch import (
-        read_pages_stream, run_available_now, stream_triples)
+        read_pages_stream, run_available_now)
 
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_small))
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    stream = stream_triples(
-        read_pages_stream(spark, pages_stream_dir, max_files_per_trigger=1),
-        alias_bc)
+    stream = build_raw_triples(spark, kg_small, pages=read_pages_stream(
+        spark, pages_stream_dir, max_files_per_trigger=1))
     run_available_now(stream, out, ckpt)
 
     got = {tuple(r) for r in spark.read.parquet(out)
@@ -44,25 +41,26 @@ def test_stream_triples_equals_batch(spark, kg_small, pages_stream_dir,
     assert got == expect
 
     # restart with same checkpoint: nothing new -> no duplicates
-    stream2 = stream_triples(
-        read_pages_stream(spark, pages_stream_dir, max_files_per_trigger=1),
-        alias_bc)
+    stream2 = build_raw_triples(spark, kg_small, pages=read_pages_stream(
+        spark, pages_stream_dir, max_files_per_trigger=1))
     run_available_now(stream2, out, ckpt)
     assert spark.read.parquet(out).count() == len(expect)
 
 
-def test_stream_chunks_equal_fused_batch(spark, pages_stream_dir, tmp_path):
+def test_stream_chunks_equal_fused_batch(spark, kg_small, pages_stream_dir,
+                                         tmp_path):
     """Streamed chunks carry the batch table's embedding and vbucket:
-    the stream runs build_chunks_fused, not a staged chain without
-    them."""
+    build_chunks over the stream runs build_chunks_fused, not a staged
+    chain without them."""
     from code_indexer_spark.operators.extract import build_chunks_fused
+    from code_indexer_spark.plans.pipeline import build_chunks
     from code_indexer_spark.streaming.watch import (
-        PAGES_SCHEMA, read_pages_stream, run_available_now, stream_chunks)
+        PAGES_SCHEMA, read_pages_stream, run_available_now)
 
     out = str(tmp_path / "chunks_out")
     run_available_now(
-        stream_chunks(read_pages_stream(spark, pages_stream_dir,
-                                        max_files_per_trigger=1)),
+        build_chunks(spark, kg_small, pages=read_pages_stream(
+            spark, pages_stream_dir, max_files_per_trigger=1)),
         out, str(tmp_path / "chunks_ck"))
 
     def rows(df):
@@ -81,12 +79,10 @@ def test_stream_new_file_incremental(spark, kg_small, pages_stream_dir,
                                      tmp_path):
     """New file after a drain -> only its rows are appended (S10/K4
     incremental semantics)."""
-    from code_indexer_spark.operators.triples import broadcast_alias_rows
-    from code_indexer_spark.plans.pipeline import read_alias
+    from code_indexer_spark.plans.pipeline import build_raw_triples
     from code_indexer_spark.streaming.watch import (
-        read_pages_stream, run_available_now, stream_triples)
+        read_pages_stream, run_available_now)
 
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_small))
     out = str(tmp_path / "out2")
     ckpt = str(tmp_path / "ckpt2")
 
@@ -95,13 +91,15 @@ def test_stream_new_file_incremental(spark, kg_small, pages_stream_dir,
     staging = str(tmp_path / "held.parquet")
     shutil.move(held_back, staging)
 
-    run_available_now(stream_triples(read_pages_stream(
-        spark, pages_stream_dir), alias_bc), out, ckpt)
+    run_available_now(build_raw_triples(
+        spark, kg_small, pages=read_pages_stream(spark, pages_stream_dir)),
+        out, ckpt)
     n1 = spark.read.parquet(out).count()
 
     shutil.move(staging, held_back)
-    run_available_now(stream_triples(read_pages_stream(
-        spark, pages_stream_dir), alias_bc), out, ckpt)
+    run_available_now(build_raw_triples(
+        spark, kg_small, pages=read_pages_stream(spark, pages_stream_dir)),
+        out, ckpt)
     n2 = spark.read.parquet(out).count()
     assert n2 > n1  # the held-back file's triples arrived exactly once
 
@@ -174,19 +172,16 @@ def test_merge_sink_snapshots(spark, kg_small, pages_stream_dir, tmp_path):
     (content-addressed triple_id MERGE keys)."""
     import pyspark.sql.functions as F
 
-    from code_indexer_spark.operators.triples import broadcast_alias_rows
-    from code_indexer_spark.plans.pipeline import build_raw_triples, read_alias
+    from code_indexer_spark.plans.pipeline import build_raw_triples
     from code_indexer_spark.sources.tables import (
         read_snapshot, snapshot_versions)
     from code_indexer_spark.streaming.watch import (
-        read_pages_stream, run_merge_sink, stream_triples)
+        read_pages_stream, run_merge_sink)
 
-    alias_bc = broadcast_alias_rows(spark, read_alias(spark, kg_small))
     table = str(tmp_path / "triples_tbl")
 
-    stream = stream_triples(
-        read_pages_stream(spark, pages_stream_dir, max_files_per_trigger=1),
-        alias_bc)
+    stream = build_raw_triples(spark, kg_small, pages=read_pages_stream(
+        spark, pages_stream_dir, max_files_per_trigger=1))
     run_merge_sink(stream, table, ["triple_id"], str(tmp_path / "ck1"))
 
     versions = snapshot_versions(table)
@@ -205,9 +200,8 @@ def test_merge_sink_snapshots(spark, kg_small, pages_stream_dir, tmp_path):
 
     # replay with a FRESH checkpoint (simulated reprocess): merge on
     # triple_id keeps the table exactly deduplicated
-    stream2 = stream_triples(
-        read_pages_stream(spark, pages_stream_dir, max_files_per_trigger=2),
-        alias_bc)
+    stream2 = build_raw_triples(spark, kg_small, pages=read_pages_stream(
+        spark, pages_stream_dir, max_files_per_trigger=2))
     run_merge_sink(stream2, table, ["triple_id"], str(tmp_path / "ck2"))
     again = read_snapshot(spark, table)
     assert again.count() == again.select("triple_id").distinct().count()
@@ -253,9 +247,10 @@ def test_merge_sink_recovers_from_torn_first_snapshot(
 
     import pyspark.sql.functions as F
 
-    from code_indexer_spark.streaming.watch import (
-        read_pages_stream, run_merge_sink, stream_chunks)
+    from code_indexer_spark.plans.pipeline import build_chunks
     from code_indexer_spark.sources.tables import read_snapshot
+    from code_indexer_spark.streaming.watch import (
+        read_pages_stream, run_merge_sink)
 
     table_dir = str(tmp_path / "torn_table")
     # simulate the torn write: a half-written v=1 dir, no _VERSION
@@ -263,7 +258,8 @@ def test_merge_sink_recovers_from_torn_first_snapshot(
     spark.createDataFrame([("junk",)], ["partial"]).coalesce(1) \
         .write.mode("overwrite").parquet(os.path.join(table_dir, "v=1"))
 
-    chunks = stream_chunks(read_pages_stream(spark, pages_stream_dir))
+    chunks = build_chunks(spark, kg_small,
+                          pages=read_pages_stream(spark, pages_stream_dir))
     run_merge_sink(chunks, table_dir, ["point_id"],
                    str(tmp_path / "torn_ck"))
     final = read_snapshot(spark, table_dir)

@@ -27,7 +27,7 @@ REPORT_QUERIES = [
     "incremental_scan",     # watermark predicate pushdown
     "glob_filter",          # rlike + contains pushdown
     "minhash_lsh_pairs",    # shuffle-heavy self-join
-    "dedup_resolution",     # LSH pairs -> checkpointed min-label propagation
+    "dedup_resolution",     # LSH pairs -> large-star/small-star components
     "jaccard_pairs_guarded",  # stop-shingle broadcast anti-join guard
     "embedding_dup_pairs_lsh",  # banded LSH blocking (the scale path)
     "point_get",            # S5 exact-key pruned scan
